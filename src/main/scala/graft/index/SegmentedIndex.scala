@@ -187,9 +187,10 @@ final class SegmentedIndex(val spark: SparkSession, val store: IndexStore) {
   }
 
   /** Artifact half of the seal job — PQ + graph build and table writes,
-    * with NO manifest change. Compaction uses this to keep the final
-    * registry swap a single commit (reference: MaintenanceService.java:
-    * 391-414 swaps registry only after build completes). */
+    * with NO manifest change. The PARTITIONED compaction path uses this to
+    * keep the final registry swap a single commit (reference:
+    * MaintenanceService.java:391-414 swaps registry only after build
+    * completes). */
   def buildArtifacts(toSeal: Seq[Int]): Unit = {
     if (toSeal.isEmpty) return
     val im0 = manifest.meta
@@ -206,49 +207,31 @@ final class SegmentedIndex(val spark: SparkSession, val store: IndexStore) {
       .filter(col("segId").isin(toSeal: _*))
       .as[VectorRecord]
       .groupByKey(_.segId)
-      .flatMapGroups { (segId, it) =>
-        val im = metaB.value
-        val recs = it.toArray.sortBy(_.vecId)
-        if (recs.isEmpty) Iterator.empty
-        else {
-          val vecs: Array[Array[Float]] = recs.map(_.embedding)
-          val cb = Pq.train(vecs.toIndexedSeq, im.dimension, im.pqM, im.pqK)
-          // strategy selection mirrors SegmentBuildService.java:207-209;
-          // PRUNED forces the brute-force top-L + α-prune builder the
-          // reference drives via GraphBuilderPruningTest.java:12-85
-          val graph =
-            if (im.graphBuildMode == graft.core.GraphBuildMode.Pruned)
-              GraphBuilder.buildPrunedNeighbors(vecs, im.graphDegree, im.graphBuildBreadth, im.graphAlpha)
-            else if (im.graphAlpha <= 1.0) GraphBuilder.buildL2Neighbors(vecs, im.graphDegree)
-            else GraphBuilder.buildVamanaGraph(vecs, im.graphDegree, im.graphBuildBreadth, im.graphAlpha)
-          // graph neighbors are positions into the sorted array — remap to
-          // vecIds (identical when ids are contiguous, they diverge after
-          // vacuum leaves holes)
-          val codeRows = recs.iterator.zipWithIndex.map { case (r, i) =>
-            val neighVecIds = graph(i).map(p => recs(p).vecId)
-            SealRow(segId, r.vecId, Pq.encode(cb, r.embedding), neighVecIds, 0, 0, 0, Array.emptyFloatArray, "cg")
-          }
-          val cbRow = Iterator.single(
-            SealRow(segId, -1, Array.emptyByteArray, Array.emptyIntArray, cb.m, cb.k, cb.subDim, cb.centroids, "cb"))
-          codeRows ++ cbRow
-        }
-      }
+      .flatMapGroups((segId, it) => SegmentedIndex.buildSegment(segId, it.toArray.sortBy(_.vecId), metaB.value))
       .persist()
 
-    store.writeCodes(rows.filter(_.kind == "cg").map(r => CodeRow(r.segId, r.vecId, r.code)))
-    store.writeGraph(rows.filter(_.kind == "cg").map(r => GraphRow(r.segId, r.vecId, r.neighbors)))
-    store.writeCodebooks(rows.filter(_.kind == "cb").map(r => CodebookRow(r.segId, r.m, r.k, r.subDim, r.centroids)))
+    writeArtifacts(rows)
     // (bounded collect: one segId per sealed segment of this sweep)
     val builtSegs = rows.filter(_.kind == "cb").map(_.segId).collect().toSet
     rows.unpersist()
     writeZeroCodebooks(toSeal.filterNot(builtSegs.contains), metaB.value)
   }
 
+  /** Writes the codes, graph and codebooks of built segment rows
+    * (`SegmentedIndex.buildSegment` output; dynamic-partition overwrites,
+    * so only the built segments' partitions change). Three jobs over
+    * `rows` — the caller persists it. */
+  def writeArtifacts(rows: Dataset[SealRow]): Unit = {
+    store.writeCodes(rows.filter(_.kind == "cg").map(r => CodeRow(r.segId, r.vecId, r.code)))
+    store.writeGraph(rows.filter(_.kind == "cg").map(r => GraphRow(r.segId, r.vecId, r.neighbors)))
+    store.writeCodebooks(rows.filter(_.kind == "cb").map(r => CodebookRow(r.segId, r.m, r.k, r.subDim, r.centroids)))
+  }
+
   /** Reference parity (SegmentBuildService.java:143-157,377-387): a
     * row-less segment still seals with an explicit all-zero codebook, so
     * SEALED always implies artifacts exist. Shared by the classic and
-    * PARTITIONED build paths. */
-  private def writeZeroCodebooks(emptySegs: Seq[Int], im: IndexMeta): Unit =
+    * PARTITIONED build paths and by compaction. */
+  def writeZeroCodebooks(emptySegs: Seq[Int], im: IndexMeta): Unit =
     if (emptySegs.nonEmpty) {
       val subDim = im.dimension / im.pqM
       store.writeCodebooks(emptySegs
@@ -305,7 +288,43 @@ final class SegmentedIndex(val spark: SparkSession, val store: IndexStore) {
   }
 }
 
-/** Unified output row of the seal job (codes+graph, or the codebook). */
+object SegmentedIndex {
+
+  /** The per-segment build, run inside one task: train PQ, encode codes and
+    * build the graph over `recs` (one segment's rows, sorted by vecId).
+    * Emits one "cg" row per vector, then one "cb" codebook row; nothing for
+    * an empty segment. Shared by the seal job and compaction, so a segment
+    * gets the same artifacts whichever path builds it. */
+  def buildSegment(segId: Int, recs: Array[VectorRecord], im: IndexMeta): Iterator[SealRow] =
+    if (recs.isEmpty) Iterator.empty
+    else {
+      val vecs: Array[Array[Float]] = recs.map(_.embedding)
+      val cb = Pq.train(vecs.toIndexedSeq, im.dimension, im.pqM, im.pqK)
+      // strategy selection mirrors SegmentBuildService.java:207-209;
+      // PRUNED forces the brute-force top-L + α-prune builder the
+      // reference drives via GraphBuilderPruningTest.java:12-85
+      val graph =
+        if (im.graphBuildMode == graft.core.GraphBuildMode.Pruned)
+          GraphBuilder.buildPrunedNeighbors(vecs, im.graphDegree, im.graphBuildBreadth, im.graphAlpha)
+        else if (im.graphAlpha <= 1.0) GraphBuilder.buildL2Neighbors(vecs, im.graphDegree)
+        else GraphBuilder.buildVamanaGraph(vecs, im.graphDegree, im.graphBuildBreadth, im.graphAlpha)
+      // graph neighbors are positions into the sorted array — remap to
+      // vecIds (identical when ids are contiguous, they diverge after
+      // vacuum leaves holes)
+      val codeRows = recs.iterator.zipWithIndex.map { case (r, i) =>
+        val neighVecIds = graph(i).map(p => recs(p).vecId)
+        SealRow(segId, r.vecId, Pq.encode(cb, r.embedding), neighVecIds, 0, 0, 0, Array.emptyFloatArray, "cg")
+      }
+      val cbRow = Iterator.single(
+        SealRow(segId, -1, Array.emptyByteArray, Array.emptyIntArray, cb.m, cb.k, cb.subDim, cb.centroids, "cb"))
+      codeRows ++ cbRow
+    }
+}
+
+/** Unified output row of the seal job (codes+graph, or the codebook).
+  * Compaction's "cg" rows also carry the vector (`gid`, `embedding`,
+  * `payload`), so one cached build feeds both the artifact and the vector
+  * writes; the seal job leaves them empty. */
 final case class SealRow(
     segId: Int,
     vecId: Int,
@@ -315,4 +334,7 @@ final case class SealRow(
     k: Int,
     subDim: Int,
     centroids: Array[Float],
-    kind: String)
+    kind: String,
+    gid: Long = 0L,
+    embedding: Array[Float] = Array.emptyFloatArray,
+    payload: Array[Byte] = Array.emptyByteArray)

@@ -71,8 +71,9 @@ final class VectorIndex private (
   }
 
   /** The delete → vacuum → compaction chain: every segment the policy
-    * marks for vacuum is vacuumed; every vacuumed SEALED segment the
-    * post-vacuum hook leaves under half-full anchors a compaction pass.
+    * marks for vacuum is vacuumed, or compacted away when a compaction
+    * consumes it; every vacuumed SEALED segment the post-vacuum hook
+    * leaves under half-full anchors a compaction pass (`Maintenance.sweep`).
     * Returns the vacuumed segIds. */
   def autoMaintain(nowMs: Long): Seq[Int] =
     new graft.maintenance.Maintenance(index, policy).sweep(nowMs)._1

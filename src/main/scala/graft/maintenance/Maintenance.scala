@@ -3,10 +3,11 @@ package graft.maintenance
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 import graft.core._
-import graft.index.{IndexStore, SegmentedIndex}
+import graft.index.{IndexStore, Manifest, SegmentedIndex}
 
 /**
  * Maintenance operators (SURVEY.md §2.9 M2-M5): vacuum policy + execution,
@@ -16,7 +17,11 @@ import graft.index.{IndexStore, SegmentedIndex}
  * The reference runs these as task-queue-driven background workers
  * (MaintenanceWorker.java); here they are deterministic batch jobs invoked
  * by the engine driver — same policy math, same invariants, no queue
- * infrastructure (SURVEY.md §2.10).
+ * infrastructure (SURVEY.md §2.10). Because one batch call sees the whole
+ * chain, `sweep` fuses it: the policy math runs on the manifest first, and
+ * only the physical work that survives into the final state is done — a
+ * segment a compaction consumes is never vacuumed, and a compaction builds
+ * its segment from the rows it copies instead of reading its own copy back.
  */
 final class Maintenance(
     val index: SegmentedIndex,
@@ -92,15 +97,18 @@ final class Maintenance(
 
   /** Post-vacuum hook (reference: updateMetaAfterVacuum:182-217): a segment
     * at < maxSegmentSize/2 live rows suggests compaction-candidate search. */
-  def suggestsCompaction(segId: Int): Boolean =
-    index.manifest.segment(segId).exists(_.count < index.meta.maxSegmentSize / 2)
+  def suggestsCompaction(segId: Int): Boolean = underHalf(index.manifest, segId)
+
+  private def underHalf(m: Manifest, segId: Int): Boolean =
+    m.segment(segId).exists(_.count < m.meta.maxSegmentSize / 2)
 
   // --- M5: compaction planning --------------------------------------------
 
   /** In-flight throttle: segments currently COMPACTING
     * (reference: countInFlightCompactions:532-557). */
-  def countInFlightCompactions: Int =
-    index.manifest.segments.count(_.state == SegmentState.Compacting)
+  def countInFlightCompactions: Int = inFlight(index.manifest)
+
+  private def inFlight(m: Manifest): Int = m.segments.count(_.state == SegmentState.Compacting)
 
   /**
    * Weighted compaction-candidate selection over SEALED segments
@@ -113,8 +121,11 @@ final class Maintenance(
    * fragmentation is below minFragmentation. Pure manifest math — runs on
    * the driver.
    */
-  def findCompactionCandidates(anchorSegId: Int): Seq[Int] = {
-    val sealedSegs = index.manifest.segments.filter(_.state == SegmentState.Sealed)
+  def findCompactionCandidates(anchorSegId: Int): Seq[Int] =
+    compactionCandidates(index.manifest, anchorSegId)
+
+  private def compactionCandidates(m: Manifest, anchorSegId: Int): Seq[Int] = {
+    val sealedSegs = m.segments.filter(_.state == SegmentState.Sealed)
     if (sealedSegs.size < policy.compactionMinSegments) return Nil
     // the anchor must itself be a compactable SEALED segment — silently
     // proceeding without it would compact an unrelated set of healthy
@@ -139,7 +150,7 @@ final class Maintenance(
       (s, composite)
     }.sortBy(-_._2)
 
-    val budget = math.max(1L, math.round(policy.compactionFillBudget * index.meta.maxSegmentSize))
+    val budget = math.max(1L, math.round(policy.compactionFillBudget * m.meta.maxSegmentSize))
     val pick = scala.collection.mutable.ArrayBuffer.empty[Int]
     var sum = 0L
     scoredDesc.find(_._1.segId == anchorSegId).foreach { case (s, _) =>
@@ -176,13 +187,16 @@ final class Maintenance(
     * SEALED. */
   def markCandidatesCompacting(segIds: Seq[Int]): Boolean = {
     val m0 = index.manifest
-    if (countInFlightCompactions >= policy.maxConcurrentCompactions) return false
-    if (!segIds.forall(id => m0.segment(id).exists(_.state == SegmentState.Sealed))) return false
+    if (!canMark(m0, segIds)) return false
     store.writeManifest(m0.copy(segments = m0.segments.map { s =>
       if (segIds.contains(s.segId)) s.copy(state = SegmentState.Compacting) else s
     }))
     true
   }
+
+  private def canMark(m: Manifest, segIds: Seq[Int]): Boolean =
+    inFlight(m) < policy.maxConcurrentCompactions &&
+      segIds.forall(id => m.segment(id).exists(_.state == SegmentState.Sealed))
 
   /**
    * Compact source segments into one new segment
@@ -192,6 +206,15 @@ final class Maintenance(
    * PQ+graph artifacts, then ONE manifest commit flips the new segment to
    * SEALED and drops the sources. Source ids are processed in sorted order
    * for idempotency (reference: FdbVectorIndex.requestCompaction:531-543).
+   *
+   * The sources' live rows are read once: one task renumbers them and runs
+   * the seal job's per-segment build on them (`SegmentedIndex.buildSegment`),
+   * and the cached result feeds the artifact writes and then the vector
+   * write. Vectors go LAST: a write into `vectors/` makes Spark drop every
+   * cached plan that reads that table (`CacheManager.recacheByPath`), the
+   * cached build included, so any write after it would rebuild the segment.
+   * PARTITIONED indexes keep the copy-then-build path, whose point is that
+   * no task holds a whole segment.
    */
   def compactSegments(segIds: Seq[Int], nowMs: Long): Int = {
     val sources = segIds.distinct.sorted
@@ -204,20 +227,15 @@ final class Maintenance(
       .withSegment(SegmentMeta(newSegId, SegmentState.Writing, 0L, 0L, nowMs))
       .copy(nextSegId = newSegId + 1))
 
-    // 2) copy live rows with fresh dense vecIds, gids preserved
+    // 2) + 3) live rows in (segId, vecId) order get fresh dense vecIds,
+    // gids preserved; artifacts are built while WRITING (idempotent, G4)
     val live = store.readVectors(spark)
       .filter(col("segId").isin(sources: _*))
       .filter(!col("deleted"))
       .as[VectorRecord]
-    val ordered = live.orderBy(col("segId"), col("vecId")).as[VectorRecord]
-    val copied = ordered.rdd.zipWithIndex.map { case (r, i) =>
-      r.copy(segId = newSegId, vecId = i.toInt)
-    }.toDS()
-    store.appendVectors(copied)
-    val n = copied.count()
-
-    // 3) build artifacts while WRITING (idempotent, G4)
-    index.buildArtifacts(Seq(newSegId))
+    val n =
+      if (m0.meta.graphBuildMode == GraphBuildMode.Partitioned) copyThenBuild(live, newSegId)
+      else buildFromRows(live, newSegId, m0.meta)
 
     // 4) single-commit registry swap: new SEALED + sources gone
     val m1 = index.manifest
@@ -236,6 +254,41 @@ final class Maintenance(
     newSegId
   }
 
+  /** One task gathers `live`, renumbers it and builds the segment; returns
+    * the rows copied. */
+  private def buildFromRows(live: Dataset[VectorRecord], newSegId: Int, im: IndexMeta): Long = {
+    val built = live.coalesce(1).mapPartitions { it =>
+      val recs = it.toArray.sortBy(r => (r.segId, r.vecId)).zipWithIndex.map { case (r, i) =>
+        r.copy(segId = newSegId, vecId = i)
+      }
+      // vecIds are now positions, so a "cg" row finds its vector by vecId
+      SegmentedIndex.buildSegment(newSegId, recs, im).map { r =>
+        if (r.kind != "cg") r
+        else { val v = recs(r.vecId); r.copy(gid = v.gid, embedding = v.embedding, payload = v.payload) }
+      }
+    }.persist()
+    index.writeArtifacts(built)
+    val vectors = built.filter(_.kind == "cg")
+    val n = vectors.count()
+    if (n == 0) index.writeZeroCodebooks(Seq(newSegId), im)
+    store.appendVectors(vectors.map(r =>
+      VectorRecord(r.segId, r.vecId, r.gid, r.embedding, deleted = false, r.payload)))
+    built.unpersist()
+    n
+  }
+
+  /** PARTITIONED: append the renumbered copy, then build it from the table
+    * with the sharded build; returns the rows copied. */
+  private def copyThenBuild(live: Dataset[VectorRecord], newSegId: Int): Long = {
+    val copied = live.orderBy(col("segId"), col("vecId")).as[VectorRecord]
+      .rdd.zipWithIndex.map { case (r, i) => r.copy(segId = newSegId, vecId = i.toInt) }
+      .toDS()
+    store.appendVectors(copied)
+    val n = copied.count()
+    index.buildArtifacts(Seq(newSegId))
+    n
+  }
+
   /** Full policy-driven cycle for convenience/tests: plan around an anchor,
     * throttle-check, mark COMPACTING, compact. Returns the new segId or -1. */
   def maybeCompact(anchorSegId: Int, nowMs: Long): Int = {
@@ -245,19 +298,42 @@ final class Maintenance(
     compactSegments(cands, nowMs)
   }
 
-  /** One full maintenance sweep — the reference's delete → vacuum →
-    * compaction chain (FdbVectorIndex.java:552-608 scheduleVacuum…;
-    * MaintenanceService.java:200-216 post-vacuum hook): vacuum every
-    * segment the policy trips, then compact anchored on the vacuumed
-    * segments the hook left under half-full. Shared by the facade's
-    * auto-chain and the global runner. Returns (vacuumed segIds,
-    * compactions run). */
+  /**
+   * One full maintenance sweep — the reference's delete → vacuum →
+   * compaction chain (FdbVectorIndex.java:552-608 scheduleVacuum…;
+   * MaintenanceService.java:200-216 post-vacuum hook), fused into one
+   * plan. The chain would vacuum every segment the policy trips, then
+   * compact anchored on the vacuumed segments the hook leaves under
+   * half-full. The sweep picks the same compaction sets by planning on the
+   * manifest as if every due segment were already vacuumed (tombstones
+   * gone, live counts unchanged), then vacuums on disk only the due
+   * segments no compaction consumes — a compaction drops its sources'
+   * tombstones while copying, so vacuuming a source first is wasted work —
+   * and runs the compactions. The end state equals the chain's
+   * (MaintenanceSpec pins it). Shared by the facade's auto-chain and the
+   * global runner. Returns (vacuumed segIds, compactions run); a consumed
+   * segment counts as vacuumed if it held tombstones.
+   */
   def sweep(nowMs: Long): (Seq[Int], Int) = {
-    val vacuumed = segmentsNeedingVacuum(nowMs)
-      .filter(segId => vacuumSegment(segId, nowMs) > 0)
-    val compacted = vacuumed.filter(suggestsCompaction).count { anchor =>
-      maybeCompact(anchor, nowMs) >= 0
+    val m0 = index.manifest
+    val due = m0.segments.filter(shouldVacuum(_, nowMs)).map(_.segId)
+    val tombstoned = due.filter(id => m0.segment(id).exists(_.deletedCount > 0))
+    // sorted as vacuumSegment commits it: the planner breaks score ties by
+    // manifest order
+    val vacuumedPlan = m0.copy(segments = m0.segments.map { s =>
+      if (due.contains(s.segId)) s.copy(deletedCount = 0L) else s
+    }.sortBy(_.segId))
+    val (_, compactions) = tombstoned.filter(underHalf(vacuumedPlan, _))
+      .foldLeft((vacuumedPlan, Vector.empty[Seq[Int]])) { case ((plan, picked), anchor) =>
+        val cands = compactionCandidates(plan, anchor)
+        if (cands.isEmpty || !canMark(plan, cands)) (plan, picked)
+        else (Maintenance.afterCompaction(plan, cands, nowMs), picked :+ cands)
+      }
+    val consumed = compactions.flatten.toSet
+    val vacuumed = due.filter { id =>
+      if (consumed(id)) tombstoned.contains(id) else vacuumSegment(id, nowMs) > 0
     }
+    val compacted = compactions.count(c => markCandidatesCompacting(c) && compactSegments(c, nowMs) >= 0)
     (vacuumed, compacted)
   }
 
@@ -269,6 +345,15 @@ final class Maintenance(
 }
 
 object Maintenance {
+
+  /** The manifest a compaction of `sources` commits: the sources gone and
+    * one SEALED segment holding their live rows, under the next segId. */
+  private def afterCompaction(m: Manifest, sources: Seq[Int], nowMs: Long): Manifest =
+    m.copy(
+      segments = m.segments.filterNot(s => sources.contains(s.segId)) :+
+        SegmentMeta(m.nextSegId, SegmentState.Sealed,
+          m.segments.filter(s => sources.contains(s.segId)).map(_.count).sum, 0L, nowMs),
+      nextSegId = m.nextSegId + 1)
 
   /** The M2 policy math, index-free so the driver gate can exercise the
     * SAME function the sweep uses (reference:

@@ -632,11 +632,12 @@ object VectorQueries {
     }),
 
     // M3/M4 through the sealed path: one maintenance sweep runs BOTH
-    // phases — vacuum physically removes seg 0's tombstones (ratio 0.67 >
-    // 0.25), leaving it under half-full (33 < 50, the compaction anchor);
-    // seg 1 sits at 20% deletion (below the vacuum ratio), so the picked
-    // set {0, 1} carries avgFrag 0.15 ≥ 0.1 and compacts gid-stably into
-    // a fresh segment, dropping seg 1's tombstones during the copy.
+    // phases — seg 0 trips the vacuum (ratio 0.67 > 0.25) and, vacuumed,
+    // sits under half-full (33 < 50, the compaction anchor); seg 1 sits at
+    // 20% deletion (below the vacuum ratio), so the picked set {0, 1}
+    // carries avgFrag 0.15 ≥ 0.1 and compacts gid-stably into a fresh
+    // segment. The compaction consumes seg 0, so the sweep skips its
+    // separate vacuum: the copy drops both segments' tombstones.
     // Query results must STILL equal exact KNN over the survivors —
     // physical rewrite changes storage, never answers. (MaintenanceSpec
     // asserts this exact sweep reports 1 vacuum + 1 compaction.)

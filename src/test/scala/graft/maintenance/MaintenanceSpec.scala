@@ -173,6 +173,130 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(m.segment(0).isEmpty && m.segment(1).isEmpty) // sources dropped
   }
 
+  /** Every physical and registry fact the sweep can change: the manifest
+    * (segIds, states, counts) and the rows of all four tables. */
+  private def snapshot(idx: SegmentedIndex) = {
+    val st = idx.store
+    (idx.manifest.segments.map(s => (s.segId, s.state, s.count, s.deletedCount)),
+      st.readVectors(spark).collect().map(r => (r.gid, r.segId, r.vecId, r.deleted)).sorted.toSeq,
+      st.readCodes(spark).collect().map(r => (r.segId, r.vecId, r.code.toSeq)).sortBy(r => (r._1, r._2)).toSeq,
+      st.readGraph(spark).collect().map(r => (r.segId, r.vecId, r.neighbors.toSeq)).sortBy(r => (r._1, r._2)).toSeq,
+      st.readCodebooks(spark).collect().map(r => (r.segId, r.m, r.k, r.subDim, r.centroids.toSeq)).sortBy(_._1).toSeq)
+  }
+
+  /** The chain `sweep` fuses, through its public steps: vacuum every due
+    * segment, then compact on every vacuumed anchor under half full. Each
+    * surviving compacted segment is then rebuilt from the vectors table,
+    * as the copy-then-build compaction did, so the comparison also pins the
+    * in-task build to the table build. */
+  private def chainSweep(maint: Maintenance, nowMs: Long): (Seq[Int], Int) = {
+    val vacuumed = maint.segmentsNeedingVacuum(nowMs).filter(maint.vacuumSegment(_, nowMs) > 0)
+    val built = vacuumed.filter(maint.suggestsCompaction).map(maint.maybeCompact(_, nowMs)).filter(_ >= 0)
+    maint.index.buildArtifacts(built.filter(maint.index.manifest.segment(_).isDefined))
+    (vacuumed, built.size)
+  }
+
+  /** Twin indexes over the same rows and deletes; one runs `sweep`, the
+    * other the step-by-step chain. Returns the sweep's report and index. */
+  private def assertSweepMatchesChain(name: String, rows: Int, deletes: Seq[Long]): ((Seq[Int], Int), SegmentedIndex) = {
+    val twins = Seq(s"${name}f", s"${name}c").map { n =>
+      val (idx, maint) = newIndex(n, cap = 50)
+      idx.addAll(gaussianDf(rows, 11), "embedding", "id")
+      idx.sealPending()
+      idx.delete(deletes)
+      (idx, maint)
+    }
+    val nowMs = 999999L
+    val fused = twins(0)._2.sweep(nowMs)
+    val chain = chainSweep(twins(1)._2, nowMs)
+    assert(fused == chain)
+    val (a, b) = (snapshot(twins(0)._1), snapshot(twins(1)._1))
+    assert(a._1 == b._1, "manifest")
+    assert(a._2 == b._2, "vectors")
+    assert(a._3 == b._3, "codes")
+    assert(a._4 == b._4, "graph")
+    assert(a._5 == b._5, "codebooks")
+    (fused, twins(0)._1)
+  }
+
+  private val twoThirdsOfSeg0 = (0L until 50L).filter(_ % 3 != 0)
+
+  test("sweep equals the vacuum-then-compact chain: one anchor") {
+    val (report, _) = assertSweepMatchesChain("eq1", 150, twoThirdsOfSeg0 ++ (50L until 100L).filter(_ % 5 == 0))
+    assert(report == (Seq(0), 1))
+  }
+
+  test("sweep equals the chain: the first compaction consumes the second anchor") {
+    // segs 0 and 1 both vacuum under half full (17 live of 50); seg 2 at
+    // 20% deletion supplies the fragmentation; the set anchored on 0 picks
+    // {0, 1, 2}, so anchor 1 is gone when its turn comes
+    val (report, _) = assertSweepMatchesChain("eq2", 200,
+      twoThirdsOfSeg0 ++ twoThirdsOfSeg0.map(_ + 50L) ++ (100L until 150L).filter(_ % 5 == 0))
+    assert(report == (Seq(0, 1), 1))
+  }
+
+  test("sweep equals the chain: a refused compaction still vacuums on disk") {
+    // only seg 0 is fragmented: the set's average fragmentation after the
+    // vacuum is 0 < compactionMinFragmentation, so the vacuum must land
+    val (report, idx) = assertSweepMatchesChain("eq3", 150, twoThirdsOfSeg0)
+    assert(report == (Seq(0), 0))
+    val seg0 = idx.store.readVectors(spark).filter(col("segId") === 0)
+    assert(seg0.count() == 17 && seg0.filter(col("deleted")).count() == 0)
+  }
+
+  test("sweep converges: a second sweep at the same clock changes nothing") {
+    val (idx, maint) = newIndex("conv", cap = 50)
+    idx.addAll(gaussianDf(220, 11), "embedding", "id")
+    idx.sealPending()
+    // one compaction, and one stand-alone vacuum of the ACTIVE tail (10 of
+    // its 20 rows deleted), which no compaction may consume
+    idx.delete(twoThirdsOfSeg0 ++ (50L until 100L).filter(_ % 5 == 0) ++ (200L until 210L))
+    def segDirs: Set[String] = {
+      val st = idx.store
+      Seq(st.vectorsDir, st.codesDir, st.graphDir, st.codebooksDir).flatMap { d =>
+        Option(new java.io.File(d).list()).toSeq.flatten.filter(_.startsWith("segId=")).map(f => s"$d/$f")
+      }.toSet
+    }
+    assert(maint.sweep(nowMs = 999999L) == (Seq(0, 4), 1))
+    val (m1, dirs1) = (idx.manifest, segDirs)
+    assert(maint.sweep(nowMs = 999999L) == (Nil, 0))
+    assert(idx.manifest == m1)
+    assert(segDirs == dirs1)
+  }
+
+  test("a one-anchor sweep runs at most half the Spark jobs of the step-by-step chain") {
+    // The step-by-step chain (vacuum, then copy, count, read back and
+    // build) ran 21 jobs on this scenario; the fused sweep skips the vacuum
+    // of the consumed anchor and builds from the rows it copies: 5 jobs
+    // (codes, graph and codebooks writes, the row count, the vectors write).
+    val (idx, maint) = newIndex("jobs", cap = 50)
+    idx.addAll(gaussianDf(150, 11), "embedding", "id")
+    idx.sealPending()
+    idx.delete(twoThirdsOfSeg0 ++ (50L until 100L).filter(_ % 5 == 0))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.put(e.jobId, Option(e.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("maint-sweep", "sweep")
+      assert(maint.sweep(nowMs = 999999L) == (Seq(0), 1))
+      // a marker job: the listener bus delivers its start after every
+      // earlier event
+      sc.setJobGroup("maint-drain", "drain")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.containsValue("maint-drain") && System.nanoTime() < deadline) Thread.sleep(5)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val sweepJobs = jobs.values.toArray.count(_ == "maint-sweep")
+    assert(sweepJobs <= 21 / 2, s"sweep ran $sweepJobs jobs")
+  }
+
   test("maybeCompact end-to-end with policy gates") {
     val (idx, maint) = newIndex("mc2", cap = 30)
     idx.addAll(gaussianDf(60, 7), "embedding", "id")
