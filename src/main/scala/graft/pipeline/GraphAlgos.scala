@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SparkShims
 
@@ -27,7 +27,28 @@ import org.apache.spark.sql.graft.SparkShims
  *    per-node and co-partition with the join key.
  *  - iteration state is localCheckpoint'ed per round, so plan depth and
  *    lineage stay O(1) (same recipe as [[Dedup.resolveClusters]]'s
- *    pointer-jumping loop).
+ *    pointer-jumping loop). NOT persist/unpersist: a persisted round
+ *    keeps its whole child plan, so every round's plan chains all the
+ *    previous ones and unpersisting round n-1 cascades into round n's
+ *    cache (see Bpe.learnMerges for the pathological case).
+ *  - every bounded-round kernel runs inside one [[GraphScope]] and one
+ *    [[GraphScope.iterate]] loop. The scope persists the long-cast edge
+ *    set once, counts it, and re-scans it through a size-adaptive view
+ *    (guide §2.2: [[sizedView]] coalesces to ~[[RowsPerPartitionTarget]]
+ *    rows of per-round work per task — core-count-sized partitions of a
+ *    tiny cache measured 3x the round cost; a multi-seed kernel weights
+ *    the view by its seed fan-out). It persists the node set before
+ *    counting it (read again for the state init — ~0.6 s per extra scan
+ *    measured by JobProbe at sf0.1) unless the cache build costs the
+ *    kernel a job it never wins back, and takes any count a kernel
+ *    already holds, so no count runs twice. Its regime test broadcasts the
+ *    node-sized per-round tables under [[BroadcastRankMaxNodes]] (the
+ *    edge set then never shuffles; the planner cannot size a checkpoint
+ *    leaf, so it never converts on its own) and keeps every join
+ *    partitioned past it. `iterate` checkpoints each round at the
+ *    state's size and releases the round it replaces; kernels that fold
+ *    over all their rounds keep them until the scope closes, and
+ *    closing releases everything but the frame the kernel returns.
  *  - triangle counting enumerates each triangle once via id-canonical
  *    orientation (a<b<c). On skewed degree distributions the standard
  *    upgrade is degree-ordered orientation (orient every edge toward the
@@ -77,80 +98,55 @@ object GraphAlgos {
       iterations: Int,
       tot: Long = 1000000000000L,
       alphaNum: Long = 85L,
-      alphaDen: Long = 100L): DataFrame = {
-    require(iterations >= 1, "at least one iteration")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    e.persist()
-    // size-adaptive layout (guide §2.2): every round's map stage scans
-    // the edge cache, so its partition count sets the round's task count
-    // AND the partial-agg fan-out (groups x map tasks rows per exchange);
-    // core-count-sized partitions of a tiny cache measured 3x the round
-    // cost of data-sized ones. coalesce never raises a count, so big
-    // graphs keep their layout; the materializing count prices it.
-    val m = e.count()
-    val eR = sizedView(e, m)
-    val nodes = eR.select(col("src").as("node"))
-      .union(eR.select(col("dst").as("node"))).distinct()
-    // disjoint column names per join side — these all derive from the
-    // same scan, and same-name df("col") conditions trip Spark's
-    // ambiguous-self-join detection
-    val deg = eR.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .select(col("src").as("deg_node"), col("deg"))
-    // static relations, read once per job not once per iteration
-    nodes.persist(); deg.persist()
-    val n = nodes.count() // one tiny job; N is also the r0 denominator
-    require(n > 0, "pageRankFixedPoint on an empty edge set (no nodes)")
-    val r0 = tot / n
-    val base = ((alphaDen - alphaNum) * r0) / alphaDen
+      alphaDen: Long = 100L): DataFrame =
+    pageRankOn(edges, iterations, alphaNum, alphaDen, "pageRankFixedPoint")(
+      tot / _, identity)
 
-    // localCheckpoint each round (NOT persist/unpersist): the iteration
-    // state must become a LogicalRDD leaf, or every round's plan chains
-    // all previous rounds and unpersisting round n-1 cascades into round
-    // n's cache — the full chain then recomputes from the source scan
-    // each iteration (see Bpe.learnMerges for the pathological case).
-    // n is already on the driver — use it to size the per-round join
-    // strategy: under the bound the rank/degree/contribution tables
-    // (O(|V|) rows of 2 longs) broadcast and the EDGE SET NEVER
-    // SHUFFLES in any round (only the map-side-combined dst aggregation
-    // moves data); past it every join stays partitioned for
-    // billion-node graphs.
-    val bcastRanks = n <= BroadcastRankMaxNodes
-    // Partitioned regime (the billion-node path): shape the edge set
-    // ONCE — hash-partitioned AND sorted by src, materialized as a
-    // checkpoint whose LogicalRDD carries both properties — so every
-    // round's rank⋈edge sort-merge join reuses the layout with NO
-    // exchange and NO sort on the edge leg (the in-memory equivalent of
-    // Bucketing.writeBucketed; GraphAlgosSpec pins the plan). The rank
-    // side is O(|V|) and re-shuffles to co-partition each round — that
-    // per-round cost is node-sized, never edge-sized.
-    val eJ =
-      if (bcastRanks) eR
-      else {
-        val shaped = shapeEdges(e)
-        nodes.count(); deg.count() // materialize before releasing their source
-        e.unpersist()
-        shaped
-      }
-    def sizedState(df: DataFrame): DataFrame = sizedView(df, n)
-    // deg rides IN the iteration state (node, deg, rank_fp): the former
-    // per-round rank⋈deg join — and in the broadcast regime its per-round
-    // broadcast BUILD job — becomes a one-time left join at init. The
-    // contribution rows are identical (inner-join rows = deg-not-null
-    // rows), so every round's integer math is unchanged.
-    var ranks = sizedState(nodes
-      .join(deg, col("node") === col("deg_node"), "left")
-      .select(col("node"), col("deg"), lit(r0).as("rank_fp")))
-      .localCheckpoint()
-    for (_ <- 1 to iterations) {
-      val next = sizedState(pageRankStep(eJ, ranks, base, alphaNum, alphaDen,
-          broadcastRanks = bcastRanks))
-        .localCheckpoint()
-      SparkShims.unpersistCheckpoint(ranks) // release the superseded round
-      ranks = next
-    }
-    if (bcastRanks) e.unpersist() else SparkShims.unpersistCheckpoint(eJ)
-    nodes.unpersist(); deg.unpersist()
-    ranks.select(col("node"), col("rank_fp"))
+  /** The body classic and personalized PageRank share: `r0Of(n)` is the
+    * initial mass of a node that receives any, and `teleport` restricts
+    * both it and the per-round teleport term to those nodes. */
+  private def pageRankOn(
+      edges: DataFrame, iterations: Int, alphaNum: Long, alphaDen: Long,
+      what: String)(r0Of: Long => Long, teleport: Column => Column): DataFrame = {
+    require(iterations >= 1, "at least one iteration")
+    inScope(edges) { g =>
+      // disjoint column names per join side — these all derive from the
+      // same scan, and same-name df("col") conditions trip Spark's
+      // ambiguous-self-join detection
+      val deg = g.persist(g.eR.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+        .select(col("src").as("deg_node"), col("deg")))
+      require(g.n > 0, s"$what on an empty edge set")
+      val r0 = r0Of(g.n)
+      val base = ((alphaDen - alphaNum) * r0) / alphaDen
+      // Partitioned regime (the billion-node path): shape the edge set
+      // ONCE — hash-partitioned AND sorted by src, materialized as a
+      // checkpoint whose LogicalRDD carries both properties — so every
+      // round's rank⋈edge sort-merge join reuses the layout with NO
+      // exchange and NO sort on the edge leg (the in-memory equivalent of
+      // Bucketing.writeBucketed; GraphAlgosSpec pins the plan). The rank
+      // side is O(|V|) and re-shuffles to co-partition each round — that
+      // per-round cost is node-sized, never edge-sized.
+      val eJ =
+        if (g.bcast) g.eR
+        else {
+          val shaped = g.own(shapeEdges(g.e))
+          deg.count() // materialize before releasing its source
+          g.release(g.e)
+          shaped
+        }
+      // deg rides IN the iteration state (node, deg, rank_fp): the former
+      // per-round rank⋈deg join — and in the broadcast regime its per-round
+      // broadcast BUILD job — becomes a one-time left join at init. The
+      // contribution rows are identical (inner-join rows = deg-not-null
+      // rows), so every round's integer math is unchanged.
+      val init = g.checkpoint(g.nodes
+        .join(deg, col("node") === col("deg_node"), "left")
+        .select(col("node"), col("deg"), teleport(lit(r0)).as("rank_fp")))
+      g.iterate(init, iterations) { (ranks, _) =>
+        pageRankStepBase(eJ, ranks, teleport(lit(base)), alphaNum, alphaDen,
+          broadcastRanks = g.bcast)
+      }.last
+    }.select(col("node"), col("rank_fp"))
   }
 
   /** Node-count bound for broadcasting the per-round rank-side tables
@@ -200,6 +196,99 @@ object GraphAlgos {
   private[pipeline] def sizedView(df: DataFrame, rows: Long, weight: Long = 1L): DataFrame =
     df.coalesce(sizedParts(rows, weight))
 
+  private def maybeBcast(df: DataFrame, on: Boolean): DataFrame =
+    if (on) broadcast(df) else df
+
+  /** The state an iterative kernel holds for its lifetime (see the scale
+    * notes): the persisted long-cast edge set `e` (with `w` when
+    * `weighted`), its count `m` and sized view `eR` (weighted by the
+    * `seeds` fan-out), the node set and its count `n`, and
+    * every frame the kernel persists or checkpoints through it.
+    * Counts a kernel already holds come in through [[know]]. */
+  private final class GraphScope(
+      edges: DataFrame, weighted: Boolean, seeds: Int, persistNodes: Boolean) {
+    private var cached = List.empty[DataFrame]
+    private var checkpoints = List.empty[DataFrame]
+    private var edgeCount, nodeCount, stateRows = -1L
+
+    val e: DataFrame = persist(edges.select(
+      (Seq("src", "dst") ++ (if (weighted) Seq("w") else Nil))
+        .map(c => col(c).cast("long")): _*))
+    def m: Long = { if (edgeCount < 0) edgeCount = e.count(); edgeCount }
+    lazy val eR: DataFrame = sizedView(e, m, seeds.toLong)
+    lazy val nodes: DataFrame = eR.select(col("src").as("node"))
+      .union(eR.select(col("dst").as("node"))).distinct()
+    /** Persists the node set before counting it unless `persistNodes` is
+      * off: the cache build is a job of its own, which the k-core and
+      * weighted-SSSP kernels (one read after the count, or none) do not
+      * win back. */
+    def n: Long = {
+      if (nodeCount < 0) nodeCount = (if (persistNodes) persist(nodes) else nodes).count()
+      nodeCount
+    }
+    def know(edges: Long, nodes: Long): Unit = { edgeCount = edges; nodeCount = nodes }
+
+    /** Rows of per-round state: nodes x seeds unless the kernel sets it. */
+    def rows: Long = if (stateRows < 0) n * seeds else stateRows
+    def rows_=(r: Long): Unit = stateRows = r
+    def bcast: Boolean = rows <= BroadcastRankMaxNodes
+    def maybeBcast(df: DataFrame): DataFrame = GraphAlgos.maybeBcast(df, bcast)
+
+    def persist(df: DataFrame): DataFrame = { df.persist(); cached ::= df; df }
+    def own(checkpointed: DataFrame): DataFrame = { checkpoints ::= checkpointed; checkpointed }
+    def checkpoint(df: DataFrame, rows: Long = this.rows): DataFrame =
+      own(sizedView(df, rows).localCheckpoint())
+    def release(df: DataFrame): Unit = {
+      if (cached.exists(_ eq df)) { cached = cached.filterNot(_ eq df); df.unpersist() }
+      if (checkpoints.exists(_ eq df)) {
+        checkpoints = checkpoints.filterNot(_ eq df)
+        SparkShims.unpersistCheckpoint(df)
+      }
+    }
+
+    /** Up to `rounds` rounds of `step(state, round)` from `init`, each
+      * checkpointed at [[rows]]. Returns the states by round, `init` at
+      * index 0 — or, unless `keepAll`, only the last one, each round
+      * having released the one it replaced. `until` ends the loop early
+      * at a fixpoint; it is not asked after the last round. */
+    def iterate(init: DataFrame, rounds: Int, keepAll: Boolean = false,
+        until: DataFrame => Boolean = _ => false)(
+        step: (DataFrame, Int) => DataFrame): IndexedSeq[DataFrame] = {
+      var states = Vector(init)
+      var r = 0
+      var done = false
+      while (r < rounds && !done) {
+        r += 1
+        val next = checkpoint(step(states.last, r))
+        if (!keepAll) release(states.last)
+        states = if (keepAll) states :+ next else Vector(next)
+        done = r < rounds && until(next)
+      }
+      states
+    }
+
+    def close(keep: DataFrame): Unit = {
+      checkpoints.filterNot(_ eq keep).foreach(SparkShims.unpersistCheckpoint)
+      cached.filterNot(_ eq keep).foreach(_.unpersist())
+    }
+  }
+
+  /** Runs `body` in a fresh [[GraphScope]] and closes it, keeping only the
+    * frame `body` returns. */
+  private def inScope(edges: DataFrame, weighted: Boolean = false, seeds: Int = 1,
+      persistNodes: Boolean = true)(body: GraphScope => DataFrame): DataFrame = {
+    val g = new GraphScope(edges, weighted, seeds, persistNodes)
+    var out: DataFrame = null
+    try { out = body(g); out } finally g.close(out)
+  }
+
+  /** The seeds that are nodes of `nodes`, as a `seed` column. */
+  private def presentSeeds(sources: Seq[Long], nodes: DataFrame): DataFrame = {
+    val spark = nodes.sparkSession
+    import spark.implicits._
+    sources.toDF("seed").join(nodes, col("seed") === col("node"), "left_semi")
+  }
+
   /**
    * EDGE-WEIGHTED fixed-point PageRank: mass flows proportionally to
    * integer edge weights (co-occurrence counts, interaction strength) —
@@ -210,11 +299,8 @@ object GraphAlgos {
    * Overflow bound: alphaNum·r·w ≤ 85·tot·w_max — safe for
    * w_max ≤ ~10⁵ at the default tot (the require enforces it).
    *
-   * Same scale machinery as [[pageRankFixedPoint]]: static persisted
-   * edges, node-sized localCheckpoint'ed state, size-aware broadcast of
-   * the rank-side tables. (The shaped-edge exchange-free regime applies
-   * above the node bound exactly as in the unweighted variant; weighted
-   * graphs small enough to broadcast skip it.)
+   * The shaped-edge exchange-free regime of the unweighted variant is
+   * not used here: past the node bound every join stays partitioned.
    */
   def pageRankWeighted(
       edges: DataFrame,
@@ -223,63 +309,45 @@ object GraphAlgos {
       alphaNum: Long = 85L,
       alphaDen: Long = 100L): DataFrame = {
     require(iterations >= 1, "at least one iteration")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
-      col("w").cast("long"))
-    e.persist()
-    // size-adaptive layout — see pageRankFixedPoint; the min/max guard
-    // below is the materializing action, count reads the cache
-    val eR = sizedView(e, e.count())
-    val wRow = eR.agg(min(col("w")), max(col("w"))).head()
-    val (wMin, wMax) = (wRow.getLong(0), wRow.getLong(1))
-    // min too, not just max: a zero/negative weight passes a max-only
-    // guard but makes some node's out-weight sum ≤ 0 — the per-edge
-    // division then yields NULL (silently dropped from the sum) or
-    // sign-flipped mass, corrupting ranks with no error anywhere
-    require(wMin >= 1, s"edge weights must be positive (found $wMin)")
-    // guard the guard: alphaNum*tot can itself overflow Long for
-    // caller-supplied tot >= ~1.1e17, silently weakening the bound check
-    require(alphaNum <= Long.MaxValue / tot,
-      s"alphaNum=$alphaNum * tot=$tot overflows Long — shrink tot")
-    require(wMax <= Long.MaxValue / (alphaNum * tot),
-      s"w_max=$wMax overflows alphaNum*tot*w — rescale weights or shrink tot")
-    val nodes = eR.select(col("src").as("node"))
-      .union(eR.select(col("dst").as("node"))).distinct()
-    val outW = eR.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-      .select(col("src").as("w_node"), col("ow"))
-    nodes.persist(); outW.persist()
-    val n = nodes.count()
-    require(n > 0, "pageRankWeighted on an empty edge set")
-    val r0 = tot / n
-    val base = ((alphaDen - alphaNum) * r0) / alphaDen
-    val bcast = n <= BroadcastRankMaxNodes
-    def maybeBcast(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    def sizedState(df: DataFrame): DataFrame = sizedView(df, n)
-
-    // out-weight rides IN the state (see pageRankFixedPoint's deg): the
-    // per-round rank⋈outW join and its broadcast build collapse into a
-    // one-time left join at init; per-edge integer math unchanged
-    var ranks = sizedState(nodes
-      .join(maybeBcast(outW), col("node") === col("w_node"), "left")
-      .select(col("node"), col("ow"), lit(r0).as("rank_fp")))
-      .localCheckpoint()
-    for (_ <- 1 to iterations) {
-      val rw = ranks.where(col("ow").isNotNull)
-        .select(col("node").as("r_src"), col("rank_fp"), col("ow"))
-      val inSum = eR.join(maybeBcast(rw), col("src") === col("r_src"))
-        .select(col("dst"),
-          expr(s"($alphaNum * rank_fp * w) div ($alphaDen * ow)").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("in_c"))
-        .select(col("dst").as("in_node"), col("in_c"))
-      val next = sizedState(
-          ranks.join(maybeBcast(inSum), col("node") === col("in_node"), "left")
-        .select(col("node"), col("ow"),
-          (lit(base) + coalesce(col("in_c"), lit(0L))).as("rank_fp")))
-        .localCheckpoint()
-      SparkShims.unpersistCheckpoint(ranks)
-      ranks = next
-    }
-    nodes.unpersist(); outW.unpersist(); e.unpersist()
-    ranks.select(col("node"), col("rank_fp"))
+    inScope(edges, weighted = true) { g =>
+      // the min/max guard is the materializing action, count reads the cache
+      val wRow = g.eR.agg(min(col("w")), max(col("w"))).head()
+      val (wMin, wMax) = (wRow.getLong(0), wRow.getLong(1))
+      // min too, not just max: a zero/negative weight passes a max-only
+      // guard but makes some node's out-weight sum ≤ 0 — the per-edge
+      // division then yields NULL (silently dropped from the sum) or
+      // sign-flipped mass, corrupting ranks with no error anywhere
+      require(wMin >= 1, s"edge weights must be positive (found $wMin)")
+      // guard the guard: alphaNum*tot can itself overflow Long for
+      // caller-supplied tot >= ~1.1e17, silently weakening the bound check
+      require(alphaNum <= Long.MaxValue / tot,
+        s"alphaNum=$alphaNum * tot=$tot overflows Long — shrink tot")
+      require(wMax <= Long.MaxValue / (alphaNum * tot),
+        s"w_max=$wMax overflows alphaNum*tot*w — rescale weights or shrink tot")
+      val outW = g.persist(g.eR.groupBy(col("src")).agg(sum(col("w")).as("ow"))
+        .select(col("src").as("w_node"), col("ow")))
+      require(g.n > 0, "pageRankWeighted on an empty edge set")
+      val r0 = tot / g.n
+      val base = ((alphaDen - alphaNum) * r0) / alphaDen
+      // out-weight rides IN the state (see pageRankOn's deg): the
+      // per-round rank⋈outW join and its broadcast build collapse into a
+      // one-time left join at init; per-edge integer math unchanged
+      val init = g.checkpoint(g.nodes
+        .join(g.maybeBcast(outW), col("node") === col("w_node"), "left")
+        .select(col("node"), col("ow"), lit(r0).as("rank_fp")))
+      g.iterate(init, iterations) { (ranks, _) =>
+        val rw = ranks.where(col("ow").isNotNull)
+          .select(col("node").as("r_src"), col("rank_fp"), col("ow"))
+        val inSum = g.eR.join(g.maybeBcast(rw), col("src") === col("r_src"))
+          .select(col("dst"),
+            expr(s"($alphaNum * rank_fp * w) div ($alphaDen * ow)").as("c"))
+          .groupBy(col("dst")).agg(sum(col("c")).as("in_c"))
+          .select(col("dst").as("in_node"), col("in_c"))
+        ranks.join(g.maybeBcast(inSum), col("node") === col("in_node"), "left")
+          .select(col("node"), col("ow"),
+            (lit(base) + coalesce(col("in_c"), lit(0L))).as("rank_fp"))
+      }.last
+    }.select(col("node"), col("rank_fp"))
   }
 
   /** Edge layout for the partitioned regime: hash-partitioned and
@@ -319,15 +387,13 @@ object GraphAlgos {
       e: DataFrame, state: DataFrame,
       baseCol: org.apache.spark.sql.Column, alphaNum: Long, alphaDen: Long,
       broadcastRanks: Boolean = false): DataFrame = {
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (broadcastRanks) broadcast(df) else df
     val contrib = state.where(col("deg").isNotNull)
       .select(col("node").as("c_src"),
         expr(s"($alphaNum * rank_fp) div ($alphaDen * deg)").as("c"))
-    val inSum = e.join(maybeBcast(contrib), col("src") === col("c_src"))
+    val inSum = e.join(maybeBcast(contrib, broadcastRanks), col("src") === col("c_src"))
       .groupBy(col("dst")).agg(sum(col("c")).as("in_c"))
       .select(col("dst").as("in_node"), col("in_c"))
-    state.join(maybeBcast(inSum), col("node") === col("in_node"), "left")
+    state.join(maybeBcast(inSum, broadcastRanks), col("node") === col("in_node"), "left")
       .select(col("node"), col("deg"),
         (baseCol + coalesce(col("in_c"), lit(0L))).as("rank_fp"))
   }
@@ -335,9 +401,7 @@ object GraphAlgos {
   /**
    * Personalized PageRank (integer fixed-point): teleport mass restricted
    * to `sources` — the "similar to these" relevance primitive (seed
-   * expansion, related-item graphs). Same scale machinery as
-   * [[pageRankFixedPoint]]: localCheckpoint'ed rounds, size-aware
-   * rank-side broadcast with the exchange-free shaped-edge fallback;
+   * expansion, related-item graphs). It runs classic PageRank's body;
    * the per-node teleport is a literal IN over the (small) seed set, so
    * the only new cost vs classic PageRank is a codegen'd CASE.
    */
@@ -348,49 +412,10 @@ object GraphAlgos {
       tot: Long = 1000000000000L,
       alphaNum: Long = 85L,
       alphaDen: Long = 100L): DataFrame = {
-    require(iterations >= 1, "at least one iteration")
     require(sources.nonEmpty, "personalized PageRank needs a non-empty seed set")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    e.persist()
-    // size-adaptive layout — see pageRankFixedPoint
-    val m = e.count()
-    val eR = sizedView(e, m)
-    val nodes = eR.select(col("src").as("node"))
-      .union(eR.select(col("dst").as("node"))).distinct()
-    val deg = eR.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .select(col("src").as("deg_node"), col("deg"))
-    nodes.persist(); deg.persist()
-    val n = nodes.count()
-    require(n > 0, "personalizedPageRank on an empty edge set (no nodes)")
-    val r0v = tot / sources.size
-    val tele = ((alphaDen - alphaNum) * r0v) / alphaDen
-    def seeded(thenC: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      when(col("node").isInCollection(sources), thenC).otherwise(lit(0L))
-    val bcastRanks = n <= BroadcastRankMaxNodes
-    val eJ =
-      if (bcastRanks) eR
-      else {
-        val shaped = shapeEdges(e)
-        nodes.count(); deg.count()
-        e.unpersist()
-        shaped
-      }
-    def sizedState(df: DataFrame): DataFrame = sizedView(df, n)
-    // deg in the state — see pageRankFixedPoint
-    var ranks = sizedState(nodes
-      .join(deg, col("node") === col("deg_node"), "left")
-      .select(col("node"), col("deg"), seeded(lit(r0v)).as("rank_fp")))
-      .localCheckpoint()
-    for (_ <- 1 to iterations) {
-      val next = sizedState(pageRankStepBase(eJ, ranks, seeded(lit(tele)),
-          alphaNum, alphaDen, broadcastRanks = bcastRanks))
-        .localCheckpoint()
-      SparkShims.unpersistCheckpoint(ranks)
-      ranks = next
-    }
-    if (bcastRanks) e.unpersist() else SparkShims.unpersistCheckpoint(eJ)
-    nodes.unpersist(); deg.unpersist()
-    ranks.select(col("node"), col("rank_fp"))
+    pageRankOn(edges, iterations, alphaNum, alphaDen, "personalizedPageRank")(
+      _ => tot / sources.size,
+      c => when(col("node").isInCollection(sources), c).otherwise(lit(0L)))
   }
 
   /**
@@ -464,14 +489,12 @@ object GraphAlgos {
     // adjacency broadcast uses, ship it to both joins instead of
     // exchanging + sorting the EDGE set twice (the planner cannot see
     // the aggregate's size, so it never converts on its own)
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (broadcastDeg) broadcast(df) else df
     val deg = e.select(explode(array(col("a"), col("b"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("d"))
     val fwd = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
-    e.join(maybeBcast(deg.select(col("n").as("a"), col("d").as("da"))), "a")
-      .join(maybeBcast(deg.select(col("n").as("b"), col("d").as("db"))), "b")
+    e.join(maybeBcast(deg.select(col("n").as("a"), col("d").as("da")), broadcastDeg), "a")
+      .join(maybeBcast(deg.select(col("n").as("b"), col("d").as("db")), broadcastDeg), "b")
       .select(
         when(fwd, col("a")).otherwise(col("b")).as("src"),
         when(fwd, col("b")).otherwise(col("a")).as("dst"),
@@ -696,60 +719,29 @@ object GraphAlgos {
    * Returns surviving `(node, core_deg)` — degree within the surviving
    * subgraph after the last round.
    *
-   * Scale shape: per-round state is the NODE-sized survivor set (two
-   * longs/row, localCheckpoint'ed — O(1) lineage); the edge set is
-   * persisted once and NEVER materialized per round — each round
-   * re-derives surviving degrees by two semi-joins of the static edges
-   * against the survivor set (broadcast under the
-   * [[BroadcastRankMaxNodes]] bound, partitioned hash past it, exactly
-   * the PageRank regime switch). Degree counting is a map-side-combined
+   * Scale shape: per-round state is the NODE-sized survivor set; the
+   * edge set is NEVER materialized per round — each round re-derives
+   * surviving degrees by two semi-joins of the static edges against the
+   * survivor set. Degree counting is a map-side-combined
    * groupBy. Checkpointing the shrinking edge set instead would write
    * O(|E|) per round — node-sized state is what survives a 100 TB graph.
    */
-  def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    e.persist()
-    val out = kCorePeelOn(e, k, rounds)
-    e.unpersist()
-    out
-  }
+  def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame =
+    inScope(edges, persistNodes = false)(kCorePeelOn(_, k, rounds))
 
-  /** The peel loop over an ALREADY-persisted, long-cast edge set —
-    * shared by [[kCorePeel]] and [[kCorePeelAtPercentile]] so the
-    * percentile path never caches the same edges twice. `knownNodeBound`
-    * lets a caller that already ran a sizing action (the percentile
-    * path's src-distinct count) price the broadcast DECISION without the
-    * extra union-distinct count job — it only selects the per-round join
-    * strategy, never the result. */
-  private def kCorePeelOn(e: DataFrame, k: Int, rounds: Int,
-      knownNodeBound: Option[Long] = None,
-      knownEdgeCount: Option[Long] = None): DataFrame = {
+  /** The peel loop, shared by [[kCorePeel]] and [[kCorePeelAtPercentile]]
+    * (whose scope already knows both counts). */
+  private def kCorePeelOn(g: GraphScope, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(rounds >= 1, "at least one peel round")
-    // size-adaptive layout — see pageRankFixedPoint (the count reads the
-    // caller-persisted cache when the caller didn't already price it)
-    val eR = sizedView(e, knownEdgeCount.getOrElse(e.count()))
-    val nodes = eR.select(col("src").as("node"))
-      .union(eR.select(col("dst").as("node"))).distinct()
-    // prices the broadcast decision; the count also materializes e
-    val n = knownNodeBound.getOrElse(nodes.count())
-    val bcast = n <= BroadcastRankMaxNodes
-    def sizedState(df: DataFrame): DataFrame = sizedView(df, n)
-
-    var alive = sizedState(nodes).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val next = sizedState(survivingDegStep(eR, alive, bcast)
+    val alive = g.iterate(g.checkpoint(g.nodes), rounds) { (alive, _) =>
+      survivingDegStep(g.eR, alive, g.bcast)
         .filter(col("core_deg") >= k)
-        .select(col("src").as("node")))
-        .localCheckpoint()
-      SparkShims.unpersistCheckpoint(alive)
-      alive = next
-    }
-    val out = survivingDegStep(eR, alive, bcast)
+        .select(col("src").as("node"))
+    }.last
+    survivingDegStep(g.eR, alive, g.bcast)
       .select(col("src").as("node"), col("core_deg"))
       .localCheckpoint() // materialize (≤ |V| rows) before releasing e
-    SparkShims.unpersistCheckpoint(alive)
-    out
   }
 
   /** One peel round's degree computation, lazy — split out so the
@@ -759,10 +751,8 @@ object GraphAlgos {
     * map-side-combined degree count. */
   private[pipeline] def survivingDegStep(
       e: DataFrame, alive: DataFrame, broadcastAlive: Boolean): DataFrame = {
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (broadcastAlive) broadcast(df) else df
-    e.join(maybeBcast(alive.select(col("node").as("src"))), Seq("src"), "left_semi")
-      .join(maybeBcast(alive.select(col("node").as("dst"))), Seq("dst"), "left_semi")
+    e.join(maybeBcast(alive.select(col("node").as("src")), broadcastAlive), Seq("src"), "left_semi")
+      .join(maybeBcast(alive.select(col("node").as("dst")), broadcastAlive), Seq("dst"), "left_semi")
       .groupBy(col("src")).agg(count(lit(1)).as("core_deg"))
   }
 
@@ -780,40 +770,60 @@ object GraphAlgos {
    * first bin whose cumulative count reaches the position) — no global
    * sort of |V| rows, no TakeOrdered collect; the only window runs over
    * the tiny value-histogram (the token-budget selection pattern).
+   *
+   * `edges` must be symmetric — every (u, v) beside its (v, u), as
+   * [[symmetrize]] emits: the degree sequence is read off the src side
+   * alone. The same action that finds k checks it (equal Σ xxhash64 over
+   * (src, dst) and over (dst, src)) and rejects an asymmetric input.
    */
   def kCorePeelAtPercentile(edges: DataFrame, pct: Double, rounds: Int): DataFrame = {
     require(pct > 0.0 && pct < 1.0, "pct must be in (0, 1)")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    e.persist()
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("c"))
-    // ONE driver action for n, pos and k (was three: deg.count, then a
-    // separate window + head): n = Σm over the degree-value histogram,
-    // pos = max(1, ceil(pct·n)) computed inside the plan with the same
-    // double math, k = min value whose cumulative count reaches pos.
-    // Also materializes e for the peel below.
-    val wCum = org.apache.spark.sql.expressions.Window
-      .orderBy(col("c")).rowsBetween(Long.MinValue, 0)
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy().rowsBetween(Long.MinValue, Long.MaxValue)
-    val hist = deg.groupBy(col("c")).agg(count(lit(1)).as("m"))
-    val kRow = hist
-      .withColumn("cum", sum(col("m")).over(wCum))
-      .withColumn("n", sum(col("m")).over(wAll))
-      // Σ value·count over the degree histogram = |E| — prices the peel's
-      // size-adaptive edge view with no extra job
-      .withColumn("tot", sum(col("m") * col("c")).over(wAll))
-      .filter(col("cum") >=
-        greatest(lit(1L), ceil(lit(pct) * col("n")).cast("long")))
-      .agg(min(col("c")), max(col("n")), max(col("tot"))).head()
-    require(!kRow.isNullAt(0), "kCorePeelAtPercentile on an empty edge set")
-    val k = kRow.getLong(0)
-    val n = kRow.getLong(1)
-    // n (src-distinct count) prices the broadcast decision: on the
-    // symmetrized inputs this operator documents it IS the node count
-    val out = kCorePeelOn(e, k.toInt, rounds, knownNodeBound = Some(n),
-      knownEdgeCount = Some(kRow.getLong(2)))
-    e.unpersist()
-    out
+    inScope(edges) { g =>
+      // order-insensitive edge digests, Σ xxhash64 as exact decimals (the
+      // connectedComponentsStar scheme): (src, dst) and (dst, src) sum to
+      // the same value exactly when the edge multiset is symmetric. Per
+      // edge the sums run in longs over the hash's 32-bit halves (a node's
+      // half-sums overflow only past 2^31 edges) and widen to decimal once
+      // per node: decimal sums per edge cost the sf0.01 gate ~20%
+      def halves(a: String, b: String, d: String): Seq[Column] = {
+        val h = xxhash64(col(a), col(b))
+        Seq(sum(shiftright(h, 32)).as(s"${d}_hi"), sum(h.bitwiseAND(0xFFFFFFFFL)).as(s"${d}_lo"))
+      }
+      def widened(d: String): Column = (col(s"${d}_hi").cast("decimal(38,0)") * 4294967296L +
+        col(s"${d}_lo").cast("decimal(38,0)")).as(d)
+      val deg = g.e.groupBy(col("src"))
+        .agg(count(lit(1)).as("c"), halves("src", "dst", "fwd") ++ halves("dst", "src", "rev"): _*)
+        .select(col("c"), widened("fwd"), widened("rev"))
+      // ONE driver action for n, pos, k and the symmetry digests (was
+      // three: deg.count, then a separate window + head): n = Σm over the
+      // degree-value histogram, pos = max(1, ceil(pct·n)) computed inside
+      // the plan with the same double math, k = min value whose
+      // cumulative count reaches pos. Also materializes e for the peel.
+      val wCum = org.apache.spark.sql.expressions.Window
+        .orderBy(col("c")).rowsBetween(Long.MinValue, 0)
+      val wAll = org.apache.spark.sql.expressions.Window
+        .partitionBy().rowsBetween(Long.MinValue, Long.MaxValue)
+      val hist = deg.groupBy(col("c")).agg(count(lit(1)).as("m"),
+        sum(col("fwd")).as("fwd"), sum(col("rev")).as("rev"))
+      val kRow = hist
+        .withColumn("cum", sum(col("m")).over(wCum))
+        .withColumn("n", sum(col("m")).over(wAll))
+        // Σ value·count over the degree histogram = |E| — prices the
+        // peel's size-adaptive edge view with no extra job
+        .withColumn("tot", sum(col("m") * col("c")).over(wAll))
+        .withColumn("fwd", sum(col("fwd")).over(wAll))
+        .withColumn("rev", sum(col("rev")).over(wAll))
+        .filter(col("cum") >=
+          greatest(lit(1L), ceil(lit(pct) * col("n")).cast("long")))
+        .agg(min(col("c")), max(col("n")), max(col("tot")),
+          max(col("fwd")), max(col("rev"))).head()
+      require(!kRow.isNullAt(0), "kCorePeelAtPercentile on an empty edge set")
+      require(kRow.getDecimal(3).compareTo(kRow.getDecimal(4)) == 0,
+        "kCorePeelAtPercentile needs a symmetric edge set (symmetrize it first)")
+      // n (src-distinct count) is the node count on a symmetric edge set
+      g.know(edges = kRow.getLong(2), nodes = kRow.getLong(1))
+      kCorePeelOn(g, kRow.getLong(0).toInt, rounds)
+    }
   }
 
   /**
@@ -832,67 +842,45 @@ object GraphAlgos {
    * deliberately out of scope).
    *
    * Scale shape per round: two src/dst-keyed equi-joins of node-sized
-   * score tables onto the static edges with map-side-combined sums —
-   * the PageRank regime (broadcast under [[BroadcastRankMaxNodes]],
-   * partitioned past it), localCheckpoint'ed per round.
+   * score tables onto the static edges with map-side-combined sums.
    */
   def hitsFixedRounds(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "at least one HITS round")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    e.persist()
-    // size-adaptive layout — see pageRankFixedPoint
-    val eR = sizedView(e, e.count())
-    val nodes = eR.select(col("src").as("node"))
-      .union(eR.select(col("dst").as("node"))).distinct()
-    nodes.persist()
-    val n = nodes.count()
-    require(n > 0, "hitsFixedRounds on an empty edge set")
-    val dMax = eR.groupBy(col("src")).agg(count(lit(1)).as("d"))
-      .unionByName(eR.groupBy(col("dst")).agg(count(lit(1)).as("d"))
-        .select(col("dst").as("src"), col("d")))
-      .agg(max(col("d"))).head().getLong(0)
-    require(2 * rounds * math.log(dMax.toDouble.max(2.0)) <= 62 * math.log(2.0),
-      s"d_max=$dMax^(2*$rounds) would overflow Long — fewer rounds or the normalized variant")
-    val bcast = n <= BroadcastRankMaxNodes
-    def sizedState(df: DataFrame): DataFrame = sizedView(df, n)
-
-    // r17 round fusion: the loop carries SPARSE hub/auth tables (absent
-    // row = score 0 — zero terms contribute nothing to the sums, so the
-    // sparse form is value-identical) instead of the dense (node, hub,
-    // auth) carry table. That removes the two per-half-round carry joins
-    // and their broadcasts; the dense shape is reassembled ONCE at the
-    // end. auth_r is lazy inside its round (consumed once by the hub
-    // step); only the last round's auth is checkpointed for the assembly.
-    // (The persist()-instead-of-localCheckpoint variant of the OLD shape
-    // was measured and REJECTED: 3.16 -> 3.41 s solo, 34 -> 39 jobs —
-    // broadcast builds over unmaterialized caches add jobs, they don't
-    // remove them.)
-    var hub = sizedState(nodes.select(col("node"), lit(1L).as("hub")))
-      .localCheckpoint()
-    var auth: DataFrame = null
-    var states = List(hub)
-    for (r <- 1 to rounds) {
-      // authorities this round feed hubs the same round (classic order)
-      val authR0 = sizedState(hitsAuthStep(eR, hub, bcast))
-      val authR = if (r == rounds) authR0.localCheckpoint() else authR0
-      val hubR = sizedState(hitsHubStep(eR, authR, bcast)).localCheckpoint()
-      states = if (r == rounds) hubR :: authR :: states else hubR :: states
-      hub = hubR
-      auth = authR
+    inScope(edges) { g =>
+      require(g.n > 0, "hitsFixedRounds on an empty edge set")
+      val dMax = g.eR.groupBy(col("src")).agg(count(lit(1)).as("d"))
+        .unionByName(g.eR.groupBy(col("dst")).agg(count(lit(1)).as("d"))
+          .select(col("dst").as("src"), col("d")))
+        .agg(max(col("d"))).head().getLong(0)
+      require(2 * rounds * math.log(dMax.toDouble.max(2.0)) <= 62 * math.log(2.0),
+        s"d_max=$dMax^(2*$rounds) would overflow Long — fewer rounds or the normalized variant")
+      // r17 round fusion: the loop carries SPARSE hub/auth tables (absent
+      // row = score 0 — zero terms contribute nothing to the sums, so the
+      // sparse form is value-identical) instead of the dense (node, hub,
+      // auth) carry table. That removes the two per-half-round carry joins
+      // and their broadcasts; the dense shape is reassembled ONCE at the
+      // end. A round's auth is lazy (consumed once by the hub step); only
+      // the last round's auth is checkpointed for the assembly.
+      // (The persist()-instead-of-localCheckpoint variant of the OLD shape
+      // was measured and REJECTED: 3.16 -> 3.41 s solo, 34 -> 39 jobs —
+      // broadcast builds over unmaterialized caches add jobs, they don't
+      // remove them.)
+      def authOf(hub: DataFrame): DataFrame = hitsAuthStep(g.eR, hub, g.bcast)
+      val hub0 = g.checkpoint(g.nodes.select(col("node"), lit(1L).as("hub")))
+      // authorities of a round feed hubs the same round (classic order)
+      val prev = g.iterate(hub0, rounds - 1) { (hub, _) =>
+        hitsHubStep(g.eR, sizedView(authOf(hub), g.rows), g.bcast)
+      }.last
+      val auth = g.checkpoint(authOf(prev))
+      val hub = g.checkpoint(hitsHubStep(g.eR, auth, g.bcast))
+      g.nodes
+        .join(g.maybeBcast(hub), Seq("node"), "left")
+        .join(g.maybeBcast(auth), Seq("node"), "left")
+        .select(col("node"),
+          coalesce(col("hub"), lit(0L)).as("hub"),
+          coalesce(col("auth"), lit(0L)).as("auth"))
+        .localCheckpoint()
     }
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (bcast) broadcast(df) else df
-    val out = nodes
-      .join(maybeBcast(hub), Seq("node"), "left")
-      .join(maybeBcast(auth), Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("hub"), lit(0L)).as("hub"),
-        coalesce(col("auth"), lit(0L)).as("auth"))
-      .localCheckpoint()
-    states.foreach(SparkShims.unpersistCheckpoint)
-    nodes.unpersist()
-    e.unpersist()
-    out
   }
 
   /**
@@ -906,9 +894,7 @@ object GraphAlgos {
    * Unreached nodes carry no row (no sentinel ∞ to disagree on).
    *
    * Scale shape per round: the node-sized frontier table equi-joins the
-   * static edges on src (broadcast under [[BroadcastRankMaxNodes]],
-   * partitioned past it), min-aggregated map-side; state
-   * localCheckpoints per round — O(1) lineage. A round's join input is
+   * static edges on src, min-aggregated map-side. A round's join input is
    * the full reached set, not just the new frontier — at bounded
    * `rounds` the simplicity wins over frontier-delta bookkeeping (the
    * delta optimization matters for diameter-length traversals, not
@@ -920,30 +906,12 @@ object GraphAlgos {
       rounds: Int): DataFrame = {
     require(rounds >= 1, "at least one BFS round")
     require(sources.nonEmpty, "multiSourceDistances needs a non-empty seed set")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    e.persist()
-    // size-adaptive layout — see pageRankFixedPoint
-    val eR = sizedView(e, e.count())
-    // persist: consumed twice (count + seed-row init) — see
-    // shortestPathCountsOn
-    val nodes = eR.select(col("src").as("node"))
-      .union(eR.select(col("dst").as("node"))).distinct()
-    nodes.persist()
-    val n = nodes.count()
-    require(n > 0, "multiSourceDistances on an empty edge set")
-    val bcast = n <= BroadcastRankMaxNodes
-    def sizedState(df: DataFrame): DataFrame = sizedView(df, n)
-
-    var dist = sizedState(nodes.filter(col("node").isInCollection(sources))
-      .withColumn("dist", lit(0L))).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val next = sizedState(bfsStep(eR, dist, bcast)).localCheckpoint()
-      SparkShims.unpersistCheckpoint(dist)
-      dist = next
+    inScope(edges) { g =>
+      require(g.n > 0, "multiSourceDistances on an empty edge set")
+      val init = g.checkpoint(g.nodes.filter(col("node").isInCollection(sources))
+        .withColumn("dist", lit(0L)))
+      g.iterate(init, rounds)((dist, _) => bfsStep(g.eR, dist, g.bcast)).last
     }
-    nodes.unpersist()
-    e.unpersist()
-    dist
   }
 
   /**
@@ -972,9 +940,7 @@ object GraphAlgos {
     * Both scorers MUST stay on this one implementation — their twin
     * oracles assume identical cap/orientation semantics. Caller
     * releases via [[LinkCtx.release]] after materializing its output. */
-  private final case class LinkCtx(
-      sym: DataFrame, deg: DataFrame, adj: DataFrame,
-      maybeBcast: DataFrame => DataFrame) {
+  private final case class LinkCtx(sym: DataFrame, deg: DataFrame, adj: DataFrame) {
     def release(): Unit = { deg.unpersist(); sym.unpersist() }
   }
 
@@ -993,13 +959,11 @@ object GraphAlgos {
     deg.persist()
     val n = deg.count() // materialize both (deg scan materializes sym)
     val bcast = n <= BroadcastRankMaxNodes
-    val maybeBcast: DataFrame => DataFrame =
-      df => if (bcast) broadcast(df) else df
     val capped = deg.filter(col("d") <= maxCenterDegree)
     val adj =
-      if (carryCenterDegree) sym.join(maybeBcast(capped), Seq("src"))
-      else sym.join(maybeBcast(capped.select(col("src"))), Seq("src"), "left_semi")
-    LinkCtx(sym, deg, adj, maybeBcast)
+      if (carryCenterDegree) sym.join(maybeBcast(capped, bcast), Seq("src"))
+      else sym.join(maybeBcast(capped.select(col("src")), bcast), Seq("src"), "left_semi")
+    LinkCtx(sym, deg, adj)
   }
 
   /** Non-adjacent filter + deterministic top-K tail shared by the
@@ -1076,10 +1040,8 @@ object GraphAlgos {
     * current distances via a full outer union-aggregate (windowless). */
   private[pipeline] def bfsStep(
       e: DataFrame, dist: DataFrame, broadcastDist: Boolean): DataFrame = {
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (broadcastDist) broadcast(df) else df
     val relaxed = e.join(
-        maybeBcast(dist.select(col("node").as("src"), col("dist"))), Seq("src"))
+        maybeBcast(dist.select(col("node").as("src"), col("dist")), broadcastDist), Seq("src"))
       .select(col("dst").as("node"), (col("dist") + 1L).as("dist"))
     dist.unionByName(relaxed)
       .groupBy(col("node")).agg(min(col("dist")).as("dist"))
@@ -1098,45 +1060,21 @@ object GraphAlgos {
       rounds: Int): DataFrame = {
     require(rounds >= 1, "at least one BFS round")
     require(sources.nonEmpty, "perSourceDistances needs a non-empty seed set")
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    e.persist()
-    // size-adaptive layout — see pageRankFixedPoint; the per-round join
-    // fans each edge out by the seed set (state keyed (seed, node)), so
-    // the view is weighted by the seed fan-out
-    val eR = sizedView(e, e.count(), math.max(1, sources.size).toLong)
-    // persist: consumed twice (count + seed semi-join init) — see
-    // shortestPathCountsOn
-    val nodes = eR.select(col("src").as("node"))
-      .union(eR.select(col("dst").as("node"))).distinct()
-    nodes.persist()
-    val n = nodes.count()
-    require(n > 0, "perSourceDistances on an empty edge set")
-    val bcast = n * sources.size <= BroadcastRankMaxNodes
-
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (bcast) broadcast(df) else df
-    def sizedState(df: DataFrame): DataFrame =
-      sizedView(df, n * sources.size)
-    var dist = sizedState(sources.toDF("seed")
-      .join(nodes, col("seed") === col("node"), "left_semi")
-      .select(col("seed"), col("seed").as("node"), lit(0L).as("dist")))
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val relaxed = eR.join(
-          maybeBcast(dist.select(col("seed"), col("node").as("src"), col("dist"))),
-          Seq("src"))
-        .select(col("seed"), col("dst").as("node"), (col("dist") + 1L).as("dist"))
-      val next = sizedState(dist.unionByName(relaxed)
-        .groupBy(col("seed"), col("node")).agg(min(col("dist")).as("dist")))
-        .localCheckpoint()
-      SparkShims.unpersistCheckpoint(dist)
-      dist = next
+    // state keyed (seed, node): the scope weights the edge view and the
+    // state by the seed fan-out
+    inScope(edges, seeds = sources.size) { g =>
+      require(g.n > 0, "perSourceDistances on an empty edge set")
+      val init = g.checkpoint(presentSeeds(sources, g.nodes)
+        .select(col("seed"), col("seed").as("node"), lit(0L).as("dist")))
+      g.iterate(init, rounds) { (dist, _) =>
+        val relaxed = g.eR.join(
+            g.maybeBcast(dist.select(col("seed"), col("node").as("src"), col("dist"))),
+            Seq("src"))
+          .select(col("seed"), col("dst").as("node"), (col("dist") + 1L).as("dist"))
+        dist.unionByName(relaxed)
+          .groupBy(col("seed"), col("node")).agg(min(col("dist")).as("dist"))
+      }.last
     }
-    nodes.unpersist()
-    e.unpersist()
-    dist
   }
 
   /**
@@ -1264,57 +1202,28 @@ object GraphAlgos {
    * seeds absent from the graph are dropped.
    *
    * Scale shape per round: one edges⋈frontier equi-join + keyed sum +
-   * anti-join against node-sized state; rounds localCheckpoint so
-   * lineage stays O(1) (the BFS/PageRank discipline). `edges` directed;
+   * anti-join against node-sized state. `edges` directed;
    * symmetrize upstream for undirected semantics (multi-edges must be
    * deduped — σ counts paths in the SIMPLE graph).
    */
   def shortestPathCounts(
       edges: DataFrame,
       sources: Seq[Long],
-      rounds: Int): DataFrame = {
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    e.persist()
-    val out = shortestPathCountsOn(e, sources, rounds)
-    e.unpersist()
-    out
-  }
+      rounds: Int): DataFrame =
+    inScope(edges, seeds = sources.size)(shortestPathCountsOn(_, sources, rounds))
 
-  /** The forward-pass body over an ALREADY-persisted, long-cast edge
-    * set — shared with [[betweennessCentrality]] / [[stressCentrality]],
-    * whose backward passes reuse the SAME cached edges (the public entry
-    * used to persist and release its own copy, so each centrality gate
-    * re-derived the full edge set — typically a fact-table join +
-    * symmetrize distinct — a second time for the backward pass). */
+  /** The forward-pass body, shared with [[betweennessCentrality]] /
+    * [[stressCentrality]], whose backward passes reuse the SAME scope and
+    * so the same cached edges (a private copy per pass would re-derive
+    * the full edge set — typically a fact-table join + symmetrize
+    * distinct — a second time). Returns the settled set, owned by `g`. */
   private def shortestPathCountsOn(
-      e: DataFrame,
+      g: GraphScope,
       sources: Seq[Long],
-      rounds: Int,
-      knownEdgeCount: Option[Long] = None): DataFrame = {
+      rounds: Int): DataFrame = {
     require(rounds >= 1, "at least one BFS round")
     require(sources.nonEmpty, "shortestPathCounts needs a non-empty seed set")
-    val spark = e.sparkSession
-    import spark.implicits._
-    // size-adaptive layout — see pageRankFixedPoint (e arrives persisted;
-    // the count materializes it and prices the per-round view; callers
-    // that already counted pass the volume through). The per-round join
-    // fans each edge out by the seed set and the candidate agg is keyed
-    // (seed, dst), so the view is weighted by the seed fan-out.
-    val eR = sizedView(e, knownEdgeCount.getOrElse(e.count()),
-      math.max(1, sources.size).toLong)
-    // nodes is consumed twice (count + seed validation) — persist, or the
-    // union-distinct runs twice (~0.6 s/scan measured by JobProbe at sf0.1)
-    val nodes = eR.select(col("src").as("node"))
-      .union(eR.select(col("dst").as("node"))).distinct()
-    nodes.persist()
-    val n = nodes.count()
-    require(n > 0, "shortestPathCounts on an empty edge set")
-    val bcast = n * sources.size <= BroadcastRankMaxNodes
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (bcast) broadcast(df) else df
-    def sizedState(df: DataFrame): DataFrame =
-      sizedView(df, n * sources.size)
-
+    require(g.n > 0, "shortestPathCounts on an empty edge set")
     // settled state = the LIST of per-round frontier checkpoints, united
     // lazily where needed — re-checkpointing the whole accumulated set
     // every round (the previous shape) wrote O(rounds · settled) and its
@@ -1330,42 +1239,29 @@ object GraphAlgos {
     // union every round (~19 s of single-threaded driver time at 6
     // rounds x 8 seeds). localCheckpoint's LogicalRDD leaf keeps every
     // round's plan O(1); its extra isEmpty job is ~10 ms on cached blocks.
-    var frontier = sizedState(sources.toDF("seed")
-      .join(nodes, col("seed") === col("node"), "left_semi")
+    val init = g.checkpoint(presentSeeds(sources, g.nodes)
       .select(col("seed"), col("seed").as("node"),
         lit(0L).as("dist"), lit(1L).as("sigma")))
-      .localCheckpoint()
-    var frontiers = List(frontier)
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      val cand = eR.join(
-          maybeBcast(frontier.select(col("seed"), col("node").as("src"), col("sigma"))),
-          Seq("src"))
-        .groupBy(col("seed"), col("dst"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .select(col("seed"), col("dst").as("node"), col("sigma"))
-      val settledKeys = frontiers
-        .map(_.select(col("seed"), col("node")))
-        .reduce(_ unionByName _)
-      val fresh = sizedState(cand
-        .join(maybeBcast(settledKeys), Seq("seed", "node"), "left_anti")
-        .select(col("seed"), col("node"), lit(r.toLong).as("dist"), col("sigma")))
-        .localCheckpoint()
-      frontiers ::= fresh
-      frontier = fresh
-      // an empty frontier is a fixpoint: every later round joins it and
-      // yields another empty set, so the remaining rounds are no-ops —
-      // exit with the identical settled union (take(1) on the freshly
-      // checkpointed frontier is a ~ms job; saturation before the round
-      // bound is the common case on small-diameter graphs)
-      exhausted = fresh.isEmpty
-      r += 1
+    var settledKeys = List.empty[DataFrame]
+    // an empty frontier is a fixpoint: every later round joins it and
+    // yields another empty set, so the remaining rounds are no-ops —
+    // exit with the identical settled union (take(1) on the freshly
+    // checkpointed frontier is a ~ms job; saturation before the round
+    // bound is the common case on small-diameter graphs)
+    val frontiers = g.iterate(init, rounds, keepAll = true, until = _.isEmpty) {
+      (frontier, r) =>
+        settledKeys ::= frontier.select(col("seed"), col("node"))
+        g.eR.join(
+            g.maybeBcast(frontier.select(col("seed"), col("node").as("src"), col("sigma"))),
+            Seq("src"))
+          .groupBy(col("seed"), col("dst"))
+          .agg(sum(col("sigma")).as("sigma"))
+          .select(col("seed"), col("dst").as("node"), col("sigma"))
+          .join(g.maybeBcast(settledKeys.reduce(_ unionByName _)), Seq("seed", "node"),
+            "left_anti")
+          .select(col("seed"), col("node"), lit(r.toLong).as("dist"), col("sigma"))
     }
-    val settled = frontiers.reduce(_ unionByName _).localCheckpoint()
-    frontiers.foreach(SparkShims.unpersistCheckpoint)
-    nodes.unpersist()
-    settled
+    g.own(frontiers.reverse.reduce(_ unionByName _).localCheckpoint())
   }
 
   /**
@@ -1398,39 +1294,23 @@ object GraphAlgos {
       steps: Int): DataFrame = {
     require(steps >= 1, "at least one walk step")
     require(sources.nonEmpty, "hashWalks needs a non-empty seed set")
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    e.persist()
-    // size-adaptive layout — see pageRankFixedPoint; the walk state is
-    // seed-sized, so only the edge view needs pricing
-    val eR = sizedView(e, e.count())
-    val nodes = eR.select(col("src").as("node")).distinct()
-    var cur = sizedView(sources.toDF("seed")
-      .join(nodes, col("seed") === col("node"), "left_semi")
-      .select(col("seed"), col("seed").as("node")), sources.size.toLong)
-      .localCheckpoint()
-    var rows = List(cur.select(col("seed"), lit(0L).as("step"), col("node")))
-    var checkpoints = List(cur)
-    for (t <- 1 to steps) {
-      val next = eR.join(broadcast(cur.select(col("seed"), col("node").as("src"))),
-          Seq("src"))
-        .select(col("seed"), col("src"), col("dst"),
-          pmod(col("src") * 2654435761L + col("dst") * 40503L
-            + lit(t.toLong) * 2246822519L, lit(4294967296L)).as("mix"))
-        .groupBy(col("seed"))
-        .agg(min_by(col("dst"), col("mix")).as("node"))
-        // seed-sized state: size-adaptive, same rule as the edge view
-        .coalesce(sizedParts(sources.size.toLong))
+    inScope(edges) { g =>
+      g.rows = sources.size.toLong // seed-sized state: one row per walk
+      val starts = presentSeeds(sources, g.eR.select(col("src").as("node")).distinct())
+      val init = g.checkpoint(starts.select(col("seed"), col("seed").as("node")))
+      val walk = g.iterate(init, steps, keepAll = true) { (cur, t) =>
+        g.eR.join(broadcast(cur.select(col("seed"), col("node").as("src"))), Seq("src"))
+          .select(col("seed"), col("src"), col("dst"),
+            pmod(col("src") * 2654435761L + col("dst") * 40503L
+              + lit(t.toLong) * 2246822519L, lit(4294967296L)).as("mix"))
+          .groupBy(col("seed"))
+          .agg(min_by(col("dst"), col("mix")).as("node"))
+      }
+      walk.indices.reverse
+        .map(t => walk(t).select(col("seed"), lit(t.toLong).as("step"), col("node")))
+        .reduce(_ unionByName _)
         .localCheckpoint()
-      cur = next
-      checkpoints ::= next
-      rows ::= next.select(col("seed"), lit(t.toLong).as("step"), col("node"))
     }
-    val out = rows.reduce(_ unionByName _).localCheckpoint()
-    checkpoints.foreach(SparkShims.unpersistCheckpoint)
-    e.unpersist()
-    out
   }
 
   /**
@@ -1443,60 +1323,30 @@ object GraphAlgos {
    * equals float Katz at the same β truncated to R terms.
    *
    * Scale shape: each round is ONE edges⋈walks equi-join + keyed sum
-   * (the PageRank shuffle), walks state is node-sized and
-   * localCheckpoint'ed so lineage stays O(1). Overflow-safe for
+   * (the PageRank shuffle) over node-sized walks state. Overflow-safe for
    * bounded R: walks_r ≤ (max in-degree)^r. `edges` directed and
    * assumed deduped; symmetrize upstream for undirected semantics.
    */
   def katzCentrality(edges: DataFrame, rounds: Int, base: Long): DataFrame = {
     require(rounds >= 1, "at least one walk round")
     require(base >= 2, "attenuation base must be >= 2")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    e.persist()
-    // size-adaptive layout (guide §2.2): the edge cache is re-scanned by
-    // every round's map stage, so its partition count sets every round's
-    // task count AND the partial-agg fan-out (groups x map tasks rows
-    // into each exchange); the node-sized state coalesces the same way
-    // before each checkpoint. The materializing count prices the layout;
-    // coalesce never raises a partition count, so big graphs keep theirs.
-    val m = e.count()
-    val eR = sizedView(e, m)
-    // nodes is consumed three times (count, walk init, final left join) —
-    // persist it, and derive it from the SIZED view so its distinct runs
-    // data-sized map tasks instead of a 2x-core-count union
-    val nodes = eR.select(col("src").as("node"))
-      .union(eR.select(col("dst").as("node"))).distinct()
-    nodes.persist()
-    val n = nodes.count()
-    val bcast = n <= BroadcastRankMaxNodes
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (bcast) broadcast(df) else df
-    def sizedState(df: DataFrame): DataFrame = sizedView(df, n)
     def scale(r: Int): Long =
       (1 to (rounds - r)).foldLeft(1L)((acc, _) => acc * base)
-    var walks = sizedState(nodes.select(col("node"), lit(1L).as("w")))
-      .localCheckpoint()
-    var rounds0 = List(walks)
-    var contribs = List.empty[DataFrame]
-    for (r <- 1 to rounds) {
-      val next = sizedState(eR.join(
-          maybeBcast(walks.select(col("node").as("src"), col("w"))), Seq("src"))
-        .groupBy(col("dst")).agg(sum(col("w")).as("w"))
-        .select(col("dst").as("node"), col("w")))
+    inScope(edges) { g =>
+      val init = g.checkpoint(g.nodes.select(col("node"), lit(1L).as("w")))
+      val walks = g.iterate(init, rounds, keepAll = true) { (walks, _) =>
+        g.eR.join(g.maybeBcast(walks.select(col("node").as("src"), col("w"))), Seq("src"))
+          .groupBy(col("dst")).agg(sum(col("w")).as("w"))
+          .select(col("dst").as("node"), col("w"))
+      }
+      val scored = (rounds to 1 by -1)
+        .map(r => walks(r).select(col("node"), (col("w") * scale(r)).as("contrib")))
+        .reduce(_ unionByName _)
+        .groupBy(col("node")).agg(sum(col("contrib")).as("katz_scaled"))
+      g.nodes.join(scored, Seq("node"), "left")
+        .select(col("node"), coalesce(col("katz_scaled"), lit(0L)).as("katz_scaled"))
         .localCheckpoint()
-      walks = next
-      rounds0 ::= next
-      contribs ::= next.select(col("node"), (col("w") * scale(r)).as("contrib"))
     }
-    val scored = contribs.reduce(_ unionByName _)
-      .groupBy(col("node")).agg(sum(col("contrib")).as("katz_scaled"))
-    val out = nodes.join(scored, Seq("node"), "left")
-      .select(col("node"), coalesce(col("katz_scaled"), lit(0L)).as("katz_scaled"))
-      .localCheckpoint()
-    rounds0.foreach(SparkShims.unpersistCheckpoint)
-    nodes.unpersist()
-    e.unpersist()
-    out
   }
 
   /**
@@ -1511,65 +1361,57 @@ object GraphAlgos {
    * jsd-family rounding contract); σ itself stays exact Long from the
    * forward pass.
    *
-   * Scale shape identical to [[stressCentrality]]: one backward
-   * edges⋈δ join + keyed sum per layer over (seed × reached)-sized
-   * state.
+   * Scale shape identical to [[stressCentrality]] (the shared
+   * [[backwardPass]]).
    */
   def betweennessCentrality(
       edges: DataFrame,
       sources: Seq[Long],
       rounds: Int): DataFrame = {
     require(rounds >= 2, "betweenness needs at least an interior layer")
-    // one cast+persist shared by BOTH passes — the forward pass must not
-    // cache and release a private copy, or the (often join-derived) edge
-    // set is recomputed from source for the backward layers
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    e.persist()
-    // one count materializes the cache and prices BOTH passes' sized
-    // edge views (see pageRankFixedPoint)
-    val m = e.count()
-    val eR = sizedView(e, m, math.max(1, sources.size).toLong)
-    val fwd = shortestPathCountsOn(e, sources, rounds,
-      knownEdgeCount = Some(m)).persist()
-    // backward layers are (seed × layer)-sized — broadcast them under the
-    // same node bound as the forward pass, or every layer's δ⋈edges join
-    // SHUFFLES the static edge set (delta is a LogicalRDD leaf whose size
-    // the planner cannot estimate, so it never converts on its own)
-    val fwdN = fwd.count()
-    val bcast = fwdN <= BroadcastRankMaxNodes
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (bcast) broadcast(df) else df
-    def sizedState(df: DataFrame): DataFrame = sizedView(df, fwdN)
-    var delta = sizedState(fwd.where(col("dist") === rounds)
-      .select(col("seed"), col("node"), col("sigma"), lit(0.0).as("delta")))
-      .localCheckpoint()
-    var layers = List(delta)
-    for (r <- (rounds - 1) to 1 by -1) {
-      val contrib = eR.join(
-          maybeBcast(delta.select(col("seed"), col("node").as("dst"),
-            ((lit(1.0) + col("delta")) / col("sigma")).as("share"))),
+    inScope(edges, seeds = sources.size) { g =>
+      val (_, layers) = backwardPass(g, sources, rounds, Seq("seed", "node", "sigma"),
+          "delta", lit(0.0))(
+        push = (lit(1.0) + col("delta")) / col("sigma"),
+        pull = s => col("sigma") * coalesce(s, lit(0.0)))
+      layers.reduce(_ unionByName _)
+        .groupBy(col("node"))
+        .agg(round(sum(col("delta")), 6).as("betweenness"))
+        .localCheckpoint()
+    }
+  }
+
+  /** The Brandes backward pass [[betweennessCentrality]] and
+    * [[stressCentrality]] share: the forward pass ([[shortestPathCountsOn]]
+    * over `g`, persisted), then one `value` per settled (seed, node) layer
+    * by layer from the horizon inward. The horizon layer holds `horizon`;
+    * layer r sums `push` of layer r+1 over each node's shortest-path-DAG
+    * successors (one edges⋈layer equi-join + keyed sum) and `pull`s its
+    * value from that sum (NULL without successors), beside the forward
+    * `layerCols`. Layers are (seed × layer)-sized, so they broadcast under
+    * the node bound by the forward result's size — without the hint each
+    * layer's join shuffles the static edge set. Returns the forward result
+    * and the layers, newest (layer 1) first, all owned by `g`. */
+  private def backwardPass(
+      g: GraphScope, sources: Seq[Long], rounds: Int,
+      layerCols: Seq[String], value: String, horizon: Column)(
+      push: Column, pull: Column => Column): (DataFrame, Seq[DataFrame]) = {
+    val fwd = g.persist(shortestPathCountsOn(g, sources, rounds))
+    g.rows = fwd.count()
+    def atDist(r: Int): DataFrame =
+      fwd.where(col("dist") === r).select(layerCols.map(col): _*)
+    val layers = g.iterate(g.checkpoint(atDist(rounds).withColumn(value, horizon)),
+        rounds - 1, keepAll = true) { (next, i) =>
+      val succ = g.eR.join(
+          g.maybeBcast(next.select(col("seed"), col("node").as("dst"), push.as("x"))),
           Seq("dst"))
         .groupBy(col("seed"), col("src"))
-        .agg(sum(col("share")).as("sh"))
-        .select(col("seed"), col("src").as("node"), col("sh"))
-      val layer = fwd.where(col("dist") === r)
-        .select(col("seed"), col("node"), col("sigma"))
-      val dr = sizedState(layer.join(maybeBcast(contrib), Seq("seed", "node"), "left")
-        .select(col("seed"), col("node"), col("sigma"),
-          (col("sigma") * coalesce(col("sh"), lit(0.0))).as("delta")))
-        .localCheckpoint()
-      delta = dr
-      layers ::= dr
+        .agg(sum(col("x")).as("s"))
+        .select(col("seed"), col("src").as("node"), col("s"))
+      atDist(rounds - i).join(g.maybeBcast(succ), Seq("seed", "node"), "left")
+        .select(layerCols.map(col) :+ pull(col("s")).as(value): _*)
     }
-    val out = layers.reduce(_ unionByName _)
-      .groupBy(col("node"))
-      .agg(round(sum(col("delta")), 6).as("betweenness"))
-      .localCheckpoint()
-    layers.foreach(SparkShims.unpersistCheckpoint)
-    fwd.unpersist()
-    SparkShims.unpersistCheckpoint(fwd)
-    e.unpersist()
-    out
+    (fwd, layers.reverse)
   }
 
   /**
@@ -1595,53 +1437,18 @@ object GraphAlgos {
       sources: Seq[Long],
       rounds: Int): DataFrame = {
     require(rounds >= 2, "stress needs at least an interior layer")
-    // one cast+persist shared by both passes (see betweennessCentrality)
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    e.persist()
-    // one count materializes the cache and prices both passes' sized
-    // edge views (see betweennessCentrality)
-    val m = e.count()
-    val eR = sizedView(e, m, math.max(1, sources.size).toLong)
-    val fwd = shortestPathCountsOn(e, sources, rounds,
-      knownEdgeCount = Some(m)).persist()
-    // same broadcast rule as betweennessCentrality: layer state is
-    // (seed × layer)-sized — without the hint each backward layer
-    // shuffles the static edge set into a sort-merge join
-    val fwdN = fwd.count()
-    val bcast = fwdN <= BroadcastRankMaxNodes
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (bcast) broadcast(df) else df
-    def sizedState(df: DataFrame): DataFrame = sizedView(df, fwdN)
-    var g = sizedState(fwd.where(col("dist") === rounds)
-      .select(col("seed"), col("node"), lit(1L).as("g")))
-      .localCheckpoint()
-    var layers = List(g)
-    for (r <- (rounds - 1) to 1 by -1) {
-      val succSum = eR.join(
-          maybeBcast(g.select(col("seed"), col("node").as("dst"), col("g"))),
-          Seq("dst"))
-        .groupBy(col("seed"), col("src"))
-        .agg(sum(col("g")).as("sg"))
-        .select(col("seed"), col("src").as("node"), col("sg"))
-      val layer = fwd.where(col("dist") === r).select(col("seed"), col("node"))
-      val gr = sizedState(layer.join(maybeBcast(succSum), Seq("seed", "node"), "left")
-        .select(col("seed"), col("node"),
-          (lit(1L) + coalesce(col("sg"), lit(0L))).as("g")))
+    inScope(edges, seeds = sources.size) { g =>
+      val (fwd, layers) = backwardPass(g, sources, rounds, Seq("seed", "node"),
+          "g", lit(1L))(
+        push = col("g"),
+        pull = s => lit(1L) + coalesce(s, lit(0L)))
+      layers.reduce(_ unionByName _)
+        .join(fwd.where(col("dist") >= 1)
+          .select(col("seed"), col("node"), col("sigma")), Seq("seed", "node"))
+        .groupBy(col("node"))
+        .agg(sum(col("sigma") * (col("g") - 1L)).as("stress"))
         .localCheckpoint()
-      g = gr
-      layers ::= gr
     }
-    val stress = layers.reduce(_ unionByName _)
-      .join(fwd.where(col("dist") >= 1)
-        .select(col("seed"), col("node"), col("sigma")), Seq("seed", "node"))
-      .groupBy(col("node"))
-      .agg(sum(col("sigma") * (col("g") - 1L)).as("stress"))
-      .localCheckpoint()
-    layers.foreach(SparkShims.unpersistCheckpoint)
-    fwd.unpersist()
-    SparkShims.unpersistCheckpoint(fwd)
-    e.unpersist()
-    stress
   }
 
   /**
@@ -1649,9 +1456,7 @@ object GraphAlgos {
    * relaxation): integer edge weights, `rounds` rounds of
    * `dist_v = min(dist_v, dist_u + w_uv)` — exact distances for every
    * path of ≤ `rounds` edges. Each round is ONE equi-join + keyed min
-   * over the frontier state; rounds are localCheckpoint'ed so lineage
-   * stays O(1) (the iterative-algorithm discipline shared by PageRank/
-   * BFS/LPA here). Unreached nodes emit no row.
+   * over the frontier state. Unreached nodes emit no row.
    *
    * `edges`: (src, dst, w) directed — symmetrize (both directions)
    * upstream for undirected graphs.
@@ -1661,32 +1466,18 @@ object GraphAlgos {
       source: Long,
       rounds: Int): DataFrame = {
     require(rounds >= 1, "at least one relaxation round")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
-      col("w").cast("long"))
-    e.persist()
-    // size-adaptive layout — see pageRankFixedPoint
-    val eR = sizedView(e, e.count())
-    val n = eR.select(col("src").as("node"))
-      .union(eR.select(col("dst").as("node"))).distinct().count()
-    val bcast = n <= BroadcastRankMaxNodes
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (bcast) broadcast(df) else df
-    def sizedState(df: DataFrame): DataFrame = sizedView(df, n)
     val spark = edges.sparkSession
     import spark.implicits._
-    var dist = Seq((source, 0L)).toDF("node", "dist").coalesce(1).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val relaxed = eR.join(
-          maybeBcast(dist.select(col("node").as("src"), col("dist"))), Seq("src"))
-        .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      val next = sizedState(dist.unionByName(relaxed)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist")))
-        .localCheckpoint()
-      SparkShims.unpersistCheckpoint(dist)
-      dist = next
+    inScope(edges, weighted = true, persistNodes = false) { g =>
+      val init = g.checkpoint(Seq((source, 0L)).toDF("node", "dist"))
+      g.iterate(init, rounds) { (dist, _) =>
+        val relaxed = g.eR.join(
+            g.maybeBcast(dist.select(col("node").as("src"), col("dist"))), Seq("src"))
+          .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
+        dist.unionByName(relaxed)
+          .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+      }.last
     }
-    e.unpersist()
-    dist
   }
 
   /**
@@ -1714,9 +1505,7 @@ object GraphAlgos {
     * nodes with no in-edge from a hub simply emit no row (score 0). */
   private[pipeline] def hitsAuthStep(
       e: DataFrame, hub: DataFrame, broadcastScores: Boolean): DataFrame = {
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (broadcastScores) broadcast(df) else df
-    e.join(maybeBcast(hub.select(col("node").as("src"), col("hub"))), Seq("src"))
+    e.join(maybeBcast(hub.select(col("node").as("src"), col("hub")), broadcastScores), Seq("src"))
       .groupBy(col("dst")).agg(sum(col("hub")).as("auth"))
       .select(col("dst").as("node"), col("auth"))
   }
@@ -1724,9 +1513,7 @@ object GraphAlgos {
   /** HITS hub half-round over the sparse auth table, lazy. */
   private[pipeline] def hitsHubStep(
       e: DataFrame, auth: DataFrame, broadcastScores: Boolean): DataFrame = {
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (broadcastScores) broadcast(df) else df
-    e.join(maybeBcast(auth.select(col("node").as("dst"), col("auth"))), Seq("dst"))
+    e.join(maybeBcast(auth.select(col("node").as("dst"), col("auth")), broadcastScores), Seq("dst"))
       .groupBy(col("src")).agg(sum(col("auth")).as("hub"))
       .select(col("src").as("node"), col("hub"))
   }
@@ -1749,55 +1536,34 @@ object GraphAlgos {
    * edge volume: a row_number window would sort every (node, label)
    * group through a single-partition-per-key exchange; the struct-max
    * is a partial-aggregating one-pass argmax with the identical
-   * (cnt DESC, label ASC) tie-break). Label state localCheckpoints
-   * per round — O(1) lineage, node-sized writes.
+   * (cnt DESC, label ASC) tie-break).
    */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "at least one propagation round")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    e.persist()
-    // size-adaptive layout — see pageRankFixedPoint. LPA's per-round
-    // aggregation is keyed on (dst, label) — up to EDGE-volume distinct
-    // groups, so each map task builds an edge-sized agg map (unlike the
-    // node-keyed sums of the PageRank family); weight the view by that
-    // per-row state (measured: a 1-partition view SERIALIZED the vote
-    // agg and ran 1.4x the unsized layout; 128 B/row keeps data-sized
-    // tasks without starving the agg of parallelism)
-    val eR = sizedView(e, e.count())
-    val nodes = eR.select(col("src").as("node"))
-      .union(eR.select(col("dst").as("node"))).distinct()
-    val n = nodes.count()
-    val bcast = n <= BroadcastRankMaxNodes
-    nodes.persist()
-    def sizedState(df: DataFrame): DataFrame = sizedView(df, n)
-
-    var labels = sizedState(nodes.withColumn("label", col("node")))
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val next = sizedState(lpaStep(eR, labels, bcast)).localCheckpoint()
-      SparkShims.unpersistCheckpoint(labels)
-      labels = next
+    // the vote aggregation is keyed on (dst, label) — up to edge-volume
+    // groups per map task, unlike the node-keyed sums of the PageRank
+    // family (measured under the earlier bytes-based layout target: a
+    // 1-partition edge view serialized the vote agg and ran 1.4x the
+    // unsized layout)
+    inScope(edges) { g =>
+      val init = g.checkpoint(g.nodes.withColumn("label", col("node")))
+      g.iterate(init, rounds)((labels, _) => lpaStep(g.eR, labels, g.bcast)).last
     }
-    nodes.unpersist()
-    e.unpersist()
-    labels
   }
 
   /** One label-propagation round, lazy (pinnable in GraphAlgosSpec):
     * node-sized label join onto static edges, two-level argmax. */
   private[pipeline] def lpaStep(
       e: DataFrame, labels: DataFrame, broadcastLabels: Boolean): DataFrame = {
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (broadcastLabels) broadcast(df) else df
     val voted = e.join(
-        maybeBcast(labels.select(col("node").as("src"), col("label"))), Seq("src"))
+        maybeBcast(labels.select(col("node").as("src"), col("label")), broadcastLabels), Seq("src"))
       .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("cnt"))
       .groupBy(col("dst"))
       .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
       .select(col("dst").as("v_node"), (-col("m.nl")).as("v_label"))
     // left join + coalesce: on a symmetrized graph every node is a dst,
     // but the API accepts directed inputs where sinks keep their label
-    labels.join(maybeBcast(voted), col("node") === col("v_node"), "left")
+    labels.join(maybeBcast(voted, broadcastLabels), col("node") === col("v_node"), "left")
       .select(col("node"), coalesce(col("v_label"), col("label")).as("label"))
   }
 

@@ -551,4 +551,61 @@ class GraphAlgosSpec extends AnyFunSuite {
       (2L, 3L), (2L, 4L), (3L, 4L),
       (1L, 9L), (2L, 9L), (3L, 9L)))
   }
+
+  test("kCorePeelAtPercentile rejects a one-directional edge list") {
+    // a directed triangle: every node has out-degree 1, but no edge has
+    // its reverse — the src-side degree sequence is not the graph's
+    val err = intercept[IllegalArgumentException] {
+      GraphAlgos.kCorePeelAtPercentile(
+        Seq((0L, 1L), (1L, 2L), (2L, 0L)).toDF("src", "dst"), pct = 0.5, rounds = 2)
+    }
+    assert(err.getMessage.contains("symmetric"), err.getMessage)
+  }
+
+  test("benched graph kernels run no more Spark jobs than their recorded bounds") {
+    // the pipeline gates pay a per-job floor (about half of each gate's
+    // time is driver gap), so a loop refactor that adds a job per round
+    // shows up here first. Bounds: the counts the kernels ran on this
+    // fixture before they moved onto GraphScope.
+    val sym = GraphAlgos.symmetrize(GraphRegimeParitySpec.edges(spark))
+    val seeds = Seq(0L, 5L, 30L)
+    val kernels = Seq[(String, Int, () => Any)](
+      ("pageRankFixedPoint", 18, () => GraphAlgos.pageRankFixedPoint(sym, iterations = 3)),
+      ("labelPropagation", 16, () => GraphAlgos.labelPropagation(sym, rounds = 3)),
+      ("kCorePeelAtPercentile", 17,
+        () => GraphAlgos.kCorePeelAtPercentile(sym, pct = 0.05, rounds = 4)),
+      ("shortestPathCounts", 29,
+        () => GraphAlgos.shortestPathCounts(sym, seeds, rounds = 6)),
+      ("betweennessCentrality", 33,
+        () => GraphAlgos.betweennessCentrality(sym, seeds, rounds = 3)))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.put(e.jobId, Option(e.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      kernels.foreach { case (name, _, run) =>
+        sc.setJobGroup(s"kernel-$name", name)
+        run()
+      }
+      // a marker job: the listener bus delivers its start after every
+      // earlier event
+      sc.setJobGroup("kernel-drain", "drain")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.containsValue("kernel-drain") && System.nanoTime() < deadline) Thread.sleep(5)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val counts = kernels.map { case (name, bound, _) =>
+      (name, jobs.values.toArray.count(_ == s"kernel-$name"), bound)
+    }
+    println(counts.map { case (n, c, _) => s"$n=$c" }.mkString("[kernel jobs] ", " ", ""))
+    counts.foreach { case (name, ran, bound) =>
+      assert(ran <= bound, s"$name ran $ran Spark jobs (bound $bound)")
+    }
+  }
 }

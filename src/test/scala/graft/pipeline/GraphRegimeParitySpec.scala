@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,23 +22,8 @@ import graft.TestSpark
 class GraphRegimeParitySpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
-  import spark.implicits._
 
-  /** Deterministic scale-free-ish digraph: 40 nodes, hub 0, a chain, a
-    * clique, and pseudo-random extra edges — shapes that exercise
-    * frontier growth, ties, and degree skew. */
-  private lazy val edges: DataFrame = {
-    val chain = (0L until 39L).map(i => (i, i + 1))
-    val hub = (1L until 20L).map(i => (0L, i))
-    val clique = for (a <- 30L until 35L; b <- 30L until 35L if a != b) yield (a, b)
-    val extra = (0 until 40).map { i =>
-      val s = (i * 17L) % 40; val d = (i * 29L + 7L) % 40
-      (s, if (d == s) (d + 1) % 40 else d)
-    }
-    (chain ++ hub ++ clique ++ extra).distinct
-      .toDF("src", "dst")
-      .withColumn("w", (col("src") * 7 + col("dst") * 3) % 9 + 1)
-  }
+  private lazy val edges: DataFrame = GraphRegimeParitySpec.edges(spark)
 
   private def inRegime[T](partitioned: Boolean)(body: => T): T = {
     val key = "graft.graph.broadcastRankMaxNodes"
@@ -54,13 +39,20 @@ class GraphRegimeParitySpec extends AnyFunSuite {
     }
   }
 
+  /** Rows of one run, after checking that the run released everything it
+    * persisted or checkpointed except the frame it returns. */
+  private def rowsOf(name: String, partitioned: Boolean)(run: => DataFrame): Seq[Seq[Any]] =
+    inRegime(partitioned) {
+      val before = spark.sparkContext.getPersistentRDDs.size
+      val rows = run.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+      val left = spark.sparkContext.getPersistentRDDs.size - before
+      assert(left <= 1, s"$name (partitioned = $partitioned) left $left persisted RDDs")
+      rows
+    }
+
   private def assertSameResult(name: String)(run: => DataFrame): Unit = {
-    val broadcastRows = inRegime(partitioned = false) {
-      run.collect().map(_.toSeq).sortBy(_.mkString("|"))
-    }
-    val partitionedRows = inRegime(partitioned = true) {
-      run.collect().map(_.toSeq).sortBy(_.mkString("|"))
-    }
+    val broadcastRows = rowsOf(name, partitioned = false)(run)
+    val partitionedRows = rowsOf(name, partitioned = true)(run)
     assert(broadcastRows.length == partitionedRows.length,
       s"$name: row count differs between regimes")
     broadcastRows.zip(partitionedRows).foreach { case (a, b) =>
@@ -135,6 +127,32 @@ class GraphRegimeParitySpec extends AnyFunSuite {
     }
   }
 
+  test("k-core percentile peel: partitioned regime matches broadcast exactly") {
+    assertSameResult("kCorePeelAtPercentile") {
+      GraphAlgos.kCorePeelAtPercentile(GraphAlgos.symmetrize(edges), pct = 0.3, rounds = 4)
+    }
+  }
+
+  test("betweenness: partitioned regime matches broadcast exactly") {
+    assertSameResult("betweennessCentrality") {
+      GraphAlgos.betweennessCentrality(GraphAlgos.symmetrize(edges),
+        sources = Seq(0L, 30L), rounds = 4)
+    }
+  }
+
+  test("stress: partitioned regime matches broadcast exactly") {
+    assertSameResult("stressCentrality") {
+      GraphAlgos.stressCentrality(GraphAlgos.symmetrize(edges),
+        sources = Seq(0L, 30L), rounds = 4)
+    }
+  }
+
+  test("hash walks: partitioned regime matches broadcast exactly") {
+    assertSameResult("hashWalks") {
+      GraphAlgos.hashWalks(GraphAlgos.symmetrize(edges), sources = Seq(0L, 5L, 31L), steps = 4)
+    }
+  }
+
   test("jaccard link prediction: partitioned regime matches broadcast exactly") {
     assertSameResult("jaccardLinkPredictions") {
       GraphAlgos.jaccardLinkPredictions(
@@ -151,5 +169,25 @@ class GraphRegimeParitySpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       GraphAlgos.kCorePeelAtPercentile(edges, pct = 1.0, rounds = 2)
     }
+  }
+}
+
+object GraphRegimeParitySpec {
+
+  /** Deterministic scale-free-ish digraph: 40 nodes, hub 0, a chain, a
+    * clique, and pseudo-random extra edges — shapes that exercise
+    * frontier growth, ties, and degree skew. */
+  def edges(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    val chain = (0L until 39L).map(i => (i, i + 1))
+    val hub = (1L until 20L).map(i => (0L, i))
+    val clique = for (a <- 30L until 35L; b <- 30L until 35L if a != b) yield (a, b)
+    val extra = (0 until 40).map { i =>
+      val s = (i * 17L) % 40; val d = (i * 29L + 7L) % 40
+      (s, if (d == s) (d + 1) % 40 else d)
+    }
+    (chain ++ hub ++ clique ++ extra).distinct
+      .toDF("src", "dst")
+      .withColumn("w", (col("src") * 7 + col("dst") * 3) % 9 + 1)
   }
 }
