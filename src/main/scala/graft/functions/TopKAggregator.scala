@@ -26,28 +26,14 @@ class TopKAggregator(k: Int)
       mutable.PriorityQueue[(Long, Double, Array[Byte])],
       Seq[(Long, Double, Array[Byte])]] {
 
-  private type Hit = (Long, Double, Array[Byte]) // (gid, score, payload)
+  private type Hit = TopKAggregator.Hit
 
-  // max-heap on (score asc, gid desc) ordering so the WORST kept element is
-  // on top and can be evicted in O(log k)
-  private def worstFirst: Ordering[Hit] =
-    Ordering.by[Hit, (Double, Long)] { case (gid, score, _) => (-score, gid) }
-
-  override def zero: mutable.PriorityQueue[Hit] =
-    mutable.PriorityQueue.empty[Hit](worstFirst)
-
-  private def keeps(heap: mutable.PriorityQueue[Hit], e: Hit): Boolean = {
-    val (topGid, topScore, _) = heap.head
-    e._2 > topScore || (e._2 == topScore && e._1 < topGid)
-  }
+  override def zero: mutable.PriorityQueue[Hit] = TopKAggregator.emptyHeap
 
   override def reduce(
       heap: mutable.PriorityQueue[Hit],
-      e: Hit): mutable.PriorityQueue[Hit] = {
-    if (heap.size < k) heap.enqueue(e)
-    else if (keeps(heap, e)) { heap.dequeue(); heap.enqueue(e) }
-    heap
-  }
+      e: Hit): mutable.PriorityQueue[Hit] =
+    TopKAggregator.offer(heap, e, k)
 
   override def merge(
       a: mutable.PriorityQueue[Hit],
@@ -64,4 +50,32 @@ class TopKAggregator(k: Int)
 
   override def outputEncoder: Encoder[Seq[Hit]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Hit]]()
+}
+
+object TopKAggregator {
+
+  type Hit = (Long, Double, Array[Byte]) // (gid, score, payload)
+
+  // max-heap on (score asc, gid desc) ordering so the WORST kept element is
+  // on top and can be evicted in O(log k)
+  private val worstFirst: Ordering[Hit] =
+    Ordering.by[Hit, (Double, Long)] { case (gid, score, _) => (-score, gid) }
+
+  def emptyHeap: mutable.PriorityQueue[Hit] =
+    mutable.PriorityQueue.empty[Hit](worstFirst)
+
+  /** Offer `e` to a heap that keeps the `k` best hits (score desc, gid asc);
+    * the per-segment rerank of `graft.index.Search` keeps its rows in the
+    * same order with the same heap. */
+  def offer(heap: mutable.PriorityQueue[Hit], e: Hit, k: Int): mutable.PriorityQueue[Hit] = {
+    if (heap.size < k) heap.enqueue(e)
+    else {
+      val (topGid, topScore, _) = heap.head
+      if (e._2 > topScore || (e._2 == topScore && e._1 < topGid)) {
+        heap.dequeue()
+        heap.enqueue(e)
+      }
+    }
+    heap
+  }
 }

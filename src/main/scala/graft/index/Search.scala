@@ -7,51 +7,50 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core._
-import graft.functions.vector
+import graft.functions.{TopKAggregator, vector}
 
-/** Unified per-segment payload row for the sealed search cogroup: each row
-  * is either a PQ code (`code != null`) or an adjacency list
-  * (`neighbors != null`). Unioning codes+graph into one keyed stream lets a
-  * single binary cogroup against the codebooks table deliver everything a
-  * segment task needs — the codebooks never pass through the driver. */
+/** One row of a sealed segment's cached search state: a PQ code
+  * (`code != null`), an adjacency list (`neighbors != null`) or the
+  * segment's codebook (`centroids != null`). Codes, graph and codebook
+  * ride one keyed stream, so a single cogroup delivers everything a
+  * segment task needs to search — the codebooks never pass through the
+  * driver. */
 final case class SegPayloadRow(
-    segId: Int, vecId: Int, code: Array[Byte], neighbors: Array[Int])
+    segId: Int, vecId: Int, code: Array[Byte], neighbors: Array[Int],
+    pqM: Int, pqK: Int, subDim: Int, centroids: Array[Float])
 
 /** One replicated query row for the distributed-queries sealed search:
   * the query (queryId, qv) keyed to (segId, bucket) so it shuffles into
   * the segment task that owns its bucket. */
 final case class QueryRep(segId: Int, bucket: Int, queryId: Long, qv: Array[Float])
 
-/** Left-side row of the distributed-queries cogroup: either a segment
-  * payload row (`centroids == null`) or that segment's codebook row
-  * (`centroids != null`), replicated per query bucket. */
-final case class SealedSideRow(
-    segId: Int, bucket: Int, vecId: Int, code: Array[Byte],
-    neighbors: Array[Int], pqM: Int, pqK: Int, subDim: Int,
-    centroids: Array[Float])
-
 /**
  * Distributed KNN query (SURVEY.md §3.1): the Spark re-expression of the
  * reference's per-segment fan-out (FdbVectorIndex.query, :351-467).
  *
- * Plan shape (one job, three stages):
+ * Plan shape:
  *  1. driver: read manifest, collect + broadcast the query batch (small);
- *  2. SEALED/COMPACTING segments: cogroup(codebooks, codes ∪ graph) by
- *     segId — one task per segment loads its own codebook (T5/T6 cache →
- *     per-segment cogroup load; the driver never holds codebooks) and runs
- *     ADC + best-first expansion for every query (J2/J3), emitting approx
- *     candidates only (16 B/vector codes are scanned, never raw
- *     embeddings — the PQ bandwidth win at 100 TB);
+ *  2. SEALED/COMPACTING segments: one cogroup by segId of the cached
+ *     segment state (codebook ∪ codes ∪ graph) with the segment's live
+ *     rows of the vectors table (partition-pruned, `!deleted`). One task
+ *     per segment loads its codebook, codes and graph (T5/T6 cache →
+ *     per-segment cogroup load; the driver never holds codebooks), runs
+ *     ADC + best-first expansion for every query (J2/J3), then streams
+ *     the live rows once and scores each against the queries that have
+ *     it as a candidate, keeping the best `k·oversample` per query (the
+ *     exact rerank J5 and per-segment cap J8, as the reference's
+ *     searchSealedSegment → fetchExactAndScore does). The task holds
+ *     codes + graph, never the segment's raw vectors, and no candidate
+ *     leaves it;
  *     ACTIVE/PENDING segments: brute-force scan (J1) via broadcast-join +
- *     codegen'd distance, no candidate stage;
- *  3. exact rerank of sealed candidates (J5): semi-join back to the
- *     vectors table (partition-pruned on segId), codegen'd exact distance,
- *     then per-segment cap and global top-k merge (J7/J8) with window
- *     functions; `gid` is the deterministic tie-break.
+ *     codegen'd distance;
+ *  3. global top-k merge (J7) over both paths: a bounded-heap aggregator
+ *     (or a window); `gid` is the deterministic tie-break.
  *
- * WRITING segments are invisible (F2); deleted rows are dropped at rerank
+ * WRITING segments are invisible (F2); deleted rows never reach the rerank
  * (F1); scores follow the reference conventions exactly (L2: -distance;
- * COSINE: similarity, distance = 1 - similarity).
+ * COSINE: similarity, distance = 1 - similarity), bit-identical to the
+ * codegen'd expressions of [[scored]].
  */
 object Search {
 
@@ -83,8 +82,7 @@ object Search {
   // only, and the synthetic equals/copy of a case class is dead weight
   private[index] final class CachedInputs(
       val version: String,
-      val payload: org.apache.spark.sql.Dataset[SegPayloadRow],
-      val codebooks: org.apache.spark.sql.Dataset[CodebookRow]) {
+      val payload: org.apache.spark.sql.Dataset[SegPayloadRow]) {
     /** Updated on every hit — the expireAfterAccess clock. */
     var lastAccess: Long = 0L
   }
@@ -133,10 +131,8 @@ object Search {
   private def release(e: CachedInputs): Unit =
     // an entry from a stopped context has nothing to release — its blocks
     // died with the context, and unpersist would throw
-    if (!e.payload.sparkSession.sparkContext.isStopped) {
+    if (!e.payload.sparkSession.sparkContext.isStopped)
       e.payload.unpersist(blocking = false)
-      e.codebooks.unpersist(blocking = false)
-    }
 
   /** Park a no-longer-current entry for deferred release (see graceNanos). */
   private def parkSuperseded(path: String, e: CachedInputs, now: Long): Unit =
@@ -199,8 +195,7 @@ object Search {
       spark: SparkSession,
       store: IndexStore,
       sealedSegs: Seq[Int],
-      version: String): (org.apache.spark.sql.Dataset[SegPayloadRow],
-        org.apache.spark.sql.Dataset[CodebookRow]) = inputCache.synchronized {
+      version: String): org.apache.spark.sql.Dataset[SegPayloadRow] = inputCache.synchronized {
     import org.apache.spark.storage.StorageLevel
     import spark.implicits._
     val now = clock()
@@ -218,23 +213,21 @@ object Search {
         // order, so overflow eviction below sees true LRU order
         inputCache.remove(store.path)
         inputCache.put(store.path, e)
-        (e.payload, e.codebooks)
+        e.payload
       case stale =>
         stale.foreach { e =>
           inputCache.remove(store.path)
           parkSuperseded(store.path, e, now)
         }
-        val cb = store.readCodebooks(spark)
-          .filter(col("segId").isin(sealedSegs: _*)).as[CodebookRow]
+        val inSealed = col("segId").isin(sealedSegs: _*)
+        val payload = store.readCodes(spark).filter(inSealed).as[CodeRow]
+          .map(c => SegPayloadRow(c.segId, c.vecId, c.code, null, 0, 0, 0, null))
+          .unionByName(store.readGraph(spark).filter(inSealed).as[GraphRow]
+            .map(g => SegPayloadRow(g.segId, g.vecId, null, g.neighbors, 0, 0, 0, null)))
+          .unionByName(store.readCodebooks(spark).filter(inSealed).as[CodebookRow]
+            .map(c => SegPayloadRow(c.segId, -1, null, null, c.m, c.k, c.subDim, c.centroids)))
           .persist(StorageLevel.MEMORY_AND_DISK)
-        val payload = store.readCodes(spark)
-          .filter(col("segId").isin(sealedSegs: _*)).as[CodeRow]
-          .map(c => SegPayloadRow(c.segId, c.vecId, c.code, null))
-          .unionByName(store.readGraph(spark)
-            .filter(col("segId").isin(sealedSegs: _*)).as[GraphRow]
-            .map(g => SegPayloadRow(g.segId, g.vecId, null, g.neighbors)))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val entry = new CachedInputs(version, payload, cb)
+        val entry = new CachedInputs(version, payload)
         entry.lastAccess = now
         inputCache.put(store.path, entry)
         while (inputCache.size > maxCachedStores) {
@@ -242,7 +235,7 @@ object Search {
           inputCache.remove(oldPath)
           parkSuperseded(oldPath, old, now)
         }
-        (payload, cb)
+        payload
     }
   }
 
@@ -297,7 +290,7 @@ object Search {
           .select(col("queryId"), col("segId"), col("gid"), col("score"), col("distance"), col("payload"))
       }
 
-    // ---- sealed path: per-segment ADC + graph expansion (J2/J3) ---------
+    // ---- sealed path: per-segment search and exact rerank (J2/J3/J5) -----
     val sealedScored: DataFrame =
       if (sealedSegs.isEmpty) emptyResults(spark)
       else {
@@ -306,76 +299,126 @@ object Search {
         // SegmentCaches.java:37-84) — never collected to the driver. At
         // production shape (dim 768, pqM 16, pqK 256) one codebook is
         // ~786 KB; at 10k sealed segments a driver collect+broadcast would
-        // hold ~8 GB per query call. Instead the codebooks table (one row
-        // per segment) rides its own tiny shuffle keyed by segId into the
-        // same cogroup that already co-locates codes+graph.
-        val (payload, cbs) = sealedInputs(spark, store, sealedSegs, manifestVersion)
-        val cbK = cbs.groupByKey(_.segId)
-        val payloadK = payload.groupByKey(_.segId)
+        // hold ~8 GB per query call. Instead each codebook rides the
+        // cached state stream with its segment's codes and graph.
+        val stateK = sealedInputs(spark, store, sealedSegs, manifestVersion)
+          .groupByKey(_.segId)
+        val liveK = vectors
+          .filter(col("segId").isin(sealedSegs: _*))
+          .filter(!col("deleted"))
+          .groupByKey(_.segId)
 
         // the query batch enters in bounded chunks: one cogroup per chunk,
         // unioned. A single cogroup looping the WHOLE batch makes every
         // segment task a straggler proportional to batch size; chunking
         // bounds per-task time AND parallelizes chunks across the
-        // executor pool (the payload is persisted, so the per-chunk
-        // re-shuffle reads cached blocks, not parquet). Batches up to
-        // `queryChunkSize` keep the exact single-cogroup plan.
+        // executor pool (the state is persisted, so its per-chunk
+        // re-shuffle reads cached blocks, not parquet; the chunks of a
+        // Catalyst union reuse one exchange of the vectors side). Batches
+        // up to `queryChunkSize` keep the exact single-cogroup plan.
         val chunks = // one empty chunk keeps the empty-batch plan shape
           if (queries.isEmpty) Seq(Array.empty[(Long, Array[Float])])
           else queries.grouped(queryChunkSize).toSeq
-        val chunkCandidates = chunks.map { chunk =>
+        val chunkScored = chunks.map { chunk =>
           val qB = spark.sparkContext.broadcast(chunk)
-          // codebook side first (left) — one row, read before the bulk stream
-          cbK.cogroup(payloadK) { (segId, cbs, rows) =>
-            if (!cbs.hasNext) Iterator.empty // missing codebook → segment yields nothing
-            else {
-              val cbr = cbs.next()
-              val cb = Pq.Codebook(cbr.m, cbr.k, cbr.subDim, cbr.centroids)
-              val codeMap = new mutable.HashMap[Int, Array[Byte]]()
-              val adj = new mutable.HashMap[Int, Array[Int]]()
-              rows.foreach { r =>
-                if (r.code != null) codeMap.put(r.vecId, r.code)
-                else adj.put(r.vecId, r.neighbors)
-              }
-              // accessor form, not a case-lambda: the tuple is total here
-              // and scalac's partial-function scaffold is pure dead weight
-              // on the per-query hot path
-              qB.value.iterator.flatMap { t =>
-                SegmentSearch.searchSealed(segId, cb, t._2, codeMap, adj, perSegLimit, params, phaseSink)
-                  .iterator.map(a => (t._1, segId, a.vecId))
-              }
-            }
-          }.toDF("queryId", "segId", "vecId")
+          stateK.cogroup(liveK) { (segId, state, live) =>
+            val seg = new LoadedSegment(state)
+            if (seg.cb == null) Iterator.empty // missing codebook → segment yields nothing
+            else rerankSegment(segId, seg, qB.value, live, perSegLimit, params, metric, phaseSink)
+          }.toDF("queryId", "segId", "gid", "score", "distance", "payload")
         }
         // small batches: plain Catalyst union (keeps the exact committed
         // plan shape). Past `chunkUnionPlanThreshold` chunks, fuse into
         // one LogicalRDD leaf — driver planning time stays flat instead
         // of growing with an N-subtree Union the optimizer re-walks.
-        val fuse = chunkCandidates.lengthCompare(chunkUnionPlanThreshold) > 0
+        val fuse = chunkScored.lengthCompare(chunkUnionPlanThreshold) > 0
         lastChunkPlanFused = fuse
-        val candidates =
-          if (!fuse) chunkCandidates.reduce(_ unionByName _)
+        val rows =
+          if (!fuse) chunkScored.reduce(_ unionByName _)
           else org.apache.spark.sql.graft.SparkShims
-            .unionAsSingleLeaf(spark, chunkCandidates)
-
-        // exact rerank (J5): candidates ⋈ vectors (pruned to sealed segs).
-        // Shuffle hash join, NOT broadcast: candidates are O(queries ×
-        // segments × k·oversample) rows — at 100× segment count a broadcast
-        // would exceed driver/executor limits; a hash shuffle on
-        // (segId, vecId) scales linearly and the vectors side is already
-        // partition-pruned.
-        val sealedVectors = vectors.filter(col("segId").isin(sealedSegs: _*))
-        val joined = sealedVectors
-          .join(candidates.hint("shuffle_hash"), Seq("segId", "vecId"))
-          .filter(!col("deleted"))
-          .join(broadcast(queriesDf), Seq("queryId"))
-        scored(joined, metric, params.normalizeOnRead)
-          .select(col("queryId"), col("segId"), col("gid"), col("score"), col("distance"), col("payload"))
-          .observe(s"graft_sealed_rerank_$obsTag", count(lit(1)).as("rows"))
+            .unionAsSingleLeaf(spark, chunkScored)
+        rows.observe(s"graft_sealed_rerank_$obsTag", count(lit(1)).as("rows"))
       }
 
-    capAndMerge(spark, bruteScored.unionByName(sealedScored), k, perSegLimit,
-      metric, useAggregatorMerge, obsTag)
+    merge(spark, bruteScored.unionByName(sealedScored), k, metric,
+      useAggregatorMerge, obsTag)
+  }
+
+  /** A sealed segment's search state, loaded from its cached rows: the
+    * codebook (null when the segment has none), codes and adjacency. */
+  private final class LoadedSegment(rows: Iterator[SegPayloadRow]) {
+    var cb: Pq.Codebook = null
+    val codes = new mutable.HashMap[Int, Array[Byte]]()
+    val adj = new mutable.HashMap[Int, Array[Int]]()
+    rows.foreach { r =>
+      if (r.centroids != null) cb = Pq.Codebook(r.pqM, r.pqK, r.subDim, r.centroids)
+      else if (r.code != null) codes.put(r.vecId, r.code)
+      else adj.put(r.vecId, r.neighbors)
+    }
+  }
+
+  /** Search and exact rerank of one sealed segment for a chunk of queries,
+    * inside its task (J2/J3/J5/J8; reference: searchSealedSegment →
+    * fetchExactAndScore, FdbVectorIndex.java:730-837,970-1046). Runs the
+    * approximate search for every query, then streams the segment's live
+    * rows once, scoring each row against the queries that have it as a
+    * candidate, and keeps the best `perSegLimit` per query in a heap
+    * ordered exactly as [[TopKAggregator]] (score desc, gid asc). The raw
+    * vectors are never held: memory is the state, the candidate lists and
+    * the heaps. A candidate listed twice for one query (repeated random
+    * pivots) is scored twice, as a join would.
+    * Emits (queryId, segId, gid, score, distance, payload). */
+  private def rerankSegment(
+      segId: Int,
+      seg: LoadedSegment,
+      queries: Array[(Long, Array[Float])],
+      live: Iterator[VectorRecord],
+      perSegLimit: Int,
+      params: SearchParams,
+      metric: Metric,
+      phases: SegmentSearch.PhaseSink)
+      : Iterator[(Long, Int, Long, Double, Double, Array[Byte])] = {
+    // vecId → indexes of the queries that have it as a candidate
+    val wanted = new mutable.HashMap[Int, mutable.ArrayBuffer[Int]]()
+    queries.indices.foreach { qi =>
+      SegmentSearch.searchSealed(segId, seg.cb, queries(qi)._2, seg.codes, seg.adj,
+        perSegLimit, params, phases)
+        .foreach(a => wanted.getOrElseUpdate(a.vecId, mutable.ArrayBuffer.empty[Int]) += qi)
+    }
+    if (wanted.isEmpty) return Iterator.empty
+
+    val l2 = metric eq Metric.L2
+    val qNorms =
+      if (!l2 && params.normalizeOnRead) queries.map(t => ExactScore.norm(t._2)) else null
+    val heaps = Array.fill(queries.length)(TopKAggregator.emptyHeap)
+    val t0 = System.nanoTime()
+    var scoredN = 0
+    live.foreach { r =>
+      val qs = wanted.getOrElse(r.vecId, null)
+      if (qs != null) {
+        val eNorm = if (qNorms != null) ExactScore.norm(r.embedding) else 0.0
+        var j = 0
+        while (j < qs.length) {
+          val q = qs(j)
+          val qv = queries(q)._2
+          val score =
+            if (l2) -math.sqrt(ExactScore.l2Squared(r.embedding, qv))
+            else if (qNorms != null) {
+              val denom = eNorm * qNorms(q)
+              if (denom == 0.0) 0.0 else ExactScore.dot(r.embedding, qv) / denom
+            } else ExactScore.cosine(r.embedding, qv)
+          TopKAggregator.offer(heaps(q), (r.gid, score, r.payload), perSegLimit)
+          scoredN += 1
+          j += 1
+        }
+      }
+    }
+    phases.rerank(System.nanoTime() - t0, scoredN)
+    Iterator.range(0, queries.length).flatMap { q =>
+      heaps(q).iterator.map { h =>
+        (queries(q)._1, segId, h._1, h._2, if (l2) -h._2 else 1.0 - h._2, h._3)
+      }
+    }
   }
 
   /** Distributed-queries KNN: identical semantics and results to
@@ -387,15 +430,18 @@ object Search {
     * Layout (the block-nested-loop shape a 1000-executor cluster wants):
     * queries are hashed into `Q = ceil(M / queriesPerTask)` buckets and
     * replicated once per sealed segment (each replica is one (id, qv) row
-    * — the small side); the per-segment codes∪graph payload and codebook
-    * are replicated once per BUCKET (the big side, so Q is chosen to keep
-    * its replication factor minimal while bounding per-task query count).
+    * — the small side); the cached per-segment state stream (codebook ∪
+    * codes ∪ graph) is replicated once per BUCKET (the big side, so Q is
+    * chosen to keep its replication factor minimal while bounding
+    * per-task query count).
     * One cogroup on (segId, bucket) then gives every task exactly one
     * segment's state plus ≤ queriesPerTask queries — per-task memory and
     * time are both bounded regardless of M, and the M×S search work is
     * spread across Q×S tasks. Rerank joins candidates back to the
     * partition-pruned vectors table and to the (distributed) queries on
-    * queryId — no broadcast anywhere, AQE free to pick strategies.
+    * queryId — no broadcast anywhere, AQE free to pick strategies. (The
+    * in-task rerank of [[query]] would need each segment's raw vectors in
+    * every one of its Q bucket tasks, so this path keeps the join.)
     *
     * The single `count()` sizing job on the queries table is the one
     * driver-side action: the bucket count must be fixed before the
@@ -449,35 +495,23 @@ object Search {
         val numBuckets = math.max(1L,
           (qCount + queriesPerTask - 1) / queriesPerTask).toInt
 
-        val (payload, cbs) = sealedInputs(spark, store, sealedSegs, manifestVersion)
+        val payload = sealedInputs(spark, store, sealedSegs, manifestVersion)
         val segs = sealedSegs.toArray
         val qRep = q.as[(Long, Array[Float])].flatMap { t =>
           // floorMod: Int.MinValue.abs is still negative
           val b = java.lang.Math.floorMod(java.lang.Long.hashCode(t._1), numBuckets)
           segs.iterator.map(sid => QueryRep(sid, b, t._1, t._2))
         }
-        val leftSide = payload.flatMap { r =>
-          Iterator.range(0, numBuckets).map(b =>
-            SealedSideRow(r.segId, b, r.vecId, r.code, r.neighbors, 0, 0, 0, null))
-        }.unionByName(cbs.flatMap { c =>
-          Iterator.range(0, numBuckets).map(b =>
-            SealedSideRow(c.segId, b, -1, null, null, c.m, c.k, c.subDim, c.centroids))
-        })
+        // the state stream replicated once per query bucket: (bucket, row)
+        val leftSide = payload.flatMap(r => Iterator.range(0, numBuckets).map(b => (b, r)))
 
-        val candidates = leftSide.groupByKey(r => (r.segId, r.bucket))
+        val candidates = leftSide.groupByKey(t => (t._2.segId, t._1))
           .cogroup(qRep.groupByKey(r => (r.segId, r.bucket))) { (key, rows, qs) =>
             val segId = key._1
-            var cb: Pq.Codebook = null
-            val codeMap = new mutable.HashMap[Int, Array[Byte]]()
-            val adj = new mutable.HashMap[Int, Array[Int]]()
-            rows.foreach { r =>
-              if (r.centroids != null) cb = Pq.Codebook(r.pqM, r.pqK, r.subDim, r.centroids)
-              else if (r.code != null) codeMap.put(r.vecId, r.code)
-              else adj.put(r.vecId, r.neighbors)
-            }
-            if (cb == null) Iterator.empty // missing codebook → segment yields nothing
+            val seg = new LoadedSegment(rows.map(_._2))
+            if (seg.cb == null) Iterator.empty // missing codebook → segment yields nothing
             else qs.flatMap { qr =>
-              SegmentSearch.searchSealed(segId, cb, qr.qv, codeMap, adj, perSegLimit, params, phaseSink)
+              SegmentSearch.searchSealed(segId, seg.cb, qr.qv, seg.codes, seg.adj, perSegLimit, params, phaseSink)
                 .iterator.map(a => (qr.queryId, segId, a.vecId))
             }
           }.toDF("queryId", "segId", "vecId")
@@ -498,36 +532,33 @@ object Search {
           .observe(s"graft_dist_rerank_$obsTag", count(lit(1)).as("rows"))
       }
 
-    capAndMerge(spark, bruteScored.unionByName(sealedScored), k, perSegLimit,
-      metric, useAggregatorMerge = true, obsTag)
+    merge(spark, bruteScored.unionByName(sealedScored), k, metric,
+      useAggregatorMerge = true, obsTag)
   }
 
-  /** Per-segment cap (J8) + global top-k merge (J7) — the shared tail of
-    * both the bounded-batch and the distributed-queries paths. */
-  private def capAndMerge(
+  /** Global top-k merge (J7) — the shared tail of both the bounded-batch
+    * and the distributed-queries paths. No per-segment cap (J8) runs
+    * here: it keeps the best `k·oversample ≥ k` rows of each (query,
+    * segment) in the same (score desc, gid asc) order as this merge, so
+    * it cannot change the top-k. The bounded-batch sealed path applies it
+    * inside its segment tasks, where it bounds the rows they emit. */
+  private def merge(
       spark: SparkSession,
       all: DataFrame,
       k: Int,
-      perSegLimit: Int,
       metric: Metric,
       useAggregatorMerge: Boolean,
       obsTag: Long): DataFrame = {
-    val perSeg = Window.partitionBy(col("queryId"), col("segId"))
-      .orderBy(col("score").desc, col("gid"))
-    val capped = all
-      .withColumn("segRank", row_number().over(perSeg))
-      .filter(col("segRank") <= perSegLimit)
-
     if (useAggregatorMerge) {
       // scale path: bounded-heap top-k Aggregator — partial aggregation
       // sends ≤ k hits per (query, partition) into the merge shuffle
-      // instead of every capped candidate (SURVEY.md §7.3). The payload
+      // instead of every candidate (SURVEY.md §7.3). The payload
       // rides through the heap and distance derives from score, so the
       // merge output IS the final result — the candidate subtree (segment
       // search + rerank) is evaluated exactly once.
       import spark.implicits._
-      val topkAgg = new graft.functions.TopKAggregator(k)
-      val merged = capped.select(col("queryId"), col("gid"), col("score"), col("payload"))
+      val topkAgg = new TopKAggregator(k)
+      val merged = all.select(col("queryId"), col("gid"), col("score"), col("payload"))
         .as[(Long, Long, Double, Array[Byte])]
         .groupByKey(_._1)
         .mapValues(r => (r._2, r._3, r._4))
@@ -547,7 +578,7 @@ object Search {
     } else {
       val global = Window.partitionBy(col("queryId"))
         .orderBy(col("score").desc, col("gid"))
-      capped
+      all
         .withColumn("rank", row_number().over(global))
         .filter(col("rank") <= k)
         .select(col("queryId"), col("gid"), col("score"), col("distance"), col("payload"), col("rank"))
@@ -581,6 +612,67 @@ object Search {
         } else vector.cosine_sim(col("embedding"), col("qv"))
       df.withColumn("score", sim).withColumn("distance", lit(1.0) - col("score"))
     }
+
+  /** Scalar exact-score kernels of the in-task rerank: the same loops as
+    * the `VectorExpressions` kernels [[scored]] plans (`L2SquaredDistance`,
+    * `DotProduct`, `CosineSimilarity`, `VectorNorm`) — double accumulation
+    * in index order over the first `min(len)` lanes (all lanes for the
+    * norm), `x` the row's embedding and `y` the query — so both paths score
+    * bit-identically. Deliberately not `Distances`, whose opt-in SIMD
+    * dispatch accumulates differently. */
+  private object ExactScore {
+    def l2Squared(x: Array[Float], y: Array[Float]): Double = {
+      val n = math.min(x.length, y.length)
+      var acc = 0.0
+      var i = 0
+      while (i < n) {
+        val d = x(i).toDouble - y(i).toDouble
+        acc += d * d
+        i += 1
+      }
+      acc
+    }
+
+    def dot(x: Array[Float], y: Array[Float]): Double = {
+      val n = math.min(x.length, y.length)
+      var acc = 0.0
+      var i = 0
+      while (i < n) {
+        acc += x(i).toDouble * y(i).toDouble
+        i += 1
+      }
+      acc
+    }
+
+    def norm(x: Array[Float]): Double = {
+      var acc = 0.0
+      var i = 0
+      while (i < x.length) {
+        val v = x(i).toDouble
+        acc += v * v
+        i += 1
+      }
+      math.sqrt(acc)
+    }
+
+    def cosine(x: Array[Float], y: Array[Float]): Double = {
+      val n = math.min(x.length, y.length)
+      var dot = 0.0
+      var na = 0.0
+      var nb = 0.0
+      var i = 0
+      while (i < n) {
+        val xv = x(i).toDouble
+        val yv = y(i).toDouble
+        dot += xv * yv
+        na += xv * xv
+        nb += yv * yv
+        i += 1
+      }
+      if (na == 0.0 || nb == 0.0) 0.0
+      else dot / (math.sqrt(na) * math.sqrt(nb))
+    }
+  }
 
   private def emptyResults(spark: SparkSession): DataFrame = {
     import spark.implicits._

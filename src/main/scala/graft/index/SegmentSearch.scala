@@ -21,13 +21,18 @@ object SegmentSearch {
   final case class Approx(vecId: Int, approx: Double)
 
   /** Per-phase instrumentation hook (reference: adcScanMs /
-    * graphTraversalMs meters around each phase, FdbVectorIndex.java:99-116,
-    * 787-837). Implementations must be serializable — the call site passes
-    * Spark-accumulator-backed sinks into executor tasks. */
+    * graphTraversalMs / rerankMs meters around each phase,
+    * FdbVectorIndex.java:99-116, 787-837). Implementations must be
+    * serializable — the call site passes Spark-accumulator-backed sinks
+    * into executor tasks. */
   trait PhaseSink extends Serializable {
     def adcScan(nanos: Long): Unit
     def traversal(nanos: Long): Unit
     def candidates(n: Int): Unit
+    /** One segment task's exact rerank: the nanoseconds of its pass over
+      * the segment's live rows and the (row, query) candidate pairs it
+      * scored. */
+    def rerank(nanos: Long, scored: Int): Unit
   }
 
   object PhaseSink {
@@ -35,6 +40,7 @@ object SegmentSearch {
       override def adcScan(nanos: Long): Unit = ()
       override def traversal(nanos: Long): Unit = ()
       override def candidates(n: Int): Unit = ()
+      override def rerank(nanos: Long, scored: Int): Unit = ()
     }
   }
 
@@ -197,7 +203,7 @@ object SegmentSearch {
    * Full sealed-segment pipeline for one query: ADC scan → auto-tune →
    * seed → expand → top-max(ef, k) candidates, ascending by approx
    * distance (reference: searchSealedSegment, FdbVectorIndex.java:730-837;
-   * the exact rerank happens in the distributed layer).
+   * the exact rerank runs after it in the same task, `Search.query`).
    */
   def searchSealed(
       segId: Int,

@@ -248,20 +248,25 @@ final class SegmentedIndex(val spark: SparkSession, val store: IndexStore) {
   def delete(gids: Seq[Long]): Manifest = {
     val m0 = manifest
     if (gids.isEmpty) return m0
-    val gidSet = gids.toSet
-    val gidB = spark.sparkContext.broadcast(gidSet)
+    // column predicates, not typed lambdas: the probe reads segId, gid and
+    // deleted only (no embedding is decoded), and the rewrite flips the
+    // flag in a projection instead of a decode/encode of every row. The
+    // probe collects one segId per live hit — no more rows than the caller
+    // passed gids — and counts them locally: one scan job, no shuffle.
+    val hit = col("gid").isInCollection(gids.distinct)
 
     val vectors = store.readVectors(spark)
     val touchedSegs = vectors
-      .filter(r => gidB.value.contains(r.gid) && !r.deleted)
-      .groupByKey(_.segId).count().collect().toMap
+      .filter(hit && !col("deleted"))
+      .select(col("segId")).as[Int].collect()
+      .groupMapReduce(identity)(_ => 1L)(_ + _)
 
     if (touchedSegs.isEmpty) return m0
     val segIds = touchedSegs.keys.toSeq
     val rewritten = vectors
       .filter(col("segId").isin(segIds: _*))
+      .withColumn("deleted", col("deleted") || hit)
       .as[VectorRecord]
-      .map(r => if (gidB.value.contains(r.gid)) r.copy(deleted = true) else r)
     store.overwriteVectorSegments(rewritten)
 
     val m1 = m0.copy(segments = m0.segments.map { s =>
@@ -277,10 +282,10 @@ final class SegmentedIndex(val spark: SparkSession, val store: IndexStore) {
   /** gid → (segId, vecId) resolution (S9); missing gids yield (-1,-1)
     * (reference: FdbVectorIndex.java:500-525). */
   def resolveIds(gids: Seq[Long]): Map[Long, (Int, Int)] = {
-    val gidB = spark.sparkContext.broadcast(gids.toSet)
     val found = store.readVectors(spark)
-      .filter(r => gidB.value.contains(r.gid) && !r.deleted)
-      .map(r => (r.gid, r.segId, r.vecId))
+      .filter(col("gid").isInCollection(gids.distinct) && !col("deleted"))
+      .select(col("gid"), col("segId"), col("vecId"))
+      .as[(Long, Int, Int)]
       .collect()
       .map { case (g, s, v) => g -> (s, v) }
       .toMap

@@ -80,13 +80,15 @@ object HistogramAccumulator {
  * Spark re-expression: per-phase work inside executor tasks is aggregated
  * through `LongAccumulator` totals AND bounded per-invocation histograms
  * (one observation per (query, sealed segment) kernel call), both visible
- * in the Spark UI and to the driver after each job. The declarative
- * stages (exact rerank, top-k merge) are whole-stage-codegen joins —
- * per-row timers would break codegen, so their wall-time lives in the
- * per-stage SQL metrics while their per-(query, segment) WORKLOAD
- * distribution is captured here as the candidate-count histogram (rerank
- * input rows == emitted candidates), and their row counts surface through
- * `Dataset.observe` metrics readable from any `QueryExecutionListener`.
+ * in the Spark UI and to the driver after each job. The exact rerank of
+ * the bounded-batch sealed path runs inside the segment tasks, so its time
+ * and the candidates it scored are totals here too; its per-(query,
+ * segment) input volume is the candidate-count histogram. The declarative
+ * stages (the distributed-queries rerank join, the top-k merge) are
+ * whole-stage-codegen plans — per-row timers would break codegen, so their
+ * wall-time lives in the per-stage SQL metrics, and their row counts (and
+ * the rows the sealed rerank emits) surface through `Dataset.observe`
+ * metrics readable from any `QueryExecutionListener`.
  */
 final class EngineMetrics private[util] (
     /** Nanoseconds spent ADC-scanning codes (LUT build + table scan). */
@@ -103,7 +105,14 @@ final class EngineMetrics private[util] (
     val graphTraversalHist: HistogramAccumulator,
     /** Per-invocation emitted-candidate-count distribution (== exact-rerank
       * input volume per (query, segment)). */
-    val candidatesHist: HistogramAccumulator) extends Serializable {
+    val candidatesHist: HistogramAccumulator,
+    /** Nanoseconds the sealed segment tasks spent in the exact rerank:
+      * one pass over each segment's live rows, scoring candidates. */
+    val rerankNanos: LongAccumulator,
+    /** (row, query) candidate pairs the exact rerank scored. For
+      * `Search.query` it equals the `sealedCandidates` those searches
+      * added when no candidate is deleted. */
+    val rerankScored: LongAccumulator) extends Serializable {
 
   /** Bridge into the per-(query, segment) kernel. */
   def phaseSink: PhaseSink = new EngineMetrics.AccumulatorSink(this)
@@ -142,7 +151,9 @@ object EngineMetrics {
         sc.longAccumulator("graft.query.sealedSegmentsSearched"),
         hist("graft.query.adcScanHist"),
         hist("graft.query.graphTraversalHist"),
-        hist("graft.query.candidatesHist"))
+        hist("graft.query.candidatesHist"),
+        sc.longAccumulator("graft.query.rerankNanos"),
+        sc.longAccumulator("graft.query.rerankScored"))
       perSession.put(spark, em)
     }
     em
@@ -161,6 +172,10 @@ object EngineMetrics {
       em.sealedCandidates.add(n.toLong)
       em.sealedSegmentsSearched.add(1L)
       em.candidatesHist.add(n.toLong)
+    }
+    override def rerank(nanos: Long, scored: Int): Unit = {
+      em.rerankNanos.add(nanos)
+      em.rerankScored.add(scored.toLong)
     }
   }
 }
@@ -195,6 +210,8 @@ object MetricsExport {
       counter("graft.query.graphTraversalNanos", em.graphTraversalNanos.value),
       counter("graft.query.sealedCandidates", em.sealedCandidates.value),
       counter("graft.query.sealedSegmentsSearched", em.sealedSegmentsSearched.value),
+      counter("graft.query.rerankNanos", em.rerankNanos.value),
+      counter("graft.query.rerankScored", em.rerankScored.value),
       hist("graft.query.adcScanHist", em.adcScanHist.value),
       hist("graft.query.graphTraversalHist", em.graphTraversalHist.value),
       hist("graft.query.candidatesHist", em.candidatesHist.value))

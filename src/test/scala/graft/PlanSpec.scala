@@ -79,12 +79,23 @@ class PlanSpec extends AnyFunSuite {
       p.contains("BroadcastHashJoin"), s"rerank lost its equi-join:\n$p")
   }
 
-  test("sealed KNN rerank joins candidates via shuffle hash, not broadcast") {
-    // the candidate set is O(queries × segments × k·oversample) — at 100×
-    // segment count it no longer fits a broadcast; the rerank must hash-
-    // shuffle on (segId, vecId) (Search.scala rerank join)
+  test("sealed KNN reranks inside the segment task: no candidate join, no window, pruned vectors scan") {
+    // the candidate set is O(queries × segments × k·oversample); it must
+    // never leave the segment task — no join over candidates (hash or
+    // broadcast), and no per-segment cap window after it. The task's
+    // other input is the vectors table, partition-pruned to the sealed
+    // segments (Search.query sealed path)
     val p = plan("vec_knn_sealed")
-    assert(p.contains("ShuffledHashJoin"))
+    Seq("ShuffledHashJoin", "SortMergeJoin", "BroadcastHashJoin", "Window").foreach { op =>
+      assert(!p.contains(op), s"sealed KNN plan grew a $op:\n$p")
+    }
+    val sealedIds = graft.operators.VectorQueries.sealedStore(spark, dir).readManifest()
+      .segments.filter(_.state == graft.core.SegmentState.Sealed).map(_.segId).sorted
+    assert(sealedIds.nonEmpty)
+    val pruned = ("segId#\\d+ IN \\(" + sealedIds.mkString(",") + "\\)").r
+    assert(p.linesIterator.exists(l => l.contains("FileScan") && l.contains("/vectors") &&
+      l.contains("PartitionFilters:") && pruned.findFirstIn(l).isDefined),
+      s"vectors scan not pruned to sealed segments $sealedIds:\n$p")
   }
 
   test("repeated sealed queries reuse cached codes/graph inputs (block manager as SegmentCaches)") {

@@ -39,6 +39,8 @@ class MetricsSpec extends AnyFunSuite {
     val trav0 = em.graphTraversalNanos.value
     val cand0 = em.sealedCandidates.value
     val segs0 = em.sealedSegmentsSearched.value
+    val rerank0 = em.rerankNanos.value
+    val scored0 = em.rerankScored.value
     val adcHist0 = HistogramAccumulator.total(em.adcScanHist.value)
 
     val queries = df.filter(col("id") < 4)
@@ -53,13 +55,21 @@ class MetricsSpec extends AnyFunSuite {
     assert(em.sealedCandidates.value > cand0)
     // 4 queries × 3 sealed segments
     assert(em.sealedSegmentsSearched.value >= segs0 + 12)
+    // the in-task rerank phase: timed, and with nothing deleted it scores
+    // every candidate the searches emitted
+    assert(em.rerankNanos.value > rerank0)
+    assert(em.rerankScored.value - scored0 == em.sealedCandidates.value - cand0)
 
-    // observable plan metrics: rerank row count and final top-k count
-    // (names carry a per-invocation suffix so query plans stay composable)
+    // observable plan metrics: rows the sealed segment tasks emit and the
+    // final top-k count (names carry a per-invocation suffix so query
+    // plans stay composable). Each (query, segment) emits at most
+    // k·oversample rows and at least the k it contributes to.
     val om = res.queryExecution.observedMetrics
     val rerank = om.collectFirst { case (k, v) if k.startsWith("graft_sealed_rerank") => v }
     val merge = om.collectFirst { case (k, v) if k.startsWith("graft_topk_merge") => v }
-    assert(rerank.exists(_.getLong(0) > 0))
+    val perSegLimit = 5L * math.max(1, store.readManifest().meta.oversample)
+    assert(rerank.exists(r => r.getLong(0) >= 12L * 5 && r.getLong(0) <= 12L * perSegLimit),
+      s"sealed rerank rows $rerank")
     assert(merge.exists(_.getLong(0) == 20L))
 
     // per-invocation distributions: one observation per (query, segment)
@@ -90,11 +100,15 @@ class MetricsSpec extends AnyFunSuite {
       "metrics.`graft.query.adcScanNanos`.value",
       "metrics.`graft.query.adcScanHist`.count",
       "metrics.`graft.query.adcScanHist`.p50",
-      "metrics.`graft.query.adcScanHist`.p99").head()
+      "metrics.`graft.query.adcScanHist`.p99",
+      "metrics.`graft.query.rerankNanos`.value",
+      "metrics.`graft.query.rerankScored`.value").head()
     assert(row.getLong(0) == 1234L)
     assert(row.getLong(1) == em.adcScanNanos.value)
     assert(row.getLong(2) == HistogramAccumulator.total(em.adcScanHist.value))
     assert(row.getLong(3) > 0L && row.getLong(4) >= row.getLong(3))
+    assert(row.getLong(5) == em.rerankNanos.value)
+    assert(row.getLong(6) == em.rerankScored.value)
     assert(lines.get(1).startsWith("""{"ts_ms":5678,"""))
   }
 
