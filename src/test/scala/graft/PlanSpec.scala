@@ -79,7 +79,7 @@ class PlanSpec extends AnyFunSuite {
       p.contains("BroadcastHashJoin"), s"rerank lost its equi-join:\n$p")
   }
 
-  test("sealed KNN reranks inside the segment task: no candidate join, no window, pruned vectors scan") {
+  test("sealed KNN reranks in the segment task: no candidate join or window, pruned scan") {
     // the candidate set is O(queries × segments × k·oversample); it must
     // never leave the segment task — no join over candidates (hash or
     // broadcast), and no per-segment cap window after it. The task's
