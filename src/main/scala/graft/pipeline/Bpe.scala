@@ -21,7 +21,7 @@ import scala.collection.mutable.ArrayBuffer
  * single row, one distributed merge application (narrow map). Iteration
  * state is localCheckpoint'ed per round so the plan stays O(1) deep —
  * same recipe as the other driver-loop operators
- * (Dedup.resolveClusters, GraphAlgos.pageRankFixedPoint).
+ * (Dedup.duplicateClusters, GraphAlgos.pageRankFixedPoint).
  *
  * Determinism: best pair = max count, ties broken lexicographically on
  * (left, right); merge application is leftmost-greedy non-overlapping.
@@ -138,59 +138,63 @@ object Bpe {
     val mergedSymbols = scala.collection.mutable.Set.empty[String]
     var rounds = 0
     var done = false
-    while (merges.length < numMerges && !done) {
-      rounds += 1
-      // bounded driver collect: a few hundred (string, string, long)
-      // rows regardless of corpus size — the batch decision needs the
-      // sorted head of the pair table, never the table
-      val fetch = math.max(batchN * 8, 64)
-      val top = vocab
-        .flatMap { case (syms, w) =>
-          syms.iterator.sliding(2).withPartial(false)
-            .map(p => (p.head, p(1), w))
+    // the last vocab (the first, when round 1 stops) is released however
+    // the loop ends — a round releases only the vocab it replaces
+    try {
+      while (merges.length < numMerges && !done) {
+        rounds += 1
+        // bounded driver collect: a few hundred (string, string, long)
+        // rows regardless of corpus size — the batch decision needs the
+        // sorted head of the pair table, never the table
+        val fetch = math.max(batchN * 8, 64)
+        val top = vocab
+          .flatMap { case (syms, w) =>
+            syms.iterator.sliding(2).withPartial(false)
+              .map(p => (p.head, p(1), w))
+          }
+          .toDF("l", "r", "w")
+          .groupBy(col("l"), col("r")).agg(sum(col("w")).as("n"))
+          .orderBy(col("n").desc, col("l"), col("r"))
+          .limit(fetch)
+          .as[(String, String, Long)]
+          .collect()
+        val maxTake = math.min(batchN, numMerges - merges.length)
+        val accepted = ArrayBuffer.empty[(String, String, Long)]
+        val used = scala.collection.mutable.Set.empty[String]
+        var nextCount = -1L // count of the first NON-accepted candidate
+        var i = 0
+        while (nextCount < 0L && i < top.length) {
+          val (l, r, n) = top(i)
+          if (n < minCount) nextCount = 0L // below support: not a live competitor
+          else if (accepted.length >= maxTake) nextCount = n
+          else if (used(l) || used(r) || used(l + r) || mergedSymbols(l + r))
+            nextCount = n
+          else {
+            accepted += ((l, r, n))
+            used += l; used += r; used += (l + r)
+          }
+          i += 1
         }
-        .toDF("l", "r", "w")
-        .groupBy(col("l"), col("r")).agg(sum(col("w")).as("n"))
-        .orderBy(col("n").desc, col("l"), col("r"))
-        .limit(fetch)
-        .as[(String, String, Long)]
-        .collect()
-      val maxTake = math.min(batchN, numMerges - merges.length)
-      val accepted = ArrayBuffer.empty[(String, String, Long)]
-      val used = scala.collection.mutable.Set.empty[String]
-      var nextCount = -1L // count of the first NON-accepted candidate
-      var i = 0
-      while (nextCount < 0L && i < top.length) {
-        val (l, r, n) = top(i)
-        if (n < minCount) nextCount = 0L // below support: not a live competitor
-        else if (accepted.length >= maxTake) nextCount = n
-        else if (used(l) || used(r) || used(l + r) || mergedSymbols(l + r))
-          nextCount = n
+        if (nextCount < 0L)
+          // ran off the fetched slice: if it was full, unseen pairs are
+          // bounded by the last row's count; if short, the table is
+          // exhausted and nothing below support competes
+          nextCount = if (top.length >= fetch) top.last._3 else 0L
+        var keep = accepted.takeWhile(_._3 > nextCount).toSeq
+        if (keep.isEmpty && accepted.nonEmpty) keep = Seq(accepted.head)
+        if (keep.isEmpty) done = true
         else {
-          accepted += ((l, r, n))
-          used += l; used += r; used += (l + r)
+          val ms = keep.map(t => (t._1, t._2))
+          merges ++= ms
+          mergedSymbols ++= ms.map { case (l, r) => l + r }
+          val next = vocab
+            .map { case (syms, w) => (applyMerges(syms, ms), w) }
+            .localCheckpoint() // eager; plan becomes a LogicalRDD leaf
+          SparkShims.unpersistCheckpoint(vocab.toDF())
+          vocab = next
         }
-        i += 1
       }
-      if (nextCount < 0L)
-        // ran off the fetched slice: if it was full, unseen pairs are
-        // bounded by the last row's count; if short, the table is
-        // exhausted and nothing below support competes
-        nextCount = if (top.length >= fetch) top.last._3 else 0L
-      var keep = accepted.takeWhile(_._3 > nextCount).toSeq
-      if (keep.isEmpty && accepted.nonEmpty) keep = Seq(accepted.head)
-      if (keep.isEmpty) done = true
-      else {
-        val ms = keep.map(t => (t._1, t._2))
-        merges ++= ms
-        mergedSymbols ++= ms.map { case (l, r) => l + r }
-        val next = vocab
-          .map { case (syms, w) => (applyMerges(syms, ms), w) }
-          .localCheckpoint() // eager; plan becomes a LogicalRDD leaf
-        SparkShims.unpersistCheckpoint(vocab.toDF())
-        vocab = next
-      }
-    }
+    } finally SparkShims.unpersistCheckpoint(vocab.toDF())
     (merges.toSeq, rounds)
   }
 

@@ -5,7 +5,6 @@ import scala.util.Random
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.SparkShims
 
 import graft.functions.{text, vector}
 
@@ -753,8 +752,11 @@ object Dedup {
    * O(log diameter) rounds, not O(diameter) (a 1000-link drift chain
    * converges in ~10 rounds). Every step is an equi-join +
    * partial-aggregating groupBy — linear in |E| and fully parallel, the
-   * standard large-scale CC recipe. `localCheckpoint` per round cuts the
-   * iterative lineage so plans stay flat at any round count.
+   * standard large-scale CC recipe. The rounds are one fixpoint
+   * [[GraphAlgos.GraphScope.iterate]] loop: both steps' results are
+   * checkpointed (plans stay flat at any round count), the scope releases
+   * what a round supersedes, and a loop that has not converged within
+   * `maxRounds` throws rather than return partial labels.
    *
    * Output: (doc_id, cluster_id) for every id that appears in a pair;
    * cluster_id = min id of the component (its survivor).
@@ -766,73 +768,53 @@ object Dedup {
       maxRounds: Int = 20): DataFrame = {
     // one pass over the (possibly expensive) pair pipeline: mirror each
     // pair via explode instead of unioning two evaluations of `pairs`
-    val edges = pairs
+    val mirrored = pairs
       .select(explode(array(
-        struct(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v")),
-        struct(col(bCol).cast("long").as("u"), col(aCol).cast("long").as("v")))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .persist()
-    // size the per-round label layouts by data volume, not core count
-    // (the sizedParts discipline shared with connectedComponentsStar):
-    // the count also materializes the edge cache once, up front — the
-    // JobProbe'd shape ran 64-task stages over ~0.1 MB of labels, all
-    // scheduling overhead
-    val m = edges.count()
-    def sized(df: DataFrame): DataFrame =
-      df.coalesce(GraphAlgos.sizedParts(m))
-    // freshCheckpointStats after every eager checkpoint: the round
-    // contains a SELF-join, so inherited size estimates would square
-    // every round and drown the driver in BigInteger stats math by
-    // round ~20 (measured on a 1M-node component; see SparkShims)
-    var labels = SparkShims.freshCheckpointStats(
-      sized(edges.select(col("u").as("id")).distinct()
+        struct(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst")),
+        struct(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+    // freshStats: the round contains a SELF-join, so inherited size
+    // estimates would square every round and drown the driver in
+    // BigInteger stats math by round ~20 (measured on a 1M-node
+    // component; see SparkShims)
+    GraphAlgos.inScope(mirrored, freshStats = true) { g =>
+      // size the label layouts by data volume, not core count (the
+      // sizedParts discipline shared with connectedComponentsStar): the
+      // count also materializes the edge cache once, up front — the
+      // JobProbe'd shape ran 64-task stages over ~0.1 MB of labels, all
+      // scheduling overhead
+      g.rows = g.m
+      val init = g.checkpoint(g.e.select(col("src").as("id")).distinct()
         .withColumn("label", col("id")))
-        .localCheckpoint(true))
-    var round = 0
-    var converged = false
-    while (round < maxRounds && !converged) {
-      // (a) edge propagation: pull the neighbor's label. Materialized
-      // eagerly — the |E|-sized aggregation feeds BOTH sides of the
-      // pointer-jump self-join and must not run twice. The previous label
-      // rides along as `prev` (labels holds exactly one row per id, so
-      // min(prev) over the union recovers it) — the convergence check
-      // below then needs no join back to the old labels.
-      val prop = edges.join(labels.withColumnRenamed("id", "u"), Seq("u"))
-        .select(col("v").as("id"), col("label"), lit(null).cast("long").as("prev"))
-      val stepped = SparkShims.freshCheckpointStats(
-        sized(labels.withColumn("prev", col("label"))
+      // converged when no label moved: a cheap in-memory scan over the
+      // checkpointed rows, no join action. A loop that never converges
+      // throws: silently returning partial labels would split one true
+      // component into several "clusters" (deeper graphs need a larger
+      // maxRounds; rounds scale with cluster diameter)
+      g.iterate(init, maxRounds, until = _.filter(col("label") =!= col("prev")).isEmpty,
+          fixpoint = "duplicateClusters") { (labels, _) =>
+        // (a) edge propagation: pull the neighbor's label. Materialized
+        // eagerly — the |E|-sized aggregation feeds BOTH sides of the
+        // pointer-jump self-join and must not run twice. The previous
+        // label rides along as `prev` (labels holds exactly one row per
+        // id, so min(prev) over the union recovers it) — the convergence
+        // check then needs no join back to the old labels.
+        val prop = g.e.join(labels.withColumnRenamed("id", "src"), Seq("src"))
+          .select(col("dst").as("id"), col("label"), lit(null).cast("long").as("prev"))
+        val stepped = g.checkpoint(labels.withColumn("prev", col("label"))
           .unionByName(prop)
           .groupBy("id").agg(min("label").as("label"), min("prev").as("prev")))
-          .localCheckpoint(true))
-      // (b) pointer jumping: label := label(label) — a label always names
-      // a node of the same component (and labels only decrease), so the
-      // lookup table is `stepped` itself and each id joins exactly one
-      // lookup row
-      val next = SparkShims.freshCheckpointStats(
-        sized(stepped
+        // (b) pointer jumping: label := label(label) — a label always
+        // names a node of the same component (and labels only decrease),
+        // so the lookup table is `stepped` itself and each id joins
+        // exactly one lookup row
+        val next = g.checkpoint(stepped
           .join(stepped.select(col("id").as("label"), col("label").as("ll")), Seq("label"))
           .select(col("id"), least(col("label"), col("ll")).as("label"), col("prev")))
-          .localCheckpoint(true))
-      // next is materialized: release the superseded round's storage
-      // (Dataset.unpersist can't reach a checkpoint RDD — shim does)
-      SparkShims.unpersistCheckpoint(stepped)
-      SparkShims.unpersistCheckpoint(labels)
-      // cheap in-memory scan over the checkpointed rows — no join action
-      converged = next.filter(col("label") =!= col("prev")).isEmpty
-      // keep `next` itself (not a projection) so the next round's
-      // unpersistCheckpoint still sees the LogicalRDD; `prev` is
-      // overwritten at the top of the loop and dropped from the output
-      labels = next
-      round += 1
-    }
-    edges.unpersist()
-    // silently returning partial labels would split one true component
-    // into several "clusters" — fail loudly instead (deeper graphs need a
-    // larger maxRounds; rounds scale with cluster diameter)
-    if (!converged)
-      throw new IllegalStateException(
-        s"duplicateClusters did not converge within $maxRounds rounds")
-    labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
+        g.release(stepped)
+        next
+      }.last
+    }.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
 
   // --- embedding cosine near-dup -------------------------------------------
@@ -1048,29 +1030,28 @@ object Dedup {
       maxDocsPerChunk: Int = 50): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     require(maxDocsPerChunk >= 2, "maxDocsPerChunk must allow at least one pair")
-    val ch = Chunker.cdcChunks(df, idCol, textCol, avgTokens)
-      .select(col(idCol).as("doc"), col("chunk_fp")).distinct()
-    ch.persist()
-    val counts = ch.groupBy(col("doc")).agg(count(lit(1)).as("n_chunks"))
-    val kept = ch.join(
-      ch.groupBy(col("chunk_fp")).agg(count(lit(1)).as("fp_docs"))
-        .filter(col("fp_docs") <= maxDocsPerChunk).select("chunk_fp"),
-      Seq("chunk_fp"), "left_semi")
-    val pairs = kept.select(col("chunk_fp"), col("doc").as("doc_a"))
-      .join(kept.select(col("chunk_fp"), col("doc").as("doc_b")), Seq("chunk_fp"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("shared_chunks"))
-    val out = pairs
-      .join(counts.select(col("doc").as("doc_a"), col("n_chunks").as("na")), Seq("doc_a"))
-      .join(counts.select(col("doc").as("doc_b"), col("n_chunks").as("nb")), Seq("doc_b"))
-      .withColumn("containment",
-        col("shared_chunks").cast("double") / least(col("na"), col("nb")).cast("double"))
-      .filter(col("containment") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("shared_chunks"), col("containment"))
-      .localCheckpoint() // materialize (pair-sized) before releasing ch
-    ch.unpersist()
-    out
+    GraphAlgos.inScope() { g =>
+      val ch = g.persist(Chunker.cdcChunks(df, idCol, textCol, avgTokens)
+        .select(col(idCol).as("doc"), col("chunk_fp")).distinct())
+      val counts = ch.groupBy(col("doc")).agg(count(lit(1)).as("n_chunks"))
+      val kept = ch.join(
+        ch.groupBy(col("chunk_fp")).agg(count(lit(1)).as("fp_docs"))
+          .filter(col("fp_docs") <= maxDocsPerChunk).select("chunk_fp"),
+        Seq("chunk_fp"), "left_semi")
+      val pairs = kept.select(col("chunk_fp"), col("doc").as("doc_a"))
+        .join(kept.select(col("chunk_fp"), col("doc").as("doc_b")), Seq("chunk_fp"))
+        .filter(col("doc_a") < col("doc_b"))
+        .groupBy(col("doc_a"), col("doc_b"))
+        .agg(count(lit(1)).as("shared_chunks"))
+      // materialize (pair-sized) before the scope releases ch
+      g.materialize(pairs
+        .join(counts.select(col("doc").as("doc_a"), col("n_chunks").as("na")), Seq("doc_a"))
+        .join(counts.select(col("doc").as("doc_b"), col("n_chunks").as("nb")), Seq("doc_b"))
+        .withColumn("containment",
+          col("shared_chunks").cast("double") / least(col("na"), col("nb")).cast("double"))
+        .filter(col("containment") >= threshold)
+        .select(col("doc_a"), col("doc_b"), col("shared_chunks"), col("containment")))
+    }
   }
 
   /**
@@ -1196,48 +1177,46 @@ object Dedup {
     val pre = df.filter(length(col(textCol)) >= gramLen)
     val spread =
       if (pre.rdd.getNumPartitions >= par) pre else pre.repartition(par)
-    val grams = spread
-      .select(col(idCol).as("doc_id"),
-        explode(expr(
-          s"transform(sequence(1, length($textCol) - ${gramLen - 1}), " +
-            s"p -> struct(p AS p, substring($textCol, p, $gramLen) AS g))"))
-          .as("pg"))
-      .select(col("doc_id"), col("pg.p").as("p"), col("pg.g").as("g"))
-    grams.persist()
-    val keep = grams.groupBy(col("g"))
-      .agg(count_distinct(col("doc_id")).as("df_docs"))
-      .filter(col("df_docs").between(2, maxDf))
-      .select("g")
-    val pg = grams.join(keep, Seq("g"), "left_semi")
-    // Pair generation as ONE grouped aggregation + in-memory pairing
-    // instead of the posting-list SELF-JOIN (which shuffled + sorted the
-    // capped posting list TWICE as the two sort-merge legs): group the
-    // occurrences per gram — a single exchange on g — and emit the
-    // cross pairs with a codegen'd nested transform. Output rows are
-    // identical to the equi-join's (same doc_a < doc_b pairs, same
-    // positions); per-gram pair volume is the SAME Σ_g df(g)² the join
-    // produced, and the per-group buffer is bounded by the df cap
-    // applied above (≤ maxDf docs per gram — the boilerplate grams that
-    // would make a group unbounded never reach this aggregation).
-    val pairs = pg.groupBy(col("g"))
-      .agg(collect_list(struct(col("doc_id"), col("p"))).as("occ"))
-      .select(explode(expr(
-        "flatten(transform(occ, a -> transform(" +
-          "filter(occ, b -> b.doc_id > a.doc_id), " +
-          "b -> struct(a.doc_id AS doc_a, b.doc_id AS doc_b, " +
-          "a.p AS pa, b.p AS pb))))")).as("pr"))
-      .select(col("pr.doc_a"), col("pr.doc_b"),
-        col("pr.pa"), col("pr.pb"))
-    val w = Window.partitionBy(col("doc_a"), col("doc_b"), col("diag"))
-      .orderBy(col("pa"))
-    val out = pairs.withColumn("diag", col("pa") - col("pb"))
-      .withColumn("isl_id", col("pa") - row_number().over(w))
-      .groupBy(col("doc_a"), col("doc_b"), col("diag"), col("isl_id"))
-      .agg((count(lit(1)) + lit(gramLen.toLong - 1)).as("run_len"),
-        min(col("pb")).as("pb_start"))
-      .localCheckpoint()
-    grams.unpersist()
-    out
+    GraphAlgos.inScope() { g =>
+      val grams = g.persist(spread
+        .select(col(idCol).as("doc_id"),
+          explode(expr(
+            s"transform(sequence(1, length($textCol) - ${gramLen - 1}), " +
+              s"p -> struct(p AS p, substring($textCol, p, $gramLen) AS g))"))
+            .as("pg"))
+        .select(col("doc_id"), col("pg.p").as("p"), col("pg.g").as("g")))
+      val keep = grams.groupBy(col("g"))
+        .agg(count_distinct(col("doc_id")).as("df_docs"))
+        .filter(col("df_docs").between(2, maxDf))
+        .select("g")
+      val pg = grams.join(keep, Seq("g"), "left_semi")
+      // Pair generation as ONE grouped aggregation + in-memory pairing
+      // instead of the posting-list SELF-JOIN (which shuffled + sorted the
+      // capped posting list TWICE as the two sort-merge legs): group the
+      // occurrences per gram — a single exchange on g — and emit the
+      // cross pairs with a codegen'd nested transform. Output rows are
+      // identical to the equi-join's (same doc_a < doc_b pairs, same
+      // positions); per-gram pair volume is the SAME Σ_g df(g)² the join
+      // produced, and the per-group buffer is bounded by the df cap
+      // applied above (≤ maxDf docs per gram — the boilerplate grams that
+      // would make a group unbounded never reach this aggregation).
+      val pairs = pg.groupBy(col("g"))
+        .agg(collect_list(struct(col("doc_id"), col("p"))).as("occ"))
+        .select(explode(expr(
+          "flatten(transform(occ, a -> transform(" +
+            "filter(occ, b -> b.doc_id > a.doc_id), " +
+            "b -> struct(a.doc_id AS doc_a, b.doc_id AS doc_b, " +
+            "a.p AS pa, b.p AS pb))))")).as("pr"))
+        .select(col("pr.doc_a"), col("pr.doc_b"),
+          col("pr.pa"), col("pr.pb"))
+      val w = Window.partitionBy(col("doc_a"), col("doc_b"), col("diag"))
+        .orderBy(col("pa"))
+      g.materialize(pairs.withColumn("diag", col("pa") - col("pb"))
+        .withColumn("isl_id", col("pa") - row_number().over(w))
+        .groupBy(col("doc_a"), col("doc_b"), col("diag"), col("isl_id"))
+        .agg((count(lit(1)) + lit(gramLen.toLong - 1)).as("run_len"),
+          min(col("pb")).as("pb_start")))
+    }
   }
 
   /**

@@ -9,7 +9,7 @@ import org.apache.spark.sql.graft.SparkShims
  * iterative/join-shaped workloads a training-data pipeline runs over
  * derived graphs (user-item bipartite graphs, co-occurrence graphs,
  * near-dup similarity graphs; cf. the connected-components resolver in
- * [[Dedup.resolveClusters]]).
+ * [[Dedup.duplicateClusters]]).
  *
  * Everything here is EXACT INTEGER arithmetic. PageRank uses fixed-point
  * mass units (a configurable power-of-ten total) with floor division, so
@@ -21,40 +21,31 @@ import org.apache.spark.sql.graft.SparkShims
  * Scale notes (100 TB / 1000 executors):
  *  - each PageRank iteration is one equi-join of ranks onto edge sources
  *    plus one shuffle on the destination key — the canonical Pregel step
- *    expressed relationally. Pre-partitioning `edges` by `src` and
- *    reusing that layout across iterations removes the per-round edge
- *    shuffle (bucketing; see Bucketing.writeBucketed); ranks are
- *    per-node and co-partition with the join key.
- *  - iteration state is localCheckpoint'ed per round, so plan depth and
- *    lineage stay O(1) (same recipe as [[Dedup.resolveClusters]]'s
- *    pointer-jumping loop). NOT persist/unpersist: a persisted round
- *    keeps its whole child plan, so every round's plan chains all the
- *    previous ones and unpersisting round n-1 cascades into round n's
- *    cache (see Bpe.learnMerges for the pathological case).
- *  - every bounded-round kernel runs inside one [[GraphScope]] and one
- *    [[GraphScope.iterate]] loop. The scope persists the long-cast edge
- *    set once, counts it, and re-scans it through a size-adaptive view
+ *    expressed relationally. Past the broadcast bound the edge set is
+ *    shaped by `src` once ([[shapeEdges]]), so no round re-shuffles it.
+ *  - every kernel here and [[Dedup.duplicateClusters]] runs in one
+ *    [[GraphScope]], the only place that persists, checkpoints and
+ *    releases their frames; closing it releases all but the frame the
+ *    kernel returns, also when the kernel throws.
+ *  - every round loop is one [[GraphScope.iterate]]. A round's state is
+ *    an eager local checkpoint, so plan depth and lineage stay O(1) — NOT
+ *    persist: a persisted round keeps its whole child plan, and
+ *    unpersisting round n-1 cascades into round n's cache (see
+ *    Bpe.learnMerges). The checkpoint is laid out for the state's size
  *    (guide §2.2: [[sizedView]] coalesces to ~[[RowsPerPartitionTarget]]
- *    rows of per-round work per task — core-count-sized partitions of a
- *    tiny cache measured 3x the round cost; a multi-seed kernel weights
- *    the view by its seed fan-out). It persists the node set before
- *    counting it (read again for the state init — ~0.6 s per extra scan
- *    measured by JobProbe at sf0.1) unless the cache build costs the
- *    kernel a job it never wins back, and takes any count a kernel
- *    already holds, so no count runs twice. Its regime test broadcasts the
- *    node-sized per-round tables under [[BroadcastRankMaxNodes]] (the
- *    edge set then never shuffles; the planner cannot size a checkpoint
+ *    rows per task — core-count partitions of a tiny cache measured 3x
+ *    the round cost) and replaces the previous round's, which is
+ *    released unless the kernel folds over all rounds.
+ *  - the scope persists the long-cast edge set once and re-scans it
+ *    through the sized view (weighted by a multi-seed kernel's fan-out).
+ *    It persists the node set before counting it (read again for the
+ *    state init — ~0.6 s per extra scan measured by JobProbe at sf0.1)
+ *    unless the cache build costs a job the kernel never wins back, and
+ *    takes any count the kernel already holds. Its regime test
+ *    broadcasts node-sized per-round tables under
+ *    [[BroadcastRankMaxNodes]] (the planner cannot size a checkpoint
  *    leaf, so it never converts on its own) and keeps every join
- *    partitioned past it. `iterate` checkpoints each round at the
- *    state's size and releases the round it replaces; kernels that fold
- *    over all their rounds keep them until the scope closes, and
- *    closing releases everything but the frame the kernel returns.
- *  - triangle counting enumerates each triangle once via id-canonical
- *    orientation (a<b<c). On skewed degree distributions the standard
- *    upgrade is degree-ordered orientation (orient every edge toward the
- *    higher-(degree,id) endpoint), which bounds wedge fan-out by
- *    O(sqrt(|E|)) per node; id-ordering keeps the oracle trivially
- *    expressible and is identical in the uniform-degree test data.
+ *    partitioned past it.
  */
 object GraphAlgos {
 
@@ -199,19 +190,23 @@ object GraphAlgos {
   private def maybeBcast(df: DataFrame, on: Boolean): DataFrame =
     if (on) broadcast(df) else df
 
-  /** The state an iterative kernel holds for its lifetime (see the scale
-    * notes): the persisted long-cast edge set `e` (with `w` when
-    * `weighted`), its count `m` and sized view `eR` (weighted by the
-    * `seeds` fan-out), the node set and its count `n`, and
-    * every frame the kernel persists or checkpoints through it.
-    * Counts a kernel already holds come in through [[know]]. */
-  private final class GraphScope(
-      edges: DataFrame, weighted: Boolean, seeds: Int, persistNodes: Boolean) {
+  /** The state a kernel holds for its lifetime (see the scale notes):
+    * every frame it persists or checkpoints, and — when it has an edge
+    * set — the persisted long-cast edges `e` (with `w` when `weighted`),
+    * their count `m` and sized view `eR` (weighted by the `seeds`
+    * fan-out), the node set and its count `n`. Counts a kernel already
+    * holds come in through [[know]]. Under `freshStats` every checkpoint
+    * carries its measured size ([[SparkShims.freshCheckpointStats]]): a
+    * fixpoint round that self-joins its state would otherwise square the
+    * inherited estimate each round. */
+  private[pipeline] final class GraphScope(
+      edges: DataFrame, weighted: Boolean, seeds: Int, persistNodes: Boolean,
+      freshStats: Boolean) {
     private var cached = List.empty[DataFrame]
     private var checkpoints = List.empty[DataFrame]
     private var edgeCount, nodeCount, stateRows = -1L
 
-    val e: DataFrame = persist(edges.select(
+    lazy val e: DataFrame = persist(edges.select(
       (Seq("src", "dst") ++ (if (weighted) Seq("w") else Nil))
         .map(c => col(c).cast("long")): _*))
     def m: Long = { if (edgeCount < 0) edgeCount = e.count(); edgeCount }
@@ -235,9 +230,16 @@ object GraphAlgos {
     def maybeBcast(df: DataFrame): DataFrame = GraphAlgos.maybeBcast(df, bcast)
 
     def persist(df: DataFrame): DataFrame = { df.persist(); cached ::= df; df }
-    def own(checkpointed: DataFrame): DataFrame = { checkpoints ::= checkpointed; checkpointed }
+    def own(checkpointed: DataFrame): DataFrame = {
+      val df = if (freshStats) SparkShims.freshCheckpointStats(checkpointed) else checkpointed
+      checkpoints ::= df
+      df
+    }
+    /** An eager local checkpoint of `df` as it is laid out. */
+    def materialize(df: DataFrame): DataFrame = own(df.localCheckpoint())
+    /** An eager local checkpoint of `df` laid out for `rows` rows. */
     def checkpoint(df: DataFrame, rows: Long = this.rows): DataFrame =
-      own(sizedView(df, rows).localCheckpoint())
+      materialize(sizedView(df, rows))
     def release(df: DataFrame): Unit = {
       if (cached.exists(_ eq df)) { cached = cached.filterNot(_ eq df); df.unpersist() }
       if (checkpoints.exists(_ eq df)) {
@@ -247,23 +249,31 @@ object GraphAlgos {
     }
 
     /** Up to `rounds` rounds of `step(state, round)` from `init`, each
-      * checkpointed at [[rows]]. Returns the states by round, `init` at
-      * index 0 — or, unless `keepAll`, only the last one, each round
-      * having released the one it replaced. `until` ends the loop early
-      * at a fixpoint; it is not asked after the last round. */
+      * round's state checkpointed at [[rows]] — or taken as it is when
+      * the step returns a frame the scope already owns. Returns the
+      * states by round, `init` at index 0 — or, unless `keepAll`, only
+      * the last one, each round having released the one it replaced.
+      * `until` ends the loop early. A `fixpoint` loop must end that way:
+      * `until` is asked after the last round too, and if it never held
+      * the loop throws an [[IllegalStateException]] naming `fixpoint` (a
+      * partial answer would pass for a converged one). Otherwise `rounds`
+      * is a horizon and the last round is not asked. */
     def iterate(init: DataFrame, rounds: Int, keepAll: Boolean = false,
-        until: DataFrame => Boolean = _ => false)(
+        until: DataFrame => Boolean = _ => false, fixpoint: String = "")(
         step: (DataFrame, Int) => DataFrame): IndexedSeq[DataFrame] = {
       var states = Vector(init)
       var r = 0
       var done = false
       while (r < rounds && !done) {
         r += 1
-        val next = checkpoint(step(states.last, r))
+        val stepped = step(states.last, r)
+        val next = if (checkpoints.exists(_ eq stepped)) stepped else checkpoint(stepped)
         if (!keepAll) release(states.last)
         states = if (keepAll) states :+ next else Vector(next)
-        done = r < rounds && until(next)
+        done = (fixpoint.nonEmpty || r < rounds) && until(next)
       }
+      if (fixpoint.nonEmpty && !done)
+        throw new IllegalStateException(s"$fixpoint did not converge within $rounds rounds")
       states
     }
 
@@ -274,10 +284,12 @@ object GraphAlgos {
   }
 
   /** Runs `body` in a fresh [[GraphScope]] and closes it, keeping only the
-    * frame `body` returns. */
-  private def inScope(edges: DataFrame, weighted: Boolean = false, seeds: Int = 1,
-      persistNodes: Boolean = true)(body: GraphScope => DataFrame): DataFrame = {
-    val g = new GraphScope(edges, weighted, seeds, persistNodes)
+    * frame `body` returns — or nothing, when `body` throws. A body with no
+    * edge set (`edges` omitted) uses the scope for its own frames only. */
+  private[pipeline] def inScope(edges: DataFrame = null, weighted: Boolean = false,
+      seeds: Int = 1, persistNodes: Boolean = true, freshStats: Boolean = false)(
+      body: GraphScope => DataFrame): DataFrame = {
+    val g = new GraphScope(edges, weighted, seeds, persistNodes, freshStats)
     var out: DataFrame = null
     try { out = body(g); out } finally g.close(out)
   }
@@ -453,11 +465,11 @@ object GraphAlgos {
     sys.props.get("graft.graph.broadcastStructMinEdges")
       .map(_.toLong).getOrElse(200L * 1000)
 
-  def triangleCounts(edges: DataFrame): DataFrame = {
+  def triangleCounts(edges: DataFrame): DataFrame = inScope() { g =>
     // the input edge set is typically the expensive part (a fact-table
     // self-join + distinct); orientation consumes it twice (degree agg,
     // then the degree join) — persist it or that work runs twice
-    val e = edges.select(col("a").cast("long"), col("b").cast("long")).persist()
+    val e = g.persist(edges.select(col("a").cast("long"), col("b").cast("long")))
     // one pass over the cached edges prices the adjacency broadcast
     // (measured on the sf0.1 co-purchase graph: broadcast close 6.4 s
     // vs shuffled 15.6 s — the shuffle ships two ~out-degree arrays
@@ -468,14 +480,10 @@ object GraphAlgos {
     // this path), or the degree join is computed thrice
     val bcast = nEdges <= BroadcastAdjacencyMaxEdges &&
       nEdges >= BroadcastStructMinEdges
-    val o = orientByDegree(e, broadcastDeg = bcast)
-      .select(col("src"), col("dst")).persist()
-    // wedgeClose is eager (returns its counts checkpointed), so e/o can
-    // be released as soon as it returns
-    val counts = wedgeClose(o, broadcastAdj = bcast)
-    o.unpersist()
-    e.unpersist()
-    counts
+    val o = g.persist(orientByDegree(e, broadcastDeg = bcast).select(col("src"), col("dst")))
+    // wedgeClose is eager (returns its counts checkpointed), so the scope
+    // releases e/o as soon as it returns
+    wedgeClose(o, broadcastAdj = bcast)
   }
 
   /** Orient each undirected edge from its (degree, id)-smaller to its
@@ -513,22 +521,19 @@ object GraphAlgos {
     * by O(√m) — the degree-orientation guarantee that makes the
     * collect_list safe on a skewed 100 TB graph. */
   private[pipeline] def wedgeClose(o: DataFrame,
-      broadcastAdj: Boolean = false): DataFrame = {
+      broadcastAdj: Boolean = false): DataFrame = inScope() { g =>
     // the triangle set feeds THREE credit legs — materialize it once
     // (eager, closed-wedge-sized) or each union leg re-runs the whole
     // adjacency join + merge-walk intersect (measured 3× the close
     // stage's cost on the sf0.1 co-purchase graph). Returns the
-    // node-sized counts ALREADY checkpointed so the triangle rows can
-    // be released here rather than leak to the caller.
-    val tris = closedWedges(o, broadcastAdj).localCheckpoint()
+    // node-sized counts ALREADY checkpointed so the scope can release
+    // the triangle rows rather than leak them to the caller.
+    val tris = g.materialize(closedWedges(o, broadcastAdj))
     val credits = tris
       .select(col("src").as("node"), size(col("ws")).cast("long").as("c"))
       .unionByName(tris.select(col("dst").as("node"), size(col("ws")).cast("long").as("c")))
       .unionByName(tris.select(explode(col("ws")).as("node"), lit(1L).as("c")))
-    val counts = credits.groupBy(col("node")).agg(sum(col("c")).as("n_triangles"))
-      .localCheckpoint()
-    SparkShims.unpersistCheckpoint(tris)
-    counts
+    g.materialize(credits.groupBy(col("node")).agg(sum(col("c")).as("n_triangles")))
   }
 
   /** The triangle SET under a degree orientation, one row per oriented
@@ -554,11 +559,6 @@ object GraphAlgos {
         graft.functions.graph.sorted_intersect(col("un"), col("vn")).as("ws"))
       .filter(size(col("ws")) > 0)
   }
-
-  /** The wedge→close join from a raw id-canonical edge set (compat entry
-    * for plan pins): degree-orient, then [[wedgeClose]]. */
-  private[pipeline] def triangleJoin(e: DataFrame): DataFrame =
-    wedgeClose(orientByDegree(e))
 
   // ── Wedge-class machinery: degree cap, edge support, truss peel ─────
   //
@@ -604,13 +604,11 @@ object GraphAlgos {
     * consumes it four times (orientation degrees, both join sides,
     * the zero-fill left join). */
   def cappedSupport(edges: DataFrame,
-      degreeCap: Int = Int.MaxValue): DataFrame = {
-    val e = degreeCappedCanonical(edges, degreeCap).localCheckpoint()
+      degreeCap: Int = Int.MaxValue): DataFrame = inScope() { g =>
+    // supportOn is eager — the scope releases e once it returns
+    val e = g.materialize(degreeCappedCanonical(edges, degreeCap))
     val nE = e.count()
-    val out = supportOn(e,
-      nE <= BroadcastAdjacencyMaxEdges && nE >= BroadcastStructMinEdges)
-    SparkShims.unpersistCheckpoint(e) // supportOn is eager — e is consumed
-    out
+    supportOn(g, e, nE <= BroadcastAdjacencyMaxEdges && nE >= BroadcastStructMinEdges)
   }
 
   /** Support body over an ALREADY materialized canonical edge set —
@@ -618,14 +616,14 @@ object GraphAlgos {
     * is the caller's size-aware degree/adjacency broadcast decision
     * (same bound as [[triangleCounts]]); callers price it ONCE — the
     * previous shape never passed the flag, so every truss round
-    * sort-merge-joined the edge set against its own degree table. */
-  private def supportOn(e: DataFrame, bcast: Boolean): DataFrame = {
+    * sort-merge-joined the edge set against its own degree table.
+    * Returns the support table checkpointed and owned by `g`. */
+  private def supportOn(g: GraphScope, e: DataFrame, bcast: Boolean): DataFrame = {
     // materialize the triangle set once (same 3-reference fan-out as
     // [[wedgeClose]] — without this each credit leg re-runs the whole
     // support join); the returned support table is checkpointed so the
     // triangle rows can be released before returning
-    val tris = closedWedges(orientByDegree(e, broadcastDeg = bcast), bcast)
-      .localCheckpoint()
+    val tris = g.materialize(closedWedges(orientByDegree(e, broadcastDeg = bcast), bcast))
     val cred = tris.select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"),
@@ -638,9 +636,8 @@ object GraphAlgos {
           greatest(col("dst"), col("w")).as("b"), lit(1L).as("c")))
     val sup = cred.groupBy(col("a"), col("b"))
       .agg(sum(col("c")).cast("long").as("support"))
-    val out = e.join(sup, Seq("a", "b"), "left").na.fill(0L, Seq("support"))
-      .localCheckpoint()
-    SparkShims.unpersistCheckpoint(tris)
+    val out = g.materialize(e.join(sup, Seq("a", "b"), "left").na.fill(0L, Seq("support")))
+    g.release(tris)
     out
   }
 
@@ -654,7 +651,8 @@ object GraphAlgos {
     * physics (BASELINE.md ScalingHeavy, square-motif family). */
   def cappedWedgePairs(edges: DataFrame, degreeCap: Int = Int.MaxValue,
       minCommon: Long = 1L): DataFrame = {
-    val e = degreeCappedCanonical(edges, degreeCap).localCheckpoint()
+    // the census is lazy over the capped edges: they stay with it
+    val e = inScope()(_.materialize(degreeCappedCanonical(edges, degreeCap)))
     val nbrs = e.select(col("a").as("v"), col("b").as("n"))
       .unionByName(e.select(col("b").as("v"), col("a").as("n")))
     nbrs.as("x").join(nbrs.as("y"),
@@ -672,9 +670,9 @@ object GraphAlgos {
     * reach the fixpoint give the exact k-truss of the capped graph.
     * Returns the surviving (a, b) edges.
     *
-    * Scale shape: per-round state is the shrinking survivor EDGE set,
-    * localCheckpoint'ed each round — round r+1 consumes it four times
-    * (orientation degrees, adjacency, both support-join sides), and
+    * Scale shape: per-round state is the checkpointed support table of
+    * the shrinking survivor EDGE set — round r+1 consumes the survivors
+    * four times (orientation degrees, adjacency, both support-join sides), and
     * without the checkpoint round 2's plan re-runs round 1's entire
     * support join once per reference (measured 4.71 → 1.29 s on the
     * sf0.1 gate when first caught; the standing iterative-loop rule).
@@ -684,27 +682,24 @@ object GraphAlgos {
       degreeCap: Int = Int.MaxValue): DataFrame = {
     require(k >= 3, "k-truss needs k >= 3")
     require(rounds >= 1, "at least one peel round")
-    var cur = degreeCappedCanonical(edges, degreeCap).localCheckpoint()
-    // one size decision for all rounds: the survivor set only SHRINKS,
-    // so a ≤-bound decision taken on the initial capped set stays valid
-    // (a set that starts under the broadcast floor stays under it)
-    val nE = cur.count()
-    val bcast =
-      nE <= BroadcastAdjacencyMaxEdges && nE >= BroadcastStructMinEdges
-    // supportOn is eager (returns its support table checkpointed), so a
-    // round's survivor set is a cheap filter VIEW over that checkpoint —
-    // re-materializing the filtered rows per round would write the
-    // edge-sized state twice per round for nothing
-    var curCkpt = cur
-    var curView: DataFrame = cur
-    for (_ <- 1 to rounds) {
-      val sup = supportOn(curView, bcast)
-      SparkShims.unpersistCheckpoint(curCkpt)
-      curCkpt = sup
-      curView = sup.where(col("support") >= k - 2)
-        .select(col("a"), col("b"))
-    }
-    curView
+    def survivors(sup: DataFrame): DataFrame =
+      sup.where(col("support") >= k - 2).select(col("a"), col("b"))
+    survivors(inScope() { g =>
+      val init = g.materialize(degreeCappedCanonical(edges, degreeCap))
+      // one size decision for all rounds: the survivor set only SHRINKS,
+      // so a ≤-bound decision taken on the initial capped set stays valid
+      // (a set that starts under the broadcast floor stays under it)
+      val nE = init.count()
+      val bcast =
+        nE <= BroadcastAdjacencyMaxEdges && nE >= BroadcastStructMinEdges
+      // the state is the support table supportOn already checkpointed; a
+      // round's survivor set is a cheap filter VIEW over it —
+      // re-materializing the filtered rows per round would write the
+      // edge-sized state twice per round for nothing
+      g.iterate(init, rounds) { (cur, r) =>
+        supportOn(g, if (r == 1) cur else survivors(cur), bcast)
+      }.last
+    })
   }
 
   /**
@@ -739,9 +734,9 @@ object GraphAlgos {
         .filter(col("core_deg") >= k)
         .select(col("src").as("node"))
     }.last
-    survivingDegStep(g.eR, alive, g.bcast)
-      .select(col("src").as("node"), col("core_deg"))
-      .localCheckpoint() // materialize (≤ |V| rows) before releasing e
+    // materialize (≤ |V| rows) before the scope releases e
+    g.materialize(survivingDegStep(g.eR, alive, g.bcast)
+      .select(col("src").as("node"), col("core_deg")))
   }
 
   /** One peel round's degree computation, lazy — split out so the
@@ -873,13 +868,12 @@ object GraphAlgos {
       }.last
       val auth = g.checkpoint(authOf(prev))
       val hub = g.checkpoint(hitsHubStep(g.eR, auth, g.bcast))
-      g.nodes
+      g.materialize(g.nodes
         .join(g.maybeBcast(hub), Seq("node"), "left")
         .join(g.maybeBcast(auth), Seq("node"), "left")
         .select(col("node"),
           coalesce(col("hub"), lit(0L)).as("hub"),
-          coalesce(col("auth"), lit(0L)).as("auth"))
-        .localCheckpoint()
+          coalesce(col("auth"), lit(0L)).as("auth")))
     }
   }
 
@@ -887,7 +881,7 @@ object GraphAlgos {
    * Multi-source BFS: exact hop distance from the nearest of `sources`
    * for every node reached within `rounds` hops — the k-hop
    * neighborhood / seed-expansion primitive (the bounded-round sibling
-   * of [[Dedup.resolveClusters]]' run-to-fixpoint pointer jumping).
+   * of [[Dedup.duplicateClusters]]' run-to-fixpoint pointer jumping).
    * dist₀ = 0 at the seeds; each round relaxes
    * `dist'(v) = min(dist(v), 1 + min_{(u,v)∈E} dist(u))` — pure integer
    * mins, bit-exact, replayed by the oracle as unrolled rounds.
@@ -934,70 +928,23 @@ object GraphAlgos {
    * `edges` is the id-canonical undirected edge set (distinct, a < b —
    * the [[triangleCounts]] contract).
    */
-  /** Shared candidate machinery of the link-prediction scorers: the
-    * symmetrized (persisted) view, the (persisted) degree table, the
-    * size-aware broadcast decision, and the hub-capped wedge legs.
-    * Both scorers MUST stay on this one implementation — their twin
-    * oracles assume identical cap/orientation semantics. Caller
-    * releases via [[LinkCtx.release]] after materializing its output. */
-  private final case class LinkCtx(sym: DataFrame, deg: DataFrame, adj: DataFrame) {
-    def release(): Unit = { deg.unpersist(); sym.unpersist() }
-  }
-
-  private def linkContext(
-      edges: DataFrame, maxCenterDegree: Int, minShared: Int, topK: Int,
-      carryCenterDegree: Boolean): LinkCtx = {
-    require(maxCenterDegree >= 2, "a center below degree 2 anchors no wedge")
-    require(minShared >= 1 && topK >= 1, "minShared and topK must be positive")
-    val sym = edges.select(col("a").cast("long"), col("b").cast("long"))
-      .select(explode(array(
-          struct(col("a").as("src"), col("b").as("dst")),
-          struct(col("b").as("src"), col("a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    sym.persist()
-    val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    deg.persist()
-    val n = deg.count() // materialize both (deg scan materializes sym)
-    val bcast = n <= BroadcastRankMaxNodes
-    val capped = deg.filter(col("d") <= maxCenterDegree)
-    val adj =
-      if (carryCenterDegree) sym.join(maybeBcast(capped, bcast), Seq("src"))
-      else sym.join(maybeBcast(capped.select(col("src")), bcast), Seq("src"), "left_semi")
-    LinkCtx(sym, deg, adj)
-  }
-
-  /** Non-adjacent filter + deterministic top-K tail shared by the
-    * scorers; `scoreCol` orders descending with (u, v) tie-break. */
-  private def linkTail(
-      edges: DataFrame, pairs: DataFrame, scoreCol: String, topK: Int): DataFrame =
-    pairs.join(
-        edges.select(col("a").cast("long").as("u"), col("b").cast("long").as("v")),
-        Seq("u", "v"), "left_anti")
-      .orderBy(col(scoreCol).desc, col("u"), col("v"))
-      .limit(topK)
-
   def jaccardLinkPredictions(
       edges: DataFrame,
       maxCenterDegree: Int,
       minShared: Int,
-      topK: Int): DataFrame = {
-    val ctx = linkContext(edges, maxCenterDegree, minShared, topK,
-      carryCenterDegree = false)
-    val shared = ctx.adj.select(col("src"), col("dst").as("u"))
-      .join(ctx.adj.select(col("src"), col("dst").as("v")), Seq("src"))
-      .filter(col("u") < col("v"))
-      .groupBy(col("u"), col("v")).agg(count(lit(1)).as("shared"))
-      .filter(col("shared") >= minShared)
-      .join(ctx.deg.select(col("src").as("u"), col("d").as("du")), Seq("u"))
-      .join(ctx.deg.select(col("src").as("v"), col("d").as("dv")), Seq("v"))
-      .withColumn("jaccard", col("shared").cast("double") /
-        (col("du") + col("dv") - col("shared")).cast("double"))
-    val out = linkTail(edges, shared, "jaccard", topK)
-      .select(col("u"), col("v"), col("shared"), col("jaccard"))
-      .localCheckpoint() // topK rows; release the cached graph below
-    ctx.release()
-    out
-  }
+      topK: Int): DataFrame =
+    linkPredictions(edges, maxCenterDegree, minShared, topK,
+        carryCenterDegree = false, "jaccard") { (adj, deg) =>
+      adj.select(col("src"), col("dst").as("u"))
+        .join(adj.select(col("src"), col("dst").as("v")), Seq("src"))
+        .filter(col("u") < col("v"))
+        .groupBy(col("u"), col("v")).agg(count(lit(1)).as("shared"))
+        .filter(col("shared") >= minShared)
+        .join(deg.select(col("src").as("u"), col("d").as("du")), Seq("u"))
+        .join(deg.select(col("src").as("v"), col("d").as("dv")), Seq("v"))
+        .withColumn("jaccard", col("shared").cast("double") /
+          (col("du") + col("dv") - col("shared")).cast("double"))
+    }
 
   /**
    * Resource-allocation link prediction (Zhou et al. 2009):
@@ -1017,22 +964,53 @@ object GraphAlgos {
       maxCenterDegree: Int,
       minShared: Int,
       topK: Int,
-      scale: Long = 1000000000000L): DataFrame = {
+      scale: Long = 1000000000000L): DataFrame =
     // wedge legs carry the CENTER degree (the RA denominator)
-    val ctx = linkContext(edges, maxCenterDegree, minShared, topK,
-      carryCenterDegree = true)
-    val pairs = ctx.adj.select(col("src"), col("dst").as("u"), col("d"))
-      .join(ctx.adj.select(col("src"), col("dst").as("v")), Seq("src"))
-      .filter(col("u") < col("v"))
-      .groupBy(col("u"), col("v"))
-      .agg(count(lit(1)).as("shared"),
-        sum(expr(s"$scale div d")).as("ra_fp"))
-      .filter(col("shared") >= minShared)
-    val out = linkTail(edges, pairs, "ra_fp", topK)
-      .select(col("u"), col("v"), col("shared"), col("ra_fp"))
-      .localCheckpoint()
-    ctx.release()
-    out
+    linkPredictions(edges, maxCenterDegree, minShared, topK,
+        carryCenterDegree = true, "ra_fp") { (adj, _) =>
+      adj.select(col("src"), col("dst").as("u"), col("d"))
+        .join(adj.select(col("src"), col("dst").as("v")), Seq("src"))
+        .filter(col("u") < col("v"))
+        .groupBy(col("u"), col("v"))
+        .agg(count(lit(1)).as("shared"),
+          sum(expr(s"$scale div d")).as("ra_fp"))
+        .filter(col("shared") >= minShared)
+    }
+
+  /** The candidate machinery both link-prediction scorers MUST share —
+    * their twin oracles assume identical cap/orientation semantics: the
+    * symmetrized (persisted) view, the (persisted) degree table `deg`, the
+    * size-aware broadcast decision, and the hub-capped wedge legs `adj`
+    * (carrying the center degree `d` when asked). `pairs(adj, deg)` scores
+    * the candidates; the non-adjacent filter and the deterministic top-K
+    * (`scoreCol` descending, (u, v) tie-break) run here, and the top-K
+    * rows are checkpointed before the scope releases the cached graph. */
+  private def linkPredictions(
+      edges: DataFrame, maxCenterDegree: Int, minShared: Int, topK: Int,
+      carryCenterDegree: Boolean, scoreCol: String)(
+      pairs: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    require(maxCenterDegree >= 2, "a center below degree 2 anchors no wedge")
+    require(minShared >= 1 && topK >= 1, "minShared and topK must be positive")
+    inScope() { g =>
+      val sym = g.persist(edges.select(col("a").cast("long"), col("b").cast("long"))
+        .select(explode(array(
+            struct(col("a").as("src"), col("b").as("dst")),
+            struct(col("b").as("src"), col("a").as("dst")))).as("e"))
+        .select(col("e.src").as("src"), col("e.dst").as("dst")))
+      val deg = g.persist(sym.groupBy(col("src")).agg(count(lit(1)).as("d")))
+      // materializes both (the deg scan materializes sym)
+      val bcast = deg.count() <= BroadcastRankMaxNodes
+      val capped = deg.filter(col("d") <= maxCenterDegree)
+      val adj =
+        if (carryCenterDegree) sym.join(maybeBcast(capped, bcast), Seq("src"))
+        else sym.join(maybeBcast(capped.select(col("src")), bcast), Seq("src"), "left_semi")
+      g.materialize(pairs(adj, deg)
+        .join(edges.select(col("a").cast("long").as("u"), col("b").cast("long").as("v")),
+          Seq("u", "v"), "left_anti")
+        .orderBy(col(scoreCol).desc, col("u"), col("v"))
+        .limit(topK)
+        .select(col("u"), col("v"), col("shared"), col(scoreCol)))
+    }
   }
 
   /** One BFS relaxation round, lazy (pinnable in GraphAlgosSpec):
@@ -1083,36 +1061,37 @@ object GraphAlgos {
    * Beyond") — O(log² n) rounds on ANY graph shape, including the
    * huge-diameter meshes that defeat min-label propagation.
    *
-   * Why this exists next to [[Dedup.duplicateClusters]]: label
-   * propagation (even with pointer jumping) moves information ONE graph
-   * hop per round, so a spatial cluster spanning d grid cells costs
-   * Θ(d) rounds — measured 289 rounds on a 300×300 mesh with random
-   * ids, where the label forest offers no shortcuts because each
+   * Why this exists next to [[Dedup.duplicateClusters]], and why both
+   * stay: label propagation (even with pointer jumping) moves information
+   * ONE graph hop per round, so a spatial cluster spanning d grid cells
+   * costs Θ(d) rounds — measured 289 rounds on a 300×300 mesh with
+   * random ids, where the label forest offers no shortcuts because each
    * neighborhood minimum is geometrically local. Star rewriting instead
    * RESHAPES the edge set toward stars rooted at component minima: the
-   * same mesh converges in 9 rounds. Near-dup clusters (tiny diameter)
-   * keep using duplicateClusters; spatial/mesh-like graphs use this.
+   * same mesh converges in 9 rounds. On tiny-diameter near-dup graphs
+   * the trade reverses: on the `dedup_clusters` pair set at sf0.001 (137
+   * ids, pairs checkpointed, local[4], 5 alternating warm reps)
+   * duplicateClusters took 0.83 s and 19 jobs, this kernel 1.27 s and
+   * 23 jobs, with identical labels (a second run of the same probe:
+   * 1.01 s and 18 jobs against 1.40 s and 22) — serving near-dup
+   * clusters from here would slow `dedup_clusters` by 40-50%. Near-dup clusters keep
+   * using duplicateClusters; spatial/mesh-like graphs use this.
    *
    * Per round: large-star hangs every higher neighbor of v onto
    * min(N(v) ∪ {v}); small-star re-hangs the lower-or-equal neighbors
    * (and v). Each is one symmetric-view groupBy-min + equi-join +
    * distinct over the edge set — no node-count blowup (the paper bounds
-   * the edge multiset). Rounds localCheckpoint with
-   * [[SparkShims.freshCheckpointStats]] so driver-side size estimates
-   * stay measured, not compounded. Convergence = edge-set fixpoint,
-   * checked with an order-insensitive (count, Σhash, ⊕hash) digest.
+   * the edge multiset). The rounds run in a `freshStats` [[GraphScope]],
+   * so driver-side size estimates stay measured, not compounded.
+   * Convergence = edge-set fixpoint, checked with an order-insensitive
+   * (count, Σhash, ⊕hash) digest; a loop that does not reach it within
+   * `maxRounds` throws.
    *
    * Output: (node, component) for every endpoint of `edges0`, component
    * = minimum node id of the component (the star root).
    */
   def connectedComponentsStar(edges0: DataFrame, maxRounds: Int = 30): DataFrame = {
     require(maxRounds >= 1, "at least one star round")
-    val init = edges0.select(
-        least(col(edges0.columns(0)), col(edges0.columns(1))).cast("long").as("a"),
-        greatest(col(edges0.columns(0)), col(edges0.columns(1))).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-
     def sym(e: DataFrame): DataFrame = e.select(explode(array(
         struct(col("a").as("v"), col("b").as("u")),
         struct(col("b").as("v"), col("a").as("u")))).as("x"))
@@ -1162,30 +1141,30 @@ object GraphAlgos {
     // per-shuffle re-planning sub-jobs made the CC gates ~2x SLOWER —
     // AQE's runtime broadcast conversion of the per-round withMin join is
     // worth far more than the sub-job overhead. Rejected; keep AQE on.
-    var e = SparkShims.freshCheckpointStats(init.localCheckpoint(true))
-    var d = digest(e)
-    var round = 0
-    var converged = false
-    while (round < maxRounds && !converged) {
+    val stars = inScope(freshStats = true) { g =>
+      val init = g.materialize(edges0.select(
+          least(col(edges0.columns(0)), col(edges0.columns(1))).cast("long").as("a"),
+          greatest(col(edges0.columns(0)), col(edges0.columns(1))).cast("long").as("b"))
+        .filter(col("a") =!= col("b"))
+        .distinct())
+      var d = digest(init)
       // size-adaptive round checkpoint: the previous digest's edge count
       // prices this round's layout for free (star rewriting keeps the
       // edge multiset the same order of magnitude; coalesce never raises
       // a partition count, so growth past the target keeps parallelism)
-      val next = SparkShims.freshCheckpointStats(
-        smallStar(largeStar(e)).coalesce(sizedParts(d._1))
-          .localCheckpoint(true))
-      val d2 = digest(next)
-      SparkShims.unpersistCheckpoint(e)
-      e = next
-      converged = d2 == d
-      d = d2
-      round += 1
+      g.rows = d._1
+      def converged(e: DataFrame): Boolean = {
+        val prev = d
+        d = digest(e)
+        g.rows = d._1
+        d == prev
+      }
+      g.iterate(init, maxRounds, until = converged, fixpoint = "connectedComponentsStar") {
+        (e, _) => smallStar(largeStar(e))
+      }.last
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponentsStar did not converge within $maxRounds rounds")
     // stars: every node's component is min(N(v) ∪ {v})
-    sym(e).groupBy(col("v")).agg(min(col("u")).as("mn"))
+    sym(stars).groupBy(col("v")).agg(min(col("u")).as("mn"))
       .select(col("v").as("node"), least(col("mn"), col("v")).as("component"))
   }
 
@@ -1261,7 +1240,7 @@ object GraphAlgos {
             "left_anti")
           .select(col("seed"), col("node"), lit(r.toLong).as("dist"), col("sigma"))
     }
-    g.own(frontiers.reverse.reduce(_ unionByName _).localCheckpoint())
+    g.materialize(frontiers.reverse.reduce(_ unionByName _))
   }
 
   /**
@@ -1306,10 +1285,9 @@ object GraphAlgos {
           .groupBy(col("seed"))
           .agg(min_by(col("dst"), col("mix")).as("node"))
       }
-      walk.indices.reverse
+      g.materialize(walk.indices.reverse
         .map(t => walk(t).select(col("seed"), lit(t.toLong).as("step"), col("node")))
-        .reduce(_ unionByName _)
-        .localCheckpoint()
+        .reduce(_ unionByName _))
     }
   }
 
@@ -1343,9 +1321,8 @@ object GraphAlgos {
         .map(r => walks(r).select(col("node"), (col("w") * scale(r)).as("contrib")))
         .reduce(_ unionByName _)
         .groupBy(col("node")).agg(sum(col("contrib")).as("katz_scaled"))
-      g.nodes.join(scored, Seq("node"), "left")
-        .select(col("node"), coalesce(col("katz_scaled"), lit(0L)).as("katz_scaled"))
-        .localCheckpoint()
+      g.materialize(g.nodes.join(scored, Seq("node"), "left")
+        .select(col("node"), coalesce(col("katz_scaled"), lit(0L)).as("katz_scaled")))
     }
   }
 
@@ -1374,10 +1351,9 @@ object GraphAlgos {
           "delta", lit(0.0))(
         push = (lit(1.0) + col("delta")) / col("sigma"),
         pull = s => col("sigma") * coalesce(s, lit(0.0)))
-      layers.reduce(_ unionByName _)
+      g.materialize(layers.reduce(_ unionByName _)
         .groupBy(col("node"))
-        .agg(round(sum(col("delta")), 6).as("betweenness"))
-        .localCheckpoint()
+        .agg(round(sum(col("delta")), 6).as("betweenness")))
     }
   }
 
@@ -1442,12 +1418,11 @@ object GraphAlgos {
           "g", lit(1L))(
         push = col("g"),
         pull = s => lit(1L) + coalesce(s, lit(0L)))
-      layers.reduce(_ unionByName _)
+      g.materialize(layers.reduce(_ unionByName _)
         .join(fwd.where(col("dist") >= 1)
           .select(col("seed"), col("node"), col("sigma")), Seq("seed", "node"))
         .groupBy(col("node"))
-        .agg(sum(col("sigma") * (col("g") - 1L)).as("stress"))
-        .localCheckpoint()
+        .agg(sum(col("sigma") * (col("g") - 1L)).as("stress")))
     }
   }
 

@@ -117,6 +117,13 @@ object SparkShims {
    * math). Resetting to the real materialized size keeps every round's
    * planning O(1) and the estimates honest.
    *
+   * The size comes from the block manager master, which registers each
+   * block before the task that stored it finishes, so a checkpoint that
+   * has returned is always measured. `SparkContext.getRDDStorageInfo`
+   * reads the status store instead, which the listener bus fills later:
+   * while the bus lags it misses the RDD, the inherited estimate stays,
+   * and the loop's plans (and Spark job count) change from run to run.
+   *
    * No-op for plans that are not a checkpointed scan or not yet
    * materialized.
    */
@@ -124,16 +131,14 @@ object SparkShims {
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         val sess = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        val measured = sess.sparkContext.getRDDStorageInfo
-          .find(_.id == lr.rdd.id)
-          .map(i => BigInt(i.memSize + i.diskSize).max(BigInt(1)))
-        measured match {
-          case Some(size) =>
-            val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
-              sizeInBytes = size)
-            org.apache.spark.sql.classic.Dataset.ofRows(sess,
-              lr.copy()(sess, Some(stats), None))
-          case None => df
+        val blocks = sess.sparkContext.env.blockManager.master.getStorageStatus
+          .flatMap(_.rddBlocks.collect {
+            case (org.apache.spark.storage.RDDBlockId(id, _), b) if id == lr.rdd.id => b })
+        if (blocks.isEmpty) df
+        else {
+          val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
+            sizeInBytes = BigInt(blocks.map(b => b.memSize + b.diskSize).sum).max(BigInt(1)))
+          org.apache.spark.sql.classic.Dataset.ofRows(sess, lr.copy()(sess, Some(stats), None))
         }
       case _ => df
     }

@@ -32,6 +32,23 @@ class BpeSpec extends AnyFunSuite {
     assert(merges === Seq(("e", "s"), ("es", "t"), ("l", "o")))
   }
 
+  test("learnMergesWithStats releases every vocab checkpoint it makes") {
+    // the Sennrich fixture again: a run that stops on its merge budget,
+    // and one whose first round already stops (no pair reaches minCount)
+    val docLines =
+      Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
+        Seq.fill(6)("newest") ++ Seq.fill(3)("widest")
+    val df = docLines.zipWithIndex
+      .map { case (w, i) => (i.toLong, w) }.toDF("doc_id", "text")
+    // new ids only: a GC may clean older RDDs mid-run
+    val leaks = Seq(2L, 100L).map { minCount =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      Bpe.learnMergesWithStats(spark, df, "text", numMerges = 3, minCount = minCount)
+      minCount -> (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+    }
+    assert(leaks.forall(_._2 == 0), s"persisted RDDs left by minCount: $leaks")
+  }
+
   test("learnMerges stops early when no pair repeats") {
     val df = Seq((1L, "ab cd")).toDF("doc_id", "text")
     // pairs (a,b) and (c,d) each occur once < minCount=2 → no merges

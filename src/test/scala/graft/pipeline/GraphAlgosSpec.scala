@@ -577,7 +577,18 @@ class GraphAlgosSpec extends AnyFunSuite {
       ("shortestPathCounts", 29,
         () => GraphAlgos.shortestPathCounts(sym, seeds, rounds = 6)),
       ("betweennessCentrality", 33,
-        () => GraphAlgos.betweennessCentrality(sym, seeds, rounds = 3)))
+        () => GraphAlgos.betweennessCentrality(sym, seeds, rounds = 3)),
+      // the fixpoint and peel loops, each read to the end: the 200-node
+      // chain of PipelineSpec, the 200-link descending chain, and K4 +
+      // pendant + hanging triangle
+      ("duplicateClusters", 55, () => Dedup.duplicateClusters(
+        Seq.tabulate(199)(i => (i.toLong, i.toLong + 1)).toDF("doc_a", "doc_b"),
+        maxRounds = 30).count()),
+      ("connectedComponentsStar", 70, () => GraphAlgos.connectedComponentsStar(
+        (0L until 200L).map(i => (200L - i, 199L - i)).toDF("src", "dst")).count()),
+      ("kTrussPeel", 26, () => GraphAlgos.kTrussPeel(
+        (k4PlusPendant ++ Seq((5L, 6L), (5L, 7L), (6L, 7L))).toDF("src", "dst"),
+        k = 4, rounds = 2).count()))
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     val listener = new org.apache.spark.scheduler.SparkListener {

@@ -55,11 +55,36 @@ class CheckpointStatsSpec extends AnyFunSuite {
   test("star CC fails loudly when maxRounds is too small (no partial labels)") {
     val s = spark
     import s.implicits._
-    // a 40-link descending-id chain cannot converge in one round
+    // a 40-link descending-id chain cannot converge in one round — in
+    // either fixpoint kernel — and the failed loop releases its storage
     val chain = (0L until 40L).map(i => (40L - i, 39L - i)).toDF("src", "dst")
+    val kernels = Seq[(String, () => Any)](
+      "connectedComponentsStar" ->
+        (() => graft.pipeline.GraphAlgos.connectedComponentsStar(chain, maxRounds = 1).collect()),
+      "duplicateClusters" ->
+        (() => graft.pipeline.Dedup.duplicateClusters(chain, "src", "dst", maxRounds = 1).collect()))
+    // new ids only: a GC may clean older RDDs mid-run
+    val leaks = kernels.map { case (name, run) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      intercept[IllegalStateException](run())
+      name -> (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+    }
+    assert(leaks.forall(_._2 == 0), s"persisted RDDs left after throwing: $leaks")
+  }
+
+  test("a fixpoint loop that converges on its last round is not reported as failed") {
+    val s = spark
+    import s.implicits._
+    // one edge: star rewriting reaches its fixpoint in round 1; the label
+    // loop settles in round 1 and sees nothing move in round 2
+    val edge = Seq((2L, 1L)).toDF("src", "dst")
+    val labels = Set((1L, 1L), (2L, 1L))
+    assert(graft.pipeline.GraphAlgos.connectedComponentsStar(edge, maxRounds = 1)
+      .as[(Long, Long)].collect().toSet === labels)
+    assert(graft.pipeline.Dedup.duplicateClusters(edge, "src", "dst", maxRounds = 2)
+      .as[(Long, Long)].collect().toSet === labels)
     intercept[IllegalStateException] {
-      graft.pipeline.GraphAlgos.connectedComponentsStar(chain, maxRounds = 1)
-        .collect()
+      graft.pipeline.Dedup.duplicateClusters(edge, "src", "dst", maxRounds = 1).collect()
     }
   }
 }
