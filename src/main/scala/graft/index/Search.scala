@@ -2,27 +2,19 @@ package graft.index
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkShims
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 import graft.core._
 import graft.functions.{TopKAggregator, vector}
-
-/** One row of a sealed segment's cached search state: a PQ code
-  * (`code != null`), an adjacency list (`neighbors != null`) or the
-  * segment's codebook (`centroids != null`). Codes, graph and codebook
-  * ride one keyed stream, so a single cogroup delivers everything a
-  * segment task needs to search — the codebooks never pass through the
-  * driver. */
-final case class SegPayloadRow(
-    segId: Int, vecId: Int, code: Array[Byte], neighbors: Array[Int],
-    pqM: Int, pqK: Int, subDim: Int, centroids: Array[Float])
-
-/** One replicated query row for the distributed-queries sealed search:
-  * the query (queryId, qv) keyed to (segId, bucket) so it shuffles into
-  * the segment task that owns its bucket. */
-final case class QueryRep(segId: Int, bucket: Int, queryId: Long, qv: Array[Float])
 
 /**
  * Distributed KNN query (SURVEY.md §3.1): the Spark re-expression of the
@@ -30,22 +22,23 @@ final case class QueryRep(segId: Int, bucket: Int, queryId: Long, qv: Array[Floa
  *
  * Plan shape:
  *  1. driver: read manifest, collect + broadcast the query batch (small);
- *  2. SEALED/COMPACTING segments: one cogroup by segId of the cached
- *     segment state (codebook ∪ codes ∪ graph) with the segment's live
- *     rows of the vectors table (partition-pruned, `!deleted`). One task
- *     per segment loads its codebook, codes and graph (T5/T6 cache →
- *     per-segment cogroup load; the driver never holds codebooks), runs
- *     ADC + best-first expansion for every query (J2/J3), then streams
- *     the live rows once and scores each against the queries that have
- *     it as a candidate, keeping the best `k·oversample` per query (the
- *     exact rerank J5 and per-segment cap J8, as the reference's
- *     searchSealedSegment → fetchExactAndScore does). The task holds
- *     codes + graph, never the segment's raw vectors, and no candidate
- *     leaves it;
+ *  2. SEALED/COMPACTING segments: the cached segment state, an RDD with one
+ *     partition per segment. Its task reads that segment's own codebook,
+ *     codes and graph files (`segId=N` directories; T5/T6 cache → one
+ *     partition per segment; the driver never holds codebooks), runs ADC +
+ *     best-first expansion for every query (J2/J3), then streams the
+ *     segment's own live rows of the vectors table (`vectors/segId=N`,
+ *     `!deleted`) once and scores each against the queries that have it as
+ *     a candidate, keeping the best `k·oversample` per query (the exact
+ *     rerank J5 and per-segment cap J8, as the reference's
+ *     searchSealedSegment → fetchExactAndScore does). No exchange feeds the
+ *     task: it holds codes + graph, never the segment's raw vectors, and no
+ *     candidate leaves it. Query chunks union into one RDD leaf;
  *     ACTIVE/PENDING segments: brute-force scan (J1) via broadcast-join +
  *     codegen'd distance;
  *  3. global top-k merge (J7) over both paths: a bounded-heap aggregator
- *     (or a window); `gid` is the deterministic tie-break.
+ *     (or a window); `gid` is the deterministic tie-break. This merge is the
+ *     only shuffle.
  *
  * WRITING segments are invisible (F2); deleted rows never reach the rerank
  * (F1); scores follow the reference conventions exactly (L2: -distance;
@@ -59,17 +52,6 @@ object Search {
     * combined (union across indexes, different k) in a single action. */
   private val observeId = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Per-process reuse of sealed-search inputs across query calls — the
-    * Spark analog of the reference's TTL'd segment caches
-    * (SegmentCaches.java:37-129), with the block manager playing
-    * Caffeine. Caches ONLY the compressed representations built to be
-    * cached — PQ codes, adjacency, codebooks — never raw vectors (the
-    * reference caches exactly the same two tables). Keyed by the
-    * manifest content hash: every mutation commits a new manifest, so a
-    * changed index invalidates on the next call and the stale persisted
-    * blocks are released. Entries keep full lineage (persist, not
-    * checkpoint), so memory-pressure eviction degrades to a re-scan,
-    * never an error. */
   /** Manifest-state partitions of the query fan-out (F2 dispatch):
     * sealed+compacting ride the PQ/graph path, active+pending ride the
     * brute scan, WRITING is invisible (in neither set). */
@@ -78,11 +60,23 @@ object Search {
   private val BruteStates: Set[String] =
     Set(SegmentState.Active, SegmentState.Pending)
 
+  /** Per-process reuse of sealed-search state across query calls — the
+    * Spark analog of the reference's TTL'd segment caches
+    * (SegmentCaches.java:37-129), with the block manager playing
+    * Caffeine. Caches ONLY the compressed representations built to be
+    * cached — PQ codes, adjacency, codebooks — never raw vectors (the
+    * reference caches exactly the same two tables), as one persisted RDD
+    * with one [[LoadedSegment]] partition per sealed segment. A plain RDD,
+    * not a Dataset: Spark's CacheManager never sees it, so later plans are
+    * not matched against it and writes to the store do not re-cache it.
+    * Keyed by the manifest content hash: every mutation commits a new
+    * manifest, so a changed index invalidates on the next call and the
+    * stale persisted blocks are released. Entries keep full lineage
+    * (persist, not checkpoint), so memory-pressure eviction degrades to a
+    * re-read, never an error. */
   // plain class, not a case class: entries are compared by identity
   // only, and the synthetic equals/copy of a case class is dead weight
-  private[index] final class CachedInputs(
-      val version: String,
-      val payload: org.apache.spark.sql.Dataset[SegPayloadRow]) {
+  private[index] final class CachedInputs(val version: String, val state: RDD[LoadedSegment]) {
     /** Updated on every hit — the expireAfterAccess clock. */
     var lastAccess: Long = 0L
   }
@@ -112,27 +106,16 @@ object Search {
   private[index] var clock: () => Long = () => System.nanoTime()
 
   /** Sealed-path query batches are broadcast and searched in chunks of
-    * this size (one cogroup per chunk, unioned): per-segment task time
-    * and broadcast size stay flat as the batch grows, and chunks
-    * parallelize across the executor pool. Var for tests. */
-  private[index] var queryChunkSize: Int = 1024
-
-  /** Above this many chunks the per-chunk cogroup plans are fused into a
-    * single LogicalRDD leaf via RDD-level union instead of a Catalyst
-    * Union of N analyzed cogroup subtrees — a 100k-query batch (100
-    * chunks) must not build a 100-subtree plan on the driver. Var for
+    * this size (one pass over the state per chunk, unioned into one RDD):
+    * per-segment task time and broadcast size stay flat as the batch
+    * grows, and chunks parallelize across the executor pool. Var for
     * tests. */
-  private[index] var chunkUnionPlanThreshold: Int = 32
-
-  /** Whether the last sealed-path query fused its chunk union into a
-    * single LogicalRDD leaf (observability for tests). */
-  @volatile private[index] var lastChunkPlanFused: Boolean = false
+  private[index] var queryChunkSize: Int = 1024
 
   private def release(e: CachedInputs): Unit =
     // an entry from a stopped context has nothing to release — its blocks
     // died with the context, and unpersist would throw
-    if (!e.payload.sparkSession.sparkContext.isStopped)
-      e.payload.unpersist(blocking = false)
+    if (!e.state.sparkContext.isStopped) e.state.unpersist(blocking = false)
 
   /** Park a no-longer-current entry for deferred release (see graceNanos). */
   private def parkSuperseded(path: String, e: CachedInputs, now: Long): Unit =
@@ -158,7 +141,7 @@ object Search {
 
   /** Cheap idle-path drain: release overdue grace-listed entries and
     * TTL-expired cache entries without needing a sealed-segment query.
-    * `sweep` otherwise runs only inside `sealedInputs`, so on an index
+    * `sweep` otherwise runs only inside `sealedState`, so on an index
     * with no sealed segments parked blocks would stay pinned until JVM
     * exit. Called at every `query()` entry. */
   private[index] def drainExpired(): Unit = inputCache.synchronized {
@@ -191,43 +174,34 @@ object Search {
   private[index] def graceSnapshot: List[(Long, String, CachedInputs)] =
     inputCache.synchronized(graceList.toList)
 
-  private def sealedInputs(
+  private def sealedState(
       spark: SparkSession,
       store: IndexStore,
       sealedSegs: Seq[Int],
-      version: String): org.apache.spark.sql.Dataset[SegPayloadRow] = inputCache.synchronized {
-    import org.apache.spark.storage.StorageLevel
-    import spark.implicits._
+      version: String): RDD[LoadedSegment] = inputCache.synchronized {
     val now = clock()
     sweep(now)
     // `version` is the hash of the SAME manifest bytes the caller planned
     // against — never re-read here, or a concurrent seal between the two
-    // reads would cache a payload filtered by the old segment set under
-    // the new version (serving it, minus the new segment, forever after).
+    // reads would cache a state built from the old segment set under the
+    // new version (serving it, minus the new segment, forever after).
     inputCache.get(store.path) match {
       case Some(e) if e.version == version &&
-          (e.payload.sparkSession.sparkContext eq spark.sparkContext) &&
+          (e.state.sparkContext eq spark.sparkContext) &&
           !spark.sparkContext.isStopped =>
         e.lastAccess = now
         // re-insert at the tail: LinkedHashMap iterates in insertion
         // order, so overflow eviction below sees true LRU order
         inputCache.remove(store.path)
         inputCache.put(store.path, e)
-        e.payload
+        e.state
       case stale =>
         stale.foreach { e =>
           inputCache.remove(store.path)
           parkSuperseded(store.path, e, now)
         }
-        val inSealed = col("segId").isin(sealedSegs: _*)
-        val payload = store.readCodes(spark).filter(inSealed).as[CodeRow]
-          .map(c => SegPayloadRow(c.segId, c.vecId, c.code, null, 0, 0, 0, null))
-          .unionByName(store.readGraph(spark).filter(inSealed).as[GraphRow]
-            .map(g => SegPayloadRow(g.segId, g.vecId, null, g.neighbors, 0, 0, 0, null)))
-          .unionByName(store.readCodebooks(spark).filter(inSealed).as[CodebookRow]
-            .map(c => SegPayloadRow(c.segId, -1, null, null, c.m, c.k, c.subDim, c.centroids)))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val entry = new CachedInputs(version, payload)
+        val state = loadState(spark, store, sealedSegs)
+        val entry = new CachedInputs(version, state)
         entry.lastAccess = now
         inputCache.put(store.path, entry)
         while (inputCache.size > maxCachedStores) {
@@ -235,9 +209,36 @@ object Search {
           inputCache.remove(oldPath)
           parkSuperseded(oldPath, old, now)
         }
-        payload
+        state
     }
   }
+
+  /** The sealed segments' search state: one partition, holding one
+    * [[LoadedSegment]], per segment. Each task reads its own segment's
+    * codebook, codes and graph files; nothing is shuffled and nothing
+    * passes through the driver. Computed by the first query that uses it,
+    * then served from the block manager. */
+  private def loadState(spark: SparkSession, store: IndexStore, sealedSegs: Seq[Int])
+      : RDD[LoadedSegment] = {
+    val segs = sealedSegs.toSet
+    val books = SparkShims.segmentFiles(spark, store.codebooksDir, fileSchema[CodebookRow], segs)
+    val codes = SparkShims.segmentFiles(spark, store.codesDir, fileSchema[CodeRow], segs)
+    val graph = SparkShims.segmentFiles(spark, store.graphDir, fileSchema[GraphRow], segs)
+    spark.sparkContext.parallelize(sealedSegs, sealedSegs.size).map { segId =>
+      val seg = new LoadedSegment(segId)
+      books.rows(segId).foreach { r =>
+        seg.cb = Pq.Codebook(r.getInt(0), r.getInt(1), r.getInt(2), r.getArray(3).toFloatArray())
+      }
+      codes.rows(segId).foreach(r => seg.codes.put(r.getInt(0), r.getBinary(1)))
+      graph.rows(segId).foreach(r => seg.adj.put(r.getInt(0), r.getArray(1).toIntArray()))
+      seg
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** A table's file columns: its row type's, less the `segId` that the
+    * directory name carries. */
+  private def fileSchema[T <: Product : TypeTag]: StructType =
+    StructType(Encoders.product[T].schema.filterNot(_.name == "segId"))
 
   /** queriesDf columns: (queryId LONG, qv ARRAY<FLOAT>).
     * Returns (queryId, gid, score, distance, payload, rank).
@@ -277,13 +278,11 @@ object Search {
       .as[(Long, Array[Float])]
       .collect()
 
-    val vectors = store.readVectors(spark)
-
     // ---- brute-force path over ACTIVE/PENDING segments (J1) -------------
     val bruteScored: DataFrame =
       if (bruteSegs.isEmpty) emptyResults(spark)
       else {
-        val live = vectors
+        val live = store.readVectors(spark)
           .filter(col("segId").isin(bruteSegs: _*))
           .filter(!col("deleted"))
         scored(live.crossJoin(broadcast(queriesDf)), metric, params.normalizeOnRead)
@@ -292,69 +291,45 @@ object Search {
 
     // ---- sealed path: per-segment search and exact rerank (J2/J3/J5) -----
     val sealedScored: DataFrame =
-      if (sealedSegs.isEmpty) emptyResults(spark)
+      if (sealedSegs.isEmpty || queries.isEmpty) emptyResults(spark)
       else {
         // Codebooks are loaded PER SEGMENT inside the search task (the
         // Spark analog of the reference's per-segment cache bulk-load,
         // SegmentCaches.java:37-84) — never collected to the driver. At
         // production shape (dim 768, pqM 16, pqK 256) one codebook is
         // ~786 KB; at 10k sealed segments a driver collect+broadcast would
-        // hold ~8 GB per query call. Instead each codebook rides the
-        // cached state stream with its segment's codes and graph.
-        val stateK = sealedInputs(spark, store, sealedSegs, manifestVersion)
-          .groupByKey(_.segId)
-        val liveK = vectors
-          .filter(col("segId").isin(sealedSegs: _*))
-          .filter(!col("deleted"))
-          .groupByKey(_.segId)
-
-        // the query batch enters in bounded chunks: one cogroup per chunk,
-        // unioned. A single cogroup looping the WHOLE batch makes every
-        // segment task a straggler proportional to batch size; chunking
-        // bounds per-task time AND parallelizes chunks across the
-        // executor pool (the state is persisted, so its per-chunk
-        // re-shuffle reads cached blocks, not parquet; the chunks of a
-        // Catalyst union reuse one exchange of the vectors side). Batches
-        // up to `queryChunkSize` keep the exact single-cogroup plan.
-        val chunks = // one empty chunk keeps the empty-batch plan shape
-          if (queries.isEmpty) Seq(Array.empty[(Long, Array[Float])])
-          else queries.grouped(queryChunkSize).toSeq
-        val chunkScored = chunks.map { chunk =>
+        // hold ~8 GB per query call.
+        val state = sealedState(spark, store, sealedSegs, manifestVersion)
+        val live = SparkShims.segmentFiles(spark, store.vectorsDir, fileSchema[VectorRecord],
+          sealedSegs.toSet)
+        // the query batch enters in bounded chunks, one pass over the state
+        // per chunk: a single pass over the WHOLE batch makes every segment
+        // task a straggler proportional to batch size; chunking bounds
+        // per-task time AND parallelizes chunks across the executor pool.
+        // The chunks union at the RDD level: one plan leaf at any count.
+        val chunks = queries.grouped(queryChunkSize).map { chunk =>
           val qB = spark.sparkContext.broadcast(chunk)
-          stateK.cogroup(liveK) { (segId, state, live) =>
-            val seg = new LoadedSegment(state)
+          state.flatMap { seg =>
             if (seg.cb == null) Iterator.empty // missing codebook → segment yields nothing
-            else rerankSegment(segId, seg, qB.value, live, perSegLimit, params, metric, phaseSink)
-          }.toDF("queryId", "segId", "gid", "score", "distance", "payload")
-        }
-        // small batches: plain Catalyst union (keeps the exact committed
-        // plan shape). Past `chunkUnionPlanThreshold` chunks, fuse into
-        // one LogicalRDD leaf — driver planning time stays flat instead
-        // of growing with an N-subtree Union the optimizer re-walks.
-        val fuse = chunkScored.lengthCompare(chunkUnionPlanThreshold) > 0
-        lastChunkPlanFused = fuse
-        val rows =
-          if (!fuse) chunkScored.reduce(_ unionByName _)
-          else org.apache.spark.sql.graft.SparkShims
-            .unionAsSingleLeaf(spark, chunkScored)
-        rows.observe(s"graft_sealed_rerank_$obsTag", count(lit(1)).as("rows"))
+            else rerankSegment(seg, qB.value, live.rows(seg.segId), perSegLimit, params, metric,
+              phaseSink)
+          }
+        }.toSeq
+        spark.sparkContext.union(chunks).toDF("queryId", "segId", "gid", "score", "distance", "payload")
+          .observe(s"graft_sealed_rerank_$obsTag", count(lit(1)).as("rows"))
       }
 
     merge(spark, bruteScored.unionByName(sealedScored), k, metric,
       useAggregatorMerge, obsTag)
   }
 
-  /** A sealed segment's search state, loaded from its cached rows: the
-    * codebook (null when the segment has none), codes and adjacency. */
-  private final class LoadedSegment(rows: Iterator[SegPayloadRow]) {
+  /** A sealed segment's search state: the codebook (null when the segment
+    * has none), codes and adjacency. Serializable so the block manager can
+    * spill it to disk. */
+  private[index] final class LoadedSegment(val segId: Int) extends Serializable {
     var cb: Pq.Codebook = null
     val codes = new mutable.HashMap[Int, Array[Byte]]()
     val adj = new mutable.HashMap[Int, Array[Int]]()
-    rows.foreach { r =>
-      if (r.centroids != null) cb = Pq.Codebook(r.pqM, r.pqK, r.subDim, r.centroids)
-      else if (r.code != null) codes.put(r.vecId, r.code)
-      else adj.put(r.vecId, r.neighbors)
-    }
   }
 
   /** Search and exact rerank of one sealed segment for a chunk of queries,
@@ -369,10 +344,9 @@ object Search {
     * pivots) is scored twice, as a join would.
     * Emits (queryId, segId, gid, score, distance, payload). */
   private def rerankSegment(
-      segId: Int,
       seg: LoadedSegment,
       queries: Array[(Long, Array[Float])],
-      live: Iterator[VectorRecord],
+      live: Iterator[InternalRow],
       perSegLimit: Int,
       params: SearchParams,
       metric: Metric,
@@ -381,7 +355,7 @@ object Search {
     // vecId → indexes of the queries that have it as a candidate
     val wanted = new mutable.HashMap[Int, mutable.ArrayBuffer[Int]]()
     queries.indices.foreach { qi =>
-      SegmentSearch.searchSealed(segId, seg.cb, queries(qi)._2, seg.codes, seg.adj,
+      SegmentSearch.searchSealed(seg.segId, seg.cb, queries(qi)._2, seg.codes, seg.adj,
         perSegLimit, params, phases)
         .foreach(a => wanted.getOrElseUpdate(a.vecId, mutable.ArrayBuffer.empty[Int]) += qi)
     }
@@ -393,21 +367,26 @@ object Search {
     val heaps = Array.fill(queries.length)(TopKAggregator.emptyHeap)
     val t0 = System.nanoTime()
     var scoredN = 0
+    // rows of the vectors files: (vecId, gid, embedding, deleted, payload);
+    // only a live candidate's embedding and payload are copied out
     live.foreach { r =>
-      val qs = wanted.getOrElse(r.vecId, null)
+      val qs = if (r.getBoolean(3)) null else wanted.getOrElse(r.getInt(0), null)
       if (qs != null) {
-        val eNorm = if (qNorms != null) ExactScore.norm(r.embedding) else 0.0
+        val gid = r.getLong(1)
+        val emb = r.getArray(2).toFloatArray()
+        val payload = if (r.isNullAt(4)) null else r.getBinary(4)
+        val eNorm = if (qNorms != null) ExactScore.norm(emb) else 0.0
         var j = 0
         while (j < qs.length) {
           val q = qs(j)
           val qv = queries(q)._2
           val score =
-            if (l2) -math.sqrt(ExactScore.l2Squared(r.embedding, qv))
+            if (l2) -math.sqrt(ExactScore.l2Squared(emb, qv))
             else if (qNorms != null) {
               val denom = eNorm * qNorms(q)
-              if (denom == 0.0) 0.0 else ExactScore.dot(r.embedding, qv) / denom
-            } else ExactScore.cosine(r.embedding, qv)
-          TopKAggregator.offer(heaps(q), (r.gid, score, r.payload), perSegLimit)
+              if (denom == 0.0) 0.0 else ExactScore.dot(emb, qv) / denom
+            } else ExactScore.cosine(emb, qv)
+          TopKAggregator.offer(heaps(q), (gid, score, payload), perSegLimit)
           scoredN += 1
           j += 1
         }
@@ -416,7 +395,7 @@ object Search {
     phases.rerank(System.nanoTime() - t0, scoredN)
     Iterator.range(0, queries.length).flatMap { q =>
       heaps(q).iterator.map { h =>
-        (queries(q)._1, segId, h._1, h._2, if (l2) -h._2 else 1.0 - h._2, h._3)
+        (queries(q)._1, seg.segId, h._1, h._2, if (l2) -h._2 else 1.0 - h._2, h._3)
       }
     }
   }
@@ -428,24 +407,22 @@ object Search {
     * document, fetch its neighbors") is a legal input.
     *
     * Layout (the block-nested-loop shape a 1000-executor cluster wants):
-    * queries are hashed into `Q = ceil(M / queriesPerTask)` buckets and
-    * replicated once per sealed segment (each replica is one (id, qv) row
-    * — the small side); the cached per-segment state stream (codebook ∪
-    * codes ∪ graph) is replicated once per BUCKET (the big side, so Q is
-    * chosen to keep its replication factor minimal while bounding
-    * per-task query count).
-    * One cogroup on (segId, bucket) then gives every task exactly one
-    * segment's state plus ≤ queriesPerTask queries — per-task memory and
-    * time are both bounded regardless of M, and the M×S search work is
-    * spread across Q×S tasks. Rerank joins candidates back to the
+    * queries are hash-partitioned into `Q = ceil(M / queriesPerTask)`
+    * buckets — the only data the sealed path shuffles — and the cached
+    * per-segment state (one partition per sealed segment, see
+    * [[sealedState]]) is paired with them by an RDD cartesian: every one
+    * of the S×Q tasks holds exactly one segment's state (read from the
+    * block manager, never replicated through a shuffle) plus
+    * ≤ queriesPerTask queries, so per-task memory and time are both
+    * bounded regardless of M. Rerank joins candidates back to the
     * partition-pruned vectors table and to the (distributed) queries on
     * queryId — no broadcast anywhere, AQE free to pick strategies. (The
-    * in-task rerank of [[query]] would need each segment's raw vectors in
-    * every one of its Q bucket tasks, so this path keeps the join.)
+    * in-task rerank of [[query]] would stream each segment's raw vectors
+    * in every one of its Q bucket tasks, so this path keeps the join.)
     *
     * The single `count()` sizing job on the queries table is the one
     * driver-side action: the bucket count must be fixed before the
-    * replication shuffle (AQE cannot re-plan a flatMap's fan-out).
+    * queries are partitioned.
     *
     * ACTIVE/PENDING segments take the brute path as a plain (un-hinted)
     * cross join: Catalyst broadcasts a small queries side by itself and
@@ -487,41 +464,28 @@ object Search {
           .select(col("queryId"), col("segId"), col("gid"), col("score"), col("distance"), col("payload"))
       }
 
-    // ---- sealed path: (segId, bucket) cogroup ---------------------------
+    // ---- sealed path: (segment × query bucket) tasks ---------------------
     val sealedScored: DataFrame =
       if (sealedSegs.isEmpty) emptyResults(spark)
       else {
         val qCount = q.count() // sizing job: fixes the bucket layout
         val numBuckets = math.max(1L,
           (qCount + queriesPerTask - 1) / queriesPerTask).toInt
-
-        val payload = sealedInputs(spark, store, sealedSegs, manifestVersion)
-        val segs = sealedSegs.toArray
-        val qRep = q.as[(Long, Array[Float])].flatMap { t =>
-          // floorMod: Int.MinValue.abs is still negative
-          val b = java.lang.Math.floorMod(java.lang.Long.hashCode(t._1), numBuckets)
-          segs.iterator.map(sid => QueryRep(sid, b, t._1, t._2))
-        }
-        // the state stream replicated once per query bucket: (bucket, row)
-        val leftSide = payload.flatMap(r => Iterator.range(0, numBuckets).map(b => (b, r)))
-
-        val candidates = leftSide.groupByKey(t => (t._2.segId, t._1))
-          .cogroup(qRep.groupByKey(r => (r.segId, r.bucket))) { (key, rows, qs) =>
-            val segId = key._1
-            val seg = new LoadedSegment(rows.map(_._2))
+        val buckets = q.as[(Long, Array[Float])].rdd
+          .partitionBy(new org.apache.spark.HashPartitioner(numBuckets))
+        val candidates = sealedState(spark, store, sealedSegs, manifestVersion)
+          .cartesian(buckets)
+          .flatMap { case (seg, (queryId, qv)) =>
             if (seg.cb == null) Iterator.empty // missing codebook → segment yields nothing
-            else qs.flatMap { qr =>
-              SegmentSearch.searchSealed(segId, seg.cb, qr.qv, seg.codes, seg.adj, perSegLimit, params, phaseSink)
-                .iterator.map(a => (qr.queryId, segId, a.vecId))
-            }
+            else SegmentSearch.searchSealed(seg.segId, seg.cb, qv, seg.codes, seg.adj,
+              perSegLimit, params, phaseSink).iterator.map(a => (queryId, seg.segId, a.vecId))
           }.toDF("queryId", "segId", "vecId")
 
-        // Rerank joins are UN-hinted here (unlike the bounded-batch path,
-        // which forces shuffle_hash building the contractually-small
-        // candidates side): with unbounded queries the candidates table is
-        // M × S × k·oversample rows and may dwarf the vectors side, so
-        // neither side is always the right hash build — AQE picks from
-        // runtime stats and sort-merge spills safely when both are huge.
+        // Rerank joins are UN-hinted: with unbounded queries the candidates
+        // table is M × S × k·oversample rows and may dwarf the vectors
+        // side, so neither side is always the right hash build — AQE picks
+        // from runtime stats and sort-merge spills safely when both are
+        // huge.
         val sealedVectors = vectors.filter(col("segId").isin(sealedSegs: _*))
         val joined = sealedVectors
           .join(candidates, Seq("segId", "vecId"))

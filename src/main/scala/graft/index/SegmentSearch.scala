@@ -9,7 +9,7 @@ import graft.core.{SearchMode, SearchParams, SeedStrategy}
  * (SURVEY.md §2.3 J2/J3/J4/J6; reference: fdb/FdbVectorIndex.java:730-968).
  *
  * Pure functions over a segment's code map + adjacency — the distributed
- * layer (graft.index.Search) loads one segment per task via cogroup and
+ * layer (graft.index.Search) loads one segment per task from its files and
  * runs these for every query; cross-segment and cross-query parallelism is
  * Spark's. Tolerances preserved from the reference: neighbors without a PQ
  * code are skipped silently (dangling-edge tolerance after vacuum,

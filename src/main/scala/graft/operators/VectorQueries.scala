@@ -486,12 +486,12 @@ object VectorQueries {
       sealedGateQuery(s, sealedStore(s, dir), emb(s, dir))),
 
     // Distributed-queries KNN (Search.queryDistributed): the query set
-    // stays a DataFrame end-to-end — replicated-by-bucket cogroup on
-    // (segId, bucket) instead of the bounded driver batch. Same index,
+    // stays a DataFrame end-to-end — (segment × query bucket) tasks
+    // instead of the bounded driver batch. Same index,
     // same batch, same recall-1.0 knobs as vec_knn_sealed, so the result
     // must be IDENTICAL row-for-row: the gates share one oracle.
     // queriesPerTask=2 forces numBuckets=3 at 5 queries, so the bucketed
-    // payload replication + multi-bucket merge paths actually execute.
+    // (segment × bucket) tasks + multi-bucket merge paths actually execute.
     "vec_knn_distributed_queries" -> ((s, dir) => {
       val e = emb(s, dir)
       val queries = e.filter(col("vec_id") < 5)

@@ -1,9 +1,16 @@
 package org.apache.spark.sql.graft
 
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{AbstractDataType, DataType}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.{AbstractDataType, DataType, StructType}
 
 /**
  * Minimal access shims for Spark internals that are `private[sql]` in
@@ -36,61 +43,60 @@ object SparkShims {
     spark.sessionState.functionRegistry.registerFunction(
       org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
 
-  /** Re-assemble a DataFrame from physical-plan output rows
-    * (`SparkSession.internalCreateDataFrame` is `private[sql]`). Used to
-    * flatten an N-way union of identical-schema subplans into ONE
-    * LogicalRDD leaf, so the consumer's plan sees a single leaf instead
-    * of N analyzed subtrees — driver planning stays flat as N grows.
-    * Each subplan's toRdd is planned independently (O(N) small
-    * plannings, each constant-size) instead of one O(N)-subtree
-    * mega-plan that Catalyst re-canonicalizes on every rule pass. Note
-    * under AQE the per-subplan toRdd is EAGER (stages materialize), so
-    * the body runs them concurrently — see inline comment. */
-  def unionAsSingleLeaf(
-      spark: org.apache.spark.sql.SparkSession,
-      dfs: Seq[org.apache.spark.sql.DataFrame]): org.apache.spark.sql.DataFrame = {
-    require(dfs.nonEmpty, "unionAsSingleLeaf needs at least one input")
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    // Under AQE (the Spark 4 default) `queryExecution.toRdd` is NOT
-    // lazy: AdaptiveSparkPlanExec.execute() blocks while it materializes
-    // that subplan's shuffle stages. A sequential map would therefore
-    // run the N chunk plans one wave at a time on the driver —
-    // serializing exactly the cross-chunk parallelism the fusion is
-    // for. Materialize them CONCURRENTLY on a bounded pool (concurrent
-    // job submission from driver threads is the standard Spark
-    // multi-job pattern); the scheduler interleaves the chunk stages
-    // across the executor pool.
-    val rdds =
-      if (dfs.lengthCompare(2) < 0) dfs.map(_.queryExecution.toRdd)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(dfs.size, 8))
-        // Scope the concurrent chunk jobs to one job group so that if
-        // any chunk fails, the in-flight siblings are cancelled instead
-        // of burning the executor pool behind an already-failed query.
-        val jobGroup = s"graft-unionAsSingleLeaf-${java.util.UUID.randomUUID()}"
-        try {
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutor(pool)
-          scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(
-              dfs.map(df => scala.concurrent.Future {
-                classic.sparkContext.setJobGroup(
-                  jobGroup, "graft chunked query-batch materialization",
-                  interruptOnCancel = true)
-                df.queryExecution.toRdd
-              })),
-            scala.concurrent.duration.Duration.Inf)
-        } catch {
-          case t: Throwable =>
-            classic.sparkContext.cancelJobGroup(jobGroup)
-            pool.shutdownNow()
-            throw t
-        } finally pool.shutdown()
-      }
-    val rdd = classic.sparkContext.union(rdds)
-    classic.internalCreateDataFrame(rdd, dfs.head.schema)
+  /** The parquet files of one `segId`-partitioned table
+    * (`<dir>/segId=N/part-*`), grouped by segment, and Spark's own parquet
+    * reader for them. Serializable: a task reads its segment's rows with
+    * [[rows]], so no exchange moves them. Rows hold `schema`'s columns
+    * (the files' columns; `segId` lives in the directory name) and are
+    * valid only until the iterator advances. */
+  final class SegmentFiles private[SparkShims] (
+      reader: PartitionedFile => Iterator[InternalRow],
+      files: Map[Int, Array[PartitionedFile]]) extends Serializable {
+    def rows(segId: Int): Iterator[InternalRow] =
+      files.getOrElse(segId, Array.empty[PartitionedFile]).iterator.flatMap(reader)
   }
+
+  /** List `dir` once and keep the files of the `segIds` directories,
+    * skipping `_`/`.` names as Spark's file index does (`_SUCCESS`,
+    * `.crc`, `.spark-staging-*`, `_temporary`). A missing `dir` lists no
+    * files. The reader is `ParquetFileFormat`'s, built on the driver with
+    * the session's parquet settings (`sessionState` is `private[sql]`). */
+  def segmentFiles(
+      spark: org.apache.spark.sql.SparkSession,
+      dir: String,
+      schema: StructType,
+      segIds: Set[Int]): SegmentFiles = {
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false")
+    val conf = classic.sessionState.newHadoopConfWithOptions(options)
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    val files = mutable.HashMap.empty[Int, mutable.ArrayBuffer[PartitionedFile]]
+    if (fs.exists(root)) {
+      val prefix = fs.makeQualified(root).toUri.getPath.stripSuffix("/") + "/"
+      val it = fs.listFiles(root, true)
+      while (it.hasNext) {
+        val st = it.next()
+        st.getPath.toUri.getPath.stripPrefix(prefix).split('/') match {
+          case Array(SegDir(id), name) if !hidden(name) && segIds(id.toInt) =>
+            files.getOrElseUpdate(id.toInt, mutable.ArrayBuffer.empty) += PartitionedFile(
+              InternalRow.empty, SparkPath.fromPath(st.getPath), 0L, st.getLen,
+              modificationTime = st.getModificationTime, fileSize = st.getLen)
+          case _ => ()
+        }
+      }
+    }
+    val reader = new ParquetFileFormat().buildReaderWithPartitionValues(
+      classic, schema, new StructType(), schema, Nil, options, conf)
+    new SegmentFiles(reader, files.map(kv => kv._1 -> kv._2.toArray).toMap)
+  }
+
+  private val SegDir = "segId=(\\d+)".r
+
+  /** `InMemoryFileIndex.shouldFilterOutPathName`'s rule. */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
 
   /** Release the block-manager storage behind a `localCheckpoint`ed
     * Dataset. `Dataset.unpersist` only touches the relation cache, not the

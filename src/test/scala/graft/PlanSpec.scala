@@ -64,7 +64,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("distributed-queries KNN never materializes a cross product or broadcast of queries") {
     // the queries side is contractually unbounded (a multi-million-row
-    // table) — the sealed path must be cogroup + EQUI-joins: no
+    // table) — the sealed path must be segment tasks + EQUI-joins: no
     // CartesianProduct on the sealed path, and the rerank un-hinted (AQE
     // picks build side / sort-merge from runtime stats, because with
     // unbounded queries the candidates table can dwarf the vectors side).
@@ -81,39 +81,134 @@ class PlanSpec extends AnyFunSuite {
 
   test("sealed KNN reranks in the segment task: no candidate join or window, pruned scan") {
     // the candidate set is O(queries × segments × k·oversample); it must
-    // never leave the segment task — no join over candidates (hash or
-    // broadcast), and no per-segment cap window after it. The task's
-    // other input is the vectors table, partition-pruned to the sealed
-    // segments (Search.query sealed path)
-    val p = plan("vec_knn_sealed")
-    Seq("ShuffledHashJoin", "SortMergeJoin", "BroadcastHashJoin", "Window").foreach { op =>
-      assert(!p.contains(op), s"sealed KNN plan grew a $op:\n$p")
+    // never leave the segment task, and no exchange may feed the task: on
+    // every path from the sealed side's RDD leaf up to the top-k merge's
+    // exchange there is no join, window or other exchange
+    import org.apache.spark.sql.execution.{ExternalRDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    val plan = SparkEntry.queries("vec_knn_sealed")(spark, dir).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
     }
-    val sealedIds = graft.operators.VectorQueries.sealedStore(spark, dir).readManifest()
-      .segments.filter(_.state == graft.core.SegmentState.Sealed).map(_.segId).sorted
-    assert(sealedIds.nonEmpty)
-    val pruned = ("segId#\\d+ IN \\(" + sealedIds.mkString(",") + "\\)").r
-    assert(p.linesIterator.exists(l => l.contains("FileScan") && l.contains("/vectors") &&
-      l.contains("PartitionFilters:") && pruned.findFirstIn(l).isDefined),
-      s"vectors scan not pruned to sealed segments $sealedIds:\n$p")
+    def paths(p: SparkPlan): Seq[List[SparkPlan]] = // leaf first
+      if (p.children.isEmpty) Seq(List(p)) else p.children.flatMap(paths).map(_ :+ p)
+    val sealedPaths = paths(plan).filter(_.head.isInstanceOf[ExternalRDDScanExec[_]])
+    assert(sealedPaths.nonEmpty, s"no RDD leaf on the sealed side:\n$plan")
+    sealedPaths.foreach { path =>
+      val (below, rest) = path.span(!_.isInstanceOf[Exchange])
+      val merge = rest.headOption.collect { case e: ShuffleExchangeExec => e }
+      assert(merge.exists(_.outputPartitioning.isInstanceOf[
+          org.apache.spark.sql.catalyst.plans.physical.HashPartitioning]) &&
+        rest.lift(1).exists(_.nodeName.contains("Aggregate")),
+        s"the first exchange above the sealed leaf is not the top-k merge:\n$plan")
+      below.map(_.nodeName).filter(n => n.contains("Join") || n.contains("Window"))
+        .foreach(op => fail(s"sealed KNN plan grew a $op below the merge:\n$plan"))
+    }
+
+    // the segment tasks read only the sealed segments' `segId=` files:
+    // unreadable files where no sealed task may look (a non-sealed
+    // segment's directory, `_`/`.` names in a sealed one) change nothing
+    val tmp = java.nio.file.Files.createTempDirectory("graft-plan-segfiles").toString
+    val store = new graft.index.IndexStore(tmp)
+    store.createOrOpen(graft.core.IndexMeta("segfiles", dimension = 4, maxSegmentSize = 40,
+      pqM = 2, pqK = 4, graphDegree = 4, graphBuildBreadth = 16), 1000L)
+    val idx = new graft.index.SegmentedIndex(spark, store)
+    val r = new scala.util.Random(5)
+    import spark.implicits._
+    val rows = (0 until 100).map(i => (i.toLong, Array.fill(4)(r.nextGaussian().toFloat)))
+    idx.addAll(rows.toDF("id", "embedding"), "embedding", "id")
+    idx.sealPending()
+    val m = store.readManifest()
+    val sealedIds = m.segments.filter(_.state == graft.core.SegmentState.Sealed).map(_.segId)
+    assert(sealedIds.size == 2 && m.active.exists(_.count > 0))
+    val queries = rows.take(3).toDF("queryId", "qv")
+    def answer() = graft.index.Search.query(spark, store, queries, 5)
+      .select("queryId", "gid", "rank").as[(Long, Long, Int)].collect().sorted.toSeq
+    val clean = answer()
+    graft.index.Search.invalidate(tmp) // the next query reloads the state
+    val garbage = "not a parquet file".getBytes("UTF-8")
+    for (table <- Seq(store.codesDir, store.graphDir, store.codebooksDir, store.vectorsDir)) {
+      // the ACTIVE segment's vectors are the brute path's to read
+      val others = (if (table == store.vectorsDir) Nil else Seq(m.active.get.segId)) :+ 999
+      val files = others.map(id => s"segId=$id/part-x.parquet") ++
+        Seq("_x", ".x").map(n => s"segId=${sealedIds.head}/$n")
+      files.foreach { f =>
+        val path = java.nio.file.Paths.get(table, f)
+        java.nio.file.Files.createDirectories(path.getParent)
+        java.nio.file.Files.write(path, garbage)
+      }
+    }
+    try assert(answer() == clean, "the sealed path read a file outside the sealed segments")
+    finally graft.index.Search.invalidate(tmp)
+  }
+
+  /** SQL physical plans described while `body` runs (drained through a
+    * marker job: the listener bus delivers events in order). */
+  private def sqlPlansDuring(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var drained = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          plans.add(s.physicalPlanDescription)
+        case _ => ()
+      }
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id", "") == "plans-drain"))
+          drained = true
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup("plans-drain", "drain")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!drained && System.nanoTime() < deadline) Thread.sleep(5)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
   }
 
   test("repeated sealed queries reuse cached codes/graph inputs (block manager as SegmentCaches)") {
-    // first call populates the per-manifest-version cache; this (repeat)
-    // call must read codes+graph from InMemoryTableScan, not parquet
-    SparkEntry.queries("vec_knn_sealed")(spark, dir).count()
-    val p = plan("vec_knn_sealed")
-    assert(p.contains("InMemoryTableScan"))
+    // the first call populates the per-manifest-version cache; a repeat
+    // call must answer from it — identically, with the codes, graph and
+    // codebooks directories moved out of reach
+    val store = graft.operators.VectorQueries.sealedStore(spark, dir)
+    def answer() = SparkEntry.queries("vec_knn_sealed")(spark, dir).collect().map(_.toString).toSeq
+    val first = answer()
+    val dirs = Seq(store.codesDir, store.graphDir, store.codebooksDir).map(java.nio.file.Paths.get(_))
+    def aside(d: java.nio.file.Path) = d.resolveSibling(s"${d.getFileName}.aside")
+    dirs.foreach(d => java.nio.file.Files.move(d, aside(d)))
+    try assert(answer() == first, "a repeat query did not answer from the cached state")
+    finally dirs.foreach(d => java.nio.file.Files.move(aside(d), d))
   }
 
-  test("sealed KNN loads codebooks per-segment in the plan, not via driver collect") {
-    // codebooks must appear as a distributed parquet scan feeding the
-    // segment cogroup (one ~786 KB row per segment at production shape);
-    // a driver collect+broadcast is O(total codebook bytes) on the driver
-    // per call and dies at ~10k sealed segments
-    val p = plan("vec_knn_sealed")
-    assert(p.contains("codebooks"), "codebooks table missing from the distributed plan")
-    assert(p.contains("CoGroup"))
+  test("sealed KNN reads codebooks inside its segment tasks, never via a driver collect") {
+    // one codebook is ~786 KB at production shape; a driver collect +
+    // broadcast is O(total codebook bytes) on the driver per call and
+    // dies at ~10k sealed segments. So: no SQL plan the (cold) query runs
+    // scans the codebooks table, and the codebook files are opened by the
+    // tasks at execution — moved aside after the driver planned the
+    // query, the action fails
+    val store = graft.operators.VectorQueries.sealedStore(spark, dir)
+    val book = java.nio.file.Paths.get(store.codebooksDir)
+    val aside = book.resolveSibling("codebooks.aside")
+    graft.index.Search.invalidate(store.path)
+    val planned = SparkEntry.queries("vec_knn_sealed")(spark, dir)
+    java.nio.file.Files.move(book, aside)
+    try intercept[Exception](planned.collect())
+    finally {
+      java.nio.file.Files.move(aside, book)
+      graft.index.Search.invalidate(store.path)
+    }
+    val plans = sqlPlansDuring(SparkEntry.queries("vec_knn_sealed")(spark, dir).collect())
+    assert(plans.nonEmpty)
+    plans.foreach(p => assert(!p.contains("/codebooks"), s"a SQL plan scans the codebooks:\n$p"))
   }
 
   test("range join runs as a bucket equi-join, not a nested-loop range join") {

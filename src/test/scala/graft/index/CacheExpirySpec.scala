@@ -87,13 +87,13 @@ class CacheExpirySpec extends AnyFunSuite {
       val parked = Search.graceSnapshot.filter(_._2 == a.store.path)
       assert(parked.nonEmpty, "TTL-expired entry must park, not release —" +
         " a query planned against it can still be in flight")
-      assert(parked.forall(_._3.payload.storageLevel.useMemory),
+      assert(parked.forall(_._3.state.getStorageLevel.useMemory),
         "TTL-expired entry's blocks released before the grace period")
 
       now += Search.graceNanos + 1
       Search.drainExpired()
       assert(Search.graceSnapshot.forall(_._2 != a.store.path))
-      assert(parked.forall(!_._3.payload.storageLevel.useMemory),
+      assert(parked.forall(!_._3.state.getStorageLevel.useMemory),
         "grace-listed blocks not released after the grace period")
     } finally {
       Search.clock = clock0
@@ -133,10 +133,8 @@ class CacheExpirySpec extends AnyFunSuite {
       val a = sealedIndex(34)
       Search.query(spark, a.store, q(a), 5).collect()
 
-      // supersede: seal a new segment → new manifest version. (Block ids
-      // are not a stable probe here — the seal's write triggers Spark's
-      // recacheByPath over plans reading the store — so assert through
-      // the entry's Dataset storageLevel instead.)
+      // supersede: seal a new segment → new manifest version; assert
+      // through the parked entry's RDD storage level
       val r = new Random(7)
       val more = (100 until 150).map(i => (i.toLong, Array.fill(4)(r.nextGaussian().toFloat)))
         .toDF("id", "embedding")
@@ -145,14 +143,14 @@ class CacheExpirySpec extends AnyFunSuite {
       Search.query(spark, a.store, q(a), 5).collect() // rebuild under new version
       val parked = Search.graceSnapshot.filter(_._2 == a.store.path)
       assert(parked.nonEmpty, "superseded entry should park on the grace list")
-      assert(parked.forall(_._3.payload.storageLevel.useMemory),
+      assert(parked.forall(_._3.state.getStorageLevel.useMemory),
         "superseded entry must NOT unpersist immediately (in-flight queries)")
 
       now += Search.graceNanos + 1
       Search.query(spark, a.store, q(a), 5).collect() // any access sweeps
       assert(Search.graceSnapshot.forall(_._2 != a.store.path),
         "grace list not drained after the grace period")
-      assert(parked.forall(!_._3.payload.storageLevel.useMemory),
+      assert(parked.forall(!_._3.state.getStorageLevel.useMemory),
         "grace-listed blocks not released after the grace period")
       Search.invalidate(a.store.path)
     } finally {

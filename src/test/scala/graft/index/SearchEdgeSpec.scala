@@ -80,7 +80,7 @@ class SearchEdgeSpec extends AnyFunSuite {
       val chunked = Search.query(spark, idx.store, big, 3)
         .select("queryId", "gid", "rank").as[(Long, Long, Long)].collect().sorted.toSeq
       assert(chunked.length == 5000 * 3)
-      Search.queryChunkSize = Int.MaxValue // the old single-cogroup plan
+      Search.queryChunkSize = Int.MaxValue // one chunk
       val single = Search.query(spark, idx.store, big, 3)
         .select("queryId", "gid", "rank").as[(Long, Long, Long)].collect().sorted.toSeq
       assert(chunked == single, "chunked batch must be plan-invariant")
@@ -97,29 +97,93 @@ class SearchEdgeSpec extends AnyFunSuite {
     val big = (0 until 400).map(i => (i.toLong, base(r.nextInt(base.length))))
       .toDF("queryId", "qv")
 
-    val (chunk0, fuse0) = (Search.queryChunkSize, Search.chunkUnionPlanThreshold)
+    val chunk0 = Search.queryChunkSize
     try {
-      // reference run: one cogroup, no fusion
-      Search.queryChunkSize = Int.MaxValue
+      Search.queryChunkSize = Int.MaxValue // reference run: one chunk
       val single = Search.query(spark, idx.store, big, 3)
         .select("queryId", "gid", "rank").as[(Long, Long, Long)].collect().sorted.toSeq
-      assert(!Search.lastChunkPlanFused)
 
-      // 40 chunks > threshold 32 → RDD-union leaf; same results, and the
-      // end-to-end wall time (planning included) must stay sane — a
-      // 40-subtree Catalyst union regressing to quadratic planning blows
-      // far past this bound
+      // 40 chunks: the sealed side is still ONE RDD leaf of the plan, not
+      // a 40-way Catalyst union; same results, and the end-to-end wall
+      // time (planning included) must stay sane — a 40-subtree plan
+      // regressing to quadratic planning blows far past this bound
       Search.queryChunkSize = 10
       val t0 = System.nanoTime()
-      val fused = Search.query(spark, idx.store, big, 3)
-        .select("queryId", "gid", "rank").as[(Long, Long, Long)].collect().sorted.toSeq
+      val chunked = Search.query(spark, idx.store, big, 3)
+      val rddLeaves = chunked.queryExecution.optimizedPlan
+        .collectLeaves().count(_.isInstanceOf[org.apache.spark.sql.execution.ExternalRDD[_]])
+      val fused = chunked.select("queryId", "gid", "rank").as[(Long, Long, Long)]
+        .collect().sorted.toSeq
       val elapsedSec = (System.nanoTime() - t0) / 1e9
-      assert(Search.lastChunkPlanFused)
+      assert(rddLeaves == 1, s"40 chunks planned as $rddLeaves RDD leaves")
       assert(fused == single, "fused chunk plan must be plan-invariant")
       assert(elapsedSec < 60.0, f"40-chunk query took $elapsedSec%.1f s — planning not flat")
+    } finally Search.queryChunkSize = chunk0
+  }
+
+  test("sealed-path shuffle bytes do not grow with the query chunk count") {
+    // 3 sealed segments of 200 dim-64 rows, 40 queries in one chunk, then
+    // in four. Each segment task reads its own rows, so the only shuffle
+    // is the top-k merge: one partial top-k per (query, segment) whatever
+    // the chunking. A plan that moved the sealed vectors or state through
+    // an exchange (once, or once per chunk) fails the record count or the
+    // byte bound — the raw sealed vectors alone are 154 KB. Bytes are
+    // bounded, not equal: smaller per-task blocks compress less well.
+    val dir = Files.createTempDirectory("graft-edge-chunks").toString
+    val store = new IndexStore(dir)
+    store.createOrOpen(IndexMeta("chunks", dimension = 64, maxSegmentSize = 200,
+      pqM = 8, pqK = 16, graphDegree = 8, graphBuildBreadth = 32), 1000L)
+    val idx = new SegmentedIndex(spark, store)
+    val r = new Random(12)
+    val rows = (0 until 600).map(i => (i.toLong, Array.fill(64)(r.nextGaussian().toFloat)))
+    idx.addAll(rows.toDF("id", "embedding"), "embedding", "id")
+    idx.sealPending()
+    assert(store.readManifest().segments.count(_.state == SegmentState.Sealed) == 3)
+    val queries = rows.take(40).toDF("queryId", "qv")
+
+    val sc = spark.sparkContext
+    val written = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
+    val groupOfStage = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse("")
+        e.stageIds.foreach(groupOfStage.put(_, g))
+      }
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach { m =>
+          val g = groupOfStage.getOrDefault(e.stageId, "")
+          val w = (m.shuffleWriteMetrics.bytesWritten, m.shuffleWriteMetrics.recordsWritten)
+          written.merge(g, w, (a: (Long, Long), b: (Long, Long)) => (a._1 + b._1, a._2 + b._2))
+        }
+    }
+    val chunk0 = Search.queryChunkSize
+    sc.addSparkListener(listener)
+    try {
+      Search.query(spark, store, queries, 10).collect() // fills the state cache
+      val byChunks = Seq(40, 10).map { size => // one chunk, then four
+        Search.queryChunkSize = size
+        sc.setJobGroup(s"chunks-$size", "query")
+        val got = Search.query(spark, store, queries, 10)
+          .select("queryId", "gid", "rank").as[(Long, Long, Long)].collect().sorted.toSeq
+        size -> got
+      }
+      assert(byChunks.map(_._2).distinct.size == 1, "results depend on the chunking")
+      sc.setJobGroup("chunks-drain", "drain")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groupOfStage.containsValue("chunks-drain") && System.nanoTime() < deadline)
+        Thread.sleep(5)
+      val Seq(one, four) = Seq(40, 10).map(n => written.getOrDefault(s"chunks-$n", (0L, 0L)))
+      println(s"[chunk shuffle] (bytes, records): one chunk=$one four chunks=$four")
+      assert(one._2 == 40L * 3, s"one chunk wrote ${one._2} shuffle records")
+      assert(four._2 == one._2, s"4 chunks wrote ${four._2} shuffle records against ${one._2}")
+      assert(four._1 <= 2 * one._1 && four._1 < 600L * 64 * 4,
+        s"4 chunks wrote ${four._1} shuffle bytes against ${one._1} for one chunk")
     } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
       Search.queryChunkSize = chunk0
-      Search.chunkUnionPlanThreshold = fuse0
+      Search.invalidate(store.path)
     }
   }
 

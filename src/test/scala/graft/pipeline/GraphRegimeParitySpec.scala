@@ -43,9 +43,10 @@ class GraphRegimeParitySpec extends AnyFunSuite {
     * persisted or checkpointed except the frame it returns. */
   private def rowsOf(name: String, partitioned: Boolean)(run: => DataFrame): Seq[Seq[Any]] =
     inRegime(partitioned) {
-      val before = spark.sparkContext.getPersistentRDDs.size
+      // new ids only: a GC may clean older RDDs mid-run
+      val before = spark.sparkContext.getPersistentRDDs.keySet
       val rows = run.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
-      val left = spark.sparkContext.getPersistentRDDs.size - before
+      val left = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
       assert(left <= 1, s"$name (partitioned = $partitioned) left $left persisted RDDs")
       rows
     }

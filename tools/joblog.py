@@ -21,6 +21,17 @@ changes):
 
 The log argument is either a plain event-log file or a rolling event-log
 directory (`eventlog_v2_*`, whose `events_<n>_*` parts are read in order).
+
+`--stages <group>` prints, instead, every job of one job group with its
+stages: tasks, stage ms (submitted to completed), summed executor run and
+CPU ms, and shuffle read and write bytes; a stage the job skipped (its
+shuffle output already existed) is marked so. With --trace, <group> may
+also be a span name, which selects every span of that name and its
+dotted sub-spans (e.g. `search` takes `search.plan` and `search.exec` of
+every lifecycle round):
+
+    python3 tools/joblog.py /tmp/ev/eventlog_v2_local-* \\
+        --trace perfbench/.traces/lifecycle-seed611.jsonl --stages search
 """
 import argparse
 import collections
@@ -98,6 +109,62 @@ def summarise(path):
     return rows
 
 
+def stage_table(path, groups):
+    """The jobs of the groups, in start order: (job id, group, stage ids),
+    and per stage id [name, tasks, stage ms, run ms, cpu ms, shuffle read
+    bytes, shuffle write bytes]. A stage id with no entry was skipped."""
+    jobs, stages = [], {}
+
+    def stage(sid):
+        return stages.setdefault(sid, ["?", 0, 0, 0, 0.0, 0, 0])
+
+    for e in events(path):
+        kind = e["Event"]
+        if kind == "SparkListenerJobStart":
+            group = (e.get("Properties") or {}).get("spark.jobGroup.id", "")
+            if group in groups:
+                jobs.append((e["Job ID"], group, sorted(e.get("Stage IDs") or [])))
+        elif kind == "SparkListenerTaskEnd":
+            m = e.get("Task Metrics") or {}
+            read = m.get("Shuffle Read Metrics") or {}
+            s = stage(e["Stage ID"])
+            s[1] += 1
+            s[3] += m.get("Executor Run Time", 0)
+            s[4] += m.get("Executor CPU Time", 0) / 1e6
+            s[5] += read.get("Remote Bytes Read", 0) + read.get("Local Bytes Read", 0)
+            s[6] += (m.get("Shuffle Write Metrics") or {}).get("Shuffle Bytes Written", 0)
+        elif kind == "SparkListenerStageCompleted":
+            info = e["Stage Info"]
+            s = stage(info["Stage ID"])
+            s[0] = info.get("Stage Name", "?")
+            s[2] = info.get("Completion Time", 0) - info.get("Submission Time", 0)
+    return jobs, stages
+
+
+def print_stages(path, groups):
+    jobs, stages = stage_table(path, groups)
+    total = [0, 0, 0, 0.0, 0, 0]
+    print(f"{'stage':>7} {'tasks':>6} {'stage_ms':>9} {'run_ms':>9} {'cpu_ms':>9} "
+          f"{'shuf_read':>11} {'shuf_write':>11}  name")
+    ran_in = {}  # a stage a later job reuses is counted once, where it ran
+    for job, group, ids in jobs:
+        print(f"job {job} ({group})")
+        for sid in ids:
+            if sid not in stages or sid in ran_in:
+                where = f" (ran in job {ran_in[sid]})" if sid in ran_in else ""
+                print(f"{sid:7d} {'':>6} skipped{where}")
+                continue
+            ran_in[sid] = job
+            name, *vals = stages[sid]
+            tasks, stage_ms, run_ms, cpu_ms, read, write = vals
+            print(f"{sid:7d} {tasks:6d} {stage_ms:9d} {run_ms:9d} {cpu_ms:9.0f} "
+                  f"{read:11d} {write:11d}  {name}")
+            total = [t + v for t, v in zip(total, vals)]
+    t = total
+    print(f"{'total':>7} {t[0]:6d} {t[1]:9d} {t[2]:9d} {t[3]:9.0f} {t[4]:11d} {t[5]:11d}"
+          f"  ({len(jobs)} jobs)")
+
+
 def line(label, r, span_s=None):
     span_s = (r[4] - r[3]) / 1e3 if span_s is None else span_s
     return f"{r[0]:6d} {r[1]:6d} {r[2] / 1e3:9.2f} {span_s:8.2f}  {label}"
@@ -107,14 +174,20 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("log", help="event-log file or eventlog_v2_* directory")
     ap.add_argument("--trace", help="perfbench span file (.traces/<workload>-seed<n>.jsonl)")
+    ap.add_argument("--stages", metavar="GROUP",
+                    help="print the jobs and stages of one job group (or, with --trace, span name)")
     args = ap.parse_args()
-    rows = summarise(args.log)
     names = {}
     if args.trace:
         with open(args.trace) as fh:
             for s in (json.loads(x) for x in fh if x.strip()):
                 if "id" in s:  # the file ends with a summary line
                     names[f"pb-{s['id']}"] = s["name"]
+    if args.stages is not None:
+        named = {g for g, n in names.items() if n == args.stages or n.startswith(args.stages + ".")}
+        print_stages(args.log, {args.stages} | named)
+        return
+    rows = summarise(args.log)
     header = f"{'jobs':>6} {'sql':>6} {'job_s':>9} {'span_s':>8}  "
     by_group = collections.defaultdict(list)
     for (group, site), r in rows.items():
