@@ -5,9 +5,8 @@ import scala.collection.mutable
 import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SparkShims
 import org.apache.spark.sql.types.StructType
@@ -21,24 +20,28 @@ import graft.functions.{TopKAggregator, vector}
  * reference's per-segment fan-out (FdbVectorIndex.query, :351-467).
  *
  * Plan shape:
- *  1. driver: read manifest, collect + broadcast the query batch (small);
- *  2. SEALED/COMPACTING segments: the cached segment state, an RDD with one
- *     partition per segment. Its task reads that segment's own codebook,
- *     codes and graph files (`segId=N` directories; T5/T6 cache → one
- *     partition per segment; the driver never holds codebooks), runs ADC +
- *     best-first expansion for every query (J2/J3), then streams the
- *     segment's own live rows of the vectors table (`vectors/segId=N`,
- *     `!deleted`) once and scores each against the queries that have it as
- *     a candidate, keeping the best `k·oversample` per query (the exact
- *     rerank J5 and per-segment cap J8, as the reference's
- *     searchSealedSegment → fetchExactAndScore does). No exchange feeds the
- *     task: it holds codes + graph, never the segment's raw vectors, and no
- *     candidate leaves it. Query chunks union into one RDD leaf;
- *     ACTIVE/PENDING segments: brute-force scan (J1) via broadcast-join +
- *     codegen'd distance;
- *  3. global top-k merge (J7) over both paths: a bounded-heap aggregator
- *     (or a window); `gid` is the deterministic tie-break. This merge is the
- *     only shuffle.
+ *  1. driver: read the manifest; the visible segments are the cached
+ *     sealed state (SEALED/COMPACTING: an RDD with one partition per
+ *     segment, whose task reads that segment's own codebook, codes and
+ *     graph files — T5/T6 cache; the driver never holds codebooks) plus
+ *     the ACTIVE/PENDING segments, which carry only their id (J1);
+ *  2. one segment task per (segment, query bucket): a sealed segment runs
+ *     ADC + best-first expansion for every query (J2/J3); every segment
+ *     then streams its own live rows of the vectors table
+ *     (`vectors/segId=N`, `!deleted`) once and scores each against the
+ *     queries that want it — a sealed segment's candidates, or every query
+ *     for a brute segment — keeping the best `k·oversample` per query (the
+ *     exact rerank J5 and per-segment cap J8, as the reference's
+ *     searchSegment → searchSealedSegment → fetchExactAndScore /
+ *     searchBruteForceSegment does). No exchange feeds the task and no
+ *     candidate leaves it;
+ *  3. global top-k merge (J7): a bounded-heap aggregator, `gid` the
+ *     deterministic tie-break. This merge is the only shuffle.
+ *
+ * The two entries differ only in how query buckets reach the segment
+ * tasks: [[query]] broadcasts chunks of the collected batch,
+ * [[queryDistributed]] hash-partitions the query table and pairs it with
+ * the segments by an RDD cartesian.
  *
  * WRITING segments are invisible (F2); deleted rows never reach the rerank
  * (F1); scores follow the reference conventions exactly (L2: -distance;
@@ -105,8 +108,8 @@ object Search {
   /** Injectable for TTL tests; production uses the monotonic clock. */
   private[index] var clock: () => Long = () => System.nanoTime()
 
-  /** Sealed-path query batches are broadcast and searched in chunks of
-    * this size (one pass over the state per chunk, unioned into one RDD):
+  /** [[query]]'s batches are broadcast and searched in chunks of this
+    * size (one pass over the segments per chunk, unioned into one RDD):
     * per-segment task time and broadcast size stay flat as the batch
     * grows, and chunks parallelize across the executor pool. Var for
     * tests. */
@@ -240,17 +243,82 @@ object Search {
   private def fileSchema[T <: Product : TypeTag]: StructType =
     StructType(Encoders.product[T].schema.filterNot(_.name == "segId"))
 
+  /** A query of the batch: (queryId, query vector). */
+  private type Query = (Long, Array[Float])
+
   /** queriesDf columns: (queryId LONG, qv ARRAY<FLOAT>).
-    * Returns (queryId, gid, score, distance, payload, rank).
-    * `useAggregatorMerge` selects the bounded-heap top-k merge (default,
-    * map-side combining) vs the window-function merge (full sort). */
+    * Returns (queryId, gid, score, distance, payload, rank). The query
+    * batch (the KNN contract is a bounded batch) is collected — the analog
+    * of sending q to every segment task — and broadcast in chunks of
+    * `queryChunkSize`, one pass over the segments per chunk: a single pass
+    * over the whole batch makes every segment task a straggler
+    * proportional to batch size, chunking bounds per-task time and
+    * parallelizes chunks across the executor pool. The chunks union at the
+    * RDD level: one plan leaf at any count. */
   def query(
       spark: SparkSession,
       store: IndexStore,
       queriesDf: DataFrame,
       k: Int,
+      paramsOpt: Option[SearchParams] = None): DataFrame =
+    search(spark, store, queriesDf, k, paramsOpt) { (segments, queries) =>
+      val sc = spark.sparkContext
+      sc.union(queries.collect().grouped(queryChunkSize).map { chunk =>
+        val qB = sc.broadcast(chunk)
+        segments.map(seg => (seg, qB.value))
+      }.toSeq)
+    }
+
+  /** Distributed-queries KNN: identical semantics and results to
+    * [[query]], but the query set STAYS a distributed DataFrame — nothing
+    * query-sized ever passes through the driver, so a multi-million-row
+    * query table (the offline-retrieval shape: "embed every training
+    * document, fetch its neighbors") is a legal input.
+    *
+    * Layout (the block-nested-loop shape a 1000-executor cluster wants):
+    * queries are hash-partitioned into `Q = ceil(M / queriesPerTask)`
+    * buckets, and the visible segments (the cached sealed state plus the
+    * ACTIVE/PENDING ids, see [[search]]) are paired with them by an RDD
+    * cartesian: every one of the S×Q segment tasks holds exactly one
+    * segment (read from the block manager, never replicated through a
+    * shuffle) plus ≤ queriesPerTask queries, and streams that segment's
+    * own live rows once for its bucket, so per-task memory and time are
+    * both bounded regardless of M. The query buckets and the top-k merge
+    * are the only shuffles; no broadcast anywhere.
+    *
+    * The single `count()` sizing job on the queries table is the one
+    * driver-side action: the bucket count must be fixed before the
+    * queries are partitioned. */
+  def queryDistributed(
+      spark: SparkSession,
+      store: IndexStore,
+      queriesDf: DataFrame,
+      k: Int,
       paramsOpt: Option[SearchParams] = None,
-      useAggregatorMerge: Boolean = true): DataFrame = {
+      queriesPerTask: Int = 1024): DataFrame =
+    search(spark, store, queriesDf, k, paramsOpt) { (segments, queries) =>
+      val numBuckets = math.max(1L, (queries.count() + queriesPerTask - 1) / queriesPerTask).toInt
+      segments.cartesian(
+        queries.rdd.partitionBy(new org.apache.spark.HashPartitioner(numBuckets)).glom())
+    }
+
+  /** The per-segment fan-out both entries share: reads the manifest,
+    * builds the visible segments, lists the vectors table once for all of
+    * them, runs [[searchSegment]] on every (segment, query bucket) pair
+    * that `pair` makes, observes the rows the segment tasks emit, and
+    * merges them into the global top-k (J7) with a bounded-heap
+    * aggregator: partial aggregation sends ≤ k hits per (query, partition)
+    * into the merge shuffle (SURVEY.md §7.3), the payload rides through
+    * the heap and distance derives from score, so the merge output IS the
+    * final result. */
+  private def search(
+      spark: SparkSession,
+      store: IndexStore,
+      queriesDf: DataFrame,
+      k: Int,
+      paramsOpt: Option[SearchParams])(
+      pair: (RDD[LoadedSegment], Dataset[Query]) => RDD[(LoadedSegment, Array[Query])])
+      : DataFrame = {
     import spark.implicits._
 
     drainExpired() // free stale cache blocks even on brute-only queries
@@ -268,98 +336,89 @@ object Search {
 
     val sealedSegs = m.segments.filter(s => SealedStates(s.state)).map(_.segId)
     val bruteSegs = m.segments.filter(s => BruteStates(s.state)).map(_.segId)
+    if (sealedSegs.isEmpty && bruteSegs.isEmpty) return emptyResults(spark)
 
-    // collect the query batch (the KNN contract is a bounded batch) — the
-    // analog of sending q to every segment task. Broadcast and searched
-    // in chunks of `queryChunkSize` below, so per-segment task time and
-    // broadcast size stay flat as the batch grows.
-    val queries: Array[(Long, Array[Float])] = queriesDf
+    val sc = spark.sparkContext
+    val segments = sc.union(Seq(
+      if (sealedSegs.isEmpty) None else Some(sealedState(spark, store, sealedSegs, manifestVersion)),
+      if (bruteSegs.isEmpty) None
+      else Some(sc.parallelize(bruteSegs, bruteSegs.size).map(new LoadedSegment(_, brute = true)))
+    ).flatten)
+    val live = SparkShims.segmentFiles(spark, store.vectorsDir, fileSchema[VectorRecord],
+      (sealedSegs ++ bruteSegs).toSet)
+    val queries = queriesDf
       .select(col("queryId").cast("long"), col("qv").cast("array<float>"))
-      .as[(Long, Array[Float])]
-      .collect()
+      .as[Query]
 
-    // ---- brute-force path over ACTIVE/PENDING segments (J1) -------------
-    val bruteScored: DataFrame =
-      if (bruteSegs.isEmpty) emptyResults(spark)
-      else {
-        val live = store.readVectors(spark)
-          .filter(col("segId").isin(bruteSegs: _*))
-          .filter(!col("deleted"))
-        scored(live.crossJoin(broadcast(queriesDf)), metric, params.normalizeOnRead)
-          .select(col("queryId"), col("segId"), col("gid"), col("score"), col("distance"), col("payload"))
+    val topkAgg = new TopKAggregator(k)
+    val distance = if (metric eq Metric.L2) -col("score") else lit(1.0) - col("score")
+    pair(segments, queries)
+      .flatMap(t => searchSegment(t._1, t._2, live.rows(t._1.segId), perSegLimit, params, metric,
+        phaseSink))
+      .toDS()
+      .observe(s"graft_segment_rows_$obsTag", count(lit(1)).as("rows"))
+      .groupByKey(_._1)
+      .mapValues(r => (r._2, r._3, r._4))
+      .agg(topkAgg.toColumn.name("topk"))
+      .flatMap { t =>
+        t._2.iterator.zipWithIndex.map(zi => (t._1, zi._1._1, zi._1._2, zi._1._3, zi._2 + 1))
       }
-
-    // ---- sealed path: per-segment search and exact rerank (J2/J3/J5) -----
-    val sealedScored: DataFrame =
-      if (sealedSegs.isEmpty || queries.isEmpty) emptyResults(spark)
-      else {
-        // Codebooks are loaded PER SEGMENT inside the search task (the
-        // Spark analog of the reference's per-segment cache bulk-load,
-        // SegmentCaches.java:37-84) — never collected to the driver. At
-        // production shape (dim 768, pqM 16, pqK 256) one codebook is
-        // ~786 KB; at 10k sealed segments a driver collect+broadcast would
-        // hold ~8 GB per query call.
-        val state = sealedState(spark, store, sealedSegs, manifestVersion)
-        val live = SparkShims.segmentFiles(spark, store.vectorsDir, fileSchema[VectorRecord],
-          sealedSegs.toSet)
-        // the query batch enters in bounded chunks, one pass over the state
-        // per chunk: a single pass over the WHOLE batch makes every segment
-        // task a straggler proportional to batch size; chunking bounds
-        // per-task time AND parallelizes chunks across the executor pool.
-        // The chunks union at the RDD level: one plan leaf at any count.
-        val chunks = queries.grouped(queryChunkSize).map { chunk =>
-          val qB = spark.sparkContext.broadcast(chunk)
-          state.flatMap { seg =>
-            if (seg.cb == null) Iterator.empty // missing codebook → segment yields nothing
-            else rerankSegment(seg, qB.value, live.rows(seg.segId), perSegLimit, params, metric,
-              phaseSink)
-          }
-        }.toSeq
-        spark.sparkContext.union(chunks).toDF("queryId", "segId", "gid", "score", "distance", "payload")
-          .observe(s"graft_sealed_rerank_$obsTag", count(lit(1)).as("rows"))
-      }
-
-    merge(spark, bruteScored.unionByName(sealedScored), k, metric,
-      useAggregatorMerge, obsTag)
+      .toDF("queryId", "gid", "score", "payload", "rank")
+      .withColumn("distance", distance)
+      .select(col("queryId"), col("gid"), col("score"), col("distance"), col("payload"), col("rank"))
+      .observe(s"graft_topk_merge_$obsTag", count(lit(1)).as("rows"))
   }
 
-  /** A sealed segment's search state: the codebook (null when the segment
-    * has none), codes and adjacency. Serializable so the block manager can
-    * spill it to disk. */
-  private[index] final class LoadedSegment(val segId: Int) extends Serializable {
+  /** A visible segment of the fan-out. A sealed one holds its search
+    * state: the codebook (null when the segment has none), codes and
+    * adjacency. A brute (ACTIVE/PENDING) one holds only its id.
+    * Serializable so the block manager can spill it to disk. */
+  private[index] final class LoadedSegment(val segId: Int, val brute: Boolean = false)
+      extends Serializable {
     var cb: Pq.Codebook = null
     val codes = new mutable.HashMap[Int, Array[Byte]]()
     val adj = new mutable.HashMap[Int, Array[Int]]()
   }
 
-  /** Search and exact rerank of one sealed segment for a chunk of queries,
-    * inside its task (J2/J3/J5/J8; reference: searchSealedSegment →
-    * fetchExactAndScore, FdbVectorIndex.java:730-837,970-1046). Runs the
-    * approximate search for every query, then streams the segment's live
-    * rows once, scoring each row against the queries that have it as a
-    * candidate, and keeps the best `perSegLimit` per query in a heap
-    * ordered exactly as [[TopKAggregator]] (score desc, gid asc). The raw
-    * vectors are never held: memory is the state, the candidate lists and
-    * the heaps. A candidate listed twice for one query (repeated random
-    * pivots) is scored twice, as a join would.
-    * Emits (queryId, segId, gid, score, distance, payload). */
-  private def rerankSegment(
+  /** Search and exact scoring of one segment for a bucket of queries,
+    * inside its task (reference: searchSegment, FdbVectorIndex.java:
+    * 730-837,970-1046). A sealed segment runs the approximate search for
+    * every query (J2/J3) and reranks its candidates (J5); a brute segment
+    * scores every live row against every query (J1). Either way the
+    * segment's live rows are streamed once, each scored against the
+    * queries that want it, and the best `perSegLimit` per query are kept
+    * (J8) in a heap ordered exactly as [[TopKAggregator]] (score desc, gid
+    * asc). The raw vectors are never held: memory is the state, the
+    * candidate lists and the heaps. A candidate listed twice for one query
+    * (repeated random pivots) is scored twice, as a join would. Only a
+    * sealed segment feeds the rerank counters.
+    * Emits (queryId, gid, score, payload). */
+  private def searchSegment(
       seg: LoadedSegment,
-      queries: Array[(Long, Array[Float])],
+      queries: Array[Query],
       live: Iterator[InternalRow],
       perSegLimit: Int,
       params: SearchParams,
       metric: Metric,
-      phases: SegmentSearch.PhaseSink)
-      : Iterator[(Long, Int, Long, Double, Double, Array[Byte])] = {
-    // vecId → indexes of the queries that have it as a candidate
-    val wanted = new mutable.HashMap[Int, mutable.ArrayBuffer[Int]]()
-    queries.indices.foreach { qi =>
-      SegmentSearch.searchSealed(seg.segId, seg.cb, queries(qi)._2, seg.codes, seg.adj,
-        perSegLimit, params, phases)
-        .foreach(a => wanted.getOrElseUpdate(a.vecId, mutable.ArrayBuffer.empty[Int]) += qi)
-    }
-    if (wanted.isEmpty) return Iterator.empty
+      phases: SegmentSearch.PhaseSink): Iterator[(Long, Long, Double, Array[Byte])] = {
+    // missing codebook → segment yields nothing
+    if (queries.isEmpty || (!seg.brute && seg.cb == null)) return Iterator.empty
+    // vecId → indexes of the queries that have it as a candidate (unboxed:
+    // a bucket of queryDistributed can hold 10^5 queries); a brute segment
+    // offers every live row to every query
+    val everyQuery = if (seg.brute) Array.range(0, queries.length) else null
+    val wanted =
+      if (seg.brute) null
+      else {
+        val lists = new mutable.HashMap[Int, mutable.ArrayBuilder.ofInt]()
+        queries.indices.foreach { qi =>
+          SegmentSearch.searchSealed(seg.segId, seg.cb, queries(qi)._2, seg.codes, seg.adj,
+            perSegLimit, params, phases)
+            .foreach(a => lists.getOrElseUpdate(a.vecId, new mutable.ArrayBuilder.ofInt) += qi)
+        }
+        if (lists.isEmpty) return Iterator.empty
+        lists.map(kv => kv._1 -> kv._2.result())
+      }
 
     val l2 = metric eq Metric.L2
     val qNorms =
@@ -368,9 +427,12 @@ object Search {
     val t0 = System.nanoTime()
     var scoredN = 0
     // rows of the vectors files: (vecId, gid, embedding, deleted, payload);
-    // only a live candidate's embedding and payload are copied out
+    // only a wanted live row's embedding and payload are copied out
     live.foreach { r =>
-      val qs = if (r.getBoolean(3)) null else wanted.getOrElse(r.getInt(0), null)
+      val qs =
+        if (r.getBoolean(3)) null
+        else if (everyQuery != null) everyQuery
+        else wanted.getOrElse(r.getInt(0), null)
       if (qs != null) {
         val gid = r.getLong(1)
         val emb = r.getArray(2).toFloatArray()
@@ -392,166 +454,17 @@ object Search {
         }
       }
     }
-    phases.rerank(System.nanoTime() - t0, scoredN)
+    if (!seg.brute) phases.rerank(System.nanoTime() - t0, scoredN)
     Iterator.range(0, queries.length).flatMap { q =>
-      heaps(q).iterator.map { h =>
-        (queries(q)._1, seg.segId, h._1, h._2, if (l2) -h._2 else 1.0 - h._2, h._3)
-      }
-    }
-  }
-
-  /** Distributed-queries KNN: identical semantics and results to
-    * [[query]], but the query set STAYS a distributed DataFrame — nothing
-    * query-sized ever passes through the driver, so a multi-million-row
-    * query table (the offline-retrieval shape: "embed every training
-    * document, fetch its neighbors") is a legal input.
-    *
-    * Layout (the block-nested-loop shape a 1000-executor cluster wants):
-    * queries are hash-partitioned into `Q = ceil(M / queriesPerTask)`
-    * buckets — the only data the sealed path shuffles — and the cached
-    * per-segment state (one partition per sealed segment, see
-    * [[sealedState]]) is paired with them by an RDD cartesian: every one
-    * of the S×Q tasks holds exactly one segment's state (read from the
-    * block manager, never replicated through a shuffle) plus
-    * ≤ queriesPerTask queries, so per-task memory and time are both
-    * bounded regardless of M. Rerank joins candidates back to the
-    * partition-pruned vectors table and to the (distributed) queries on
-    * queryId — no broadcast anywhere, AQE free to pick strategies. (The
-    * in-task rerank of [[query]] would stream each segment's raw vectors
-    * in every one of its Q bucket tasks, so this path keeps the join.)
-    *
-    * The single `count()` sizing job on the queries table is the one
-    * driver-side action: the bucket count must be fixed before the
-    * queries are partitioned.
-    *
-    * ACTIVE/PENDING segments take the brute path as a plain (un-hinted)
-    * cross join: Catalyst broadcasts a small queries side by itself and
-    * falls back to a partitioned cartesian for a huge one — both are the
-    * honest M×N work the brute contract states. */
-  def queryDistributed(
-      spark: SparkSession,
-      store: IndexStore,
-      queriesDf: DataFrame,
-      k: Int,
-      paramsOpt: Option[SearchParams] = None,
-      queriesPerTask: Int = 1024): DataFrame = {
-    import spark.implicits._
-
-    drainExpired()
-    val (m, manifestVersion) = store.readManifestWithVersion()
-    val im = m.meta
-    val metric = im.metricEnum
-    val params = paramsOpt.getOrElse(SearchParams.defaults(k, im.oversample))
-    val perSegLimit = k * math.max(1, im.oversample)
-    val phaseSink = graft.util.EngineMetrics.forSession(spark).phaseSink
-    val obsTag = observeId.incrementAndGet()
-
-    val sealedSegs = m.segments.filter(s => SealedStates(s.state)).map(_.segId)
-    val bruteSegs = m.segments.filter(s => BruteStates(s.state)).map(_.segId)
-
-    val q = queriesDf
-      .select(col("queryId").cast("long"), col("qv").cast("array<float>"))
-    val vectors = store.readVectors(spark)
-
-    // ---- brute path: un-hinted cross join (queries side distributed) ----
-    val bruteScored: DataFrame =
-      if (bruteSegs.isEmpty) emptyResults(spark)
-      else {
-        val live = vectors
-          .filter(col("segId").isin(bruteSegs: _*))
-          .filter(!col("deleted"))
-        scored(live.crossJoin(q), metric, params.normalizeOnRead)
-          .select(col("queryId"), col("segId"), col("gid"), col("score"), col("distance"), col("payload"))
-      }
-
-    // ---- sealed path: (segment × query bucket) tasks ---------------------
-    val sealedScored: DataFrame =
-      if (sealedSegs.isEmpty) emptyResults(spark)
-      else {
-        val qCount = q.count() // sizing job: fixes the bucket layout
-        val numBuckets = math.max(1L,
-          (qCount + queriesPerTask - 1) / queriesPerTask).toInt
-        val buckets = q.as[(Long, Array[Float])].rdd
-          .partitionBy(new org.apache.spark.HashPartitioner(numBuckets))
-        val candidates = sealedState(spark, store, sealedSegs, manifestVersion)
-          .cartesian(buckets)
-          .flatMap { case (seg, (queryId, qv)) =>
-            if (seg.cb == null) Iterator.empty // missing codebook → segment yields nothing
-            else SegmentSearch.searchSealed(seg.segId, seg.cb, qv, seg.codes, seg.adj,
-              perSegLimit, params, phaseSink).iterator.map(a => (queryId, seg.segId, a.vecId))
-          }.toDF("queryId", "segId", "vecId")
-
-        // Rerank joins are UN-hinted: with unbounded queries the candidates
-        // table is M × S × k·oversample rows and may dwarf the vectors
-        // side, so neither side is always the right hash build — AQE picks
-        // from runtime stats and sort-merge spills safely when both are
-        // huge.
-        val sealedVectors = vectors.filter(col("segId").isin(sealedSegs: _*))
-        val joined = sealedVectors
-          .join(candidates, Seq("segId", "vecId"))
-          .filter(!col("deleted"))
-          .join(q, Seq("queryId"))
-        scored(joined, metric, params.normalizeOnRead)
-          .select(col("queryId"), col("segId"), col("gid"), col("score"), col("distance"), col("payload"))
-          .observe(s"graft_dist_rerank_$obsTag", count(lit(1)).as("rows"))
-      }
-
-    merge(spark, bruteScored.unionByName(sealedScored), k, metric,
-      useAggregatorMerge = true, obsTag)
-  }
-
-  /** Global top-k merge (J7) — the shared tail of both the bounded-batch
-    * and the distributed-queries paths. No per-segment cap (J8) runs
-    * here: it keeps the best `k·oversample ≥ k` rows of each (query,
-    * segment) in the same (score desc, gid asc) order as this merge, so
-    * it cannot change the top-k. The bounded-batch sealed path applies it
-    * inside its segment tasks, where it bounds the rows they emit. */
-  private def merge(
-      spark: SparkSession,
-      all: DataFrame,
-      k: Int,
-      metric: Metric,
-      useAggregatorMerge: Boolean,
-      obsTag: Long): DataFrame = {
-    if (useAggregatorMerge) {
-      // scale path: bounded-heap top-k Aggregator — partial aggregation
-      // sends ≤ k hits per (query, partition) into the merge shuffle
-      // instead of every candidate (SURVEY.md §7.3). The payload
-      // rides through the heap and distance derives from score, so the
-      // merge output IS the final result — the candidate subtree (segment
-      // search + rerank) is evaluated exactly once.
-      import spark.implicits._
-      val topkAgg = new TopKAggregator(k)
-      val merged = all.select(col("queryId"), col("gid"), col("score"), col("payload"))
-        .as[(Long, Long, Double, Array[Byte])]
-        .groupByKey(_._1)
-        .mapValues(r => (r._2, r._3, r._4))
-        .agg(topkAgg.toColumn.name("topk"))
-        .flatMap { t =>
-          t._2.iterator.zipWithIndex.map { zi =>
-            (t._1, zi._1._1, zi._1._2, zi._1._3, zi._2 + 1)
-          }
-        }
-        .toDF("queryId", "gid", "score", "payload", "rank")
-      val distance =
-        if (metric eq Metric.L2) -col("score") else lit(1.0) - col("score")
-      merged
-        .withColumn("distance", distance)
-        .select(col("queryId"), col("gid"), col("score"), col("distance"), col("payload"), col("rank"))
-        .observe(s"graft_topk_merge_$obsTag", count(lit(1)).as("rows"))
-    } else {
-      val global = Window.partitionBy(col("queryId"))
-        .orderBy(col("score").desc, col("gid"))
-      all
-        .withColumn("rank", row_number().over(global))
-        .filter(col("rank") <= k)
-        .select(col("queryId"), col("gid"), col("score"), col("distance"), col("payload"), col("rank"))
-        .observe(s"graft_topk_merge_$obsTag", count(lit(1)).as("rows"))
+      heaps(q).iterator.map(h => (queries(q)._1, h._1, h._2, h._3))
     }
   }
 
   /** Attach score/distance columns per the reference's conventions
-    * (FdbVectorIndex.java:686-693) via codegen'd expressions.
+    * (FdbVectorIndex.java:686-693) via codegen'd expressions: the join
+    * formulation's scoring. No query path plans it; it is the reference
+    * the segment task's [[ExactScore]] kernels are held to, bit for bit
+    * (SealedRerankSpec).
     *
     * `normalizeOnRead` (COSINE only, reference FdbVectorIndex.java:823-828,
     * 1006-1015): similarity is computed as dot(q,emb)/(‖q‖·‖emb‖) with the
@@ -577,7 +490,7 @@ object Search {
       df.withColumn("score", sim).withColumn("distance", lit(1.0) - col("score"))
     }
 
-  /** Scalar exact-score kernels of the in-task rerank: the same loops as
+  /** Scalar exact-score kernels of the segment task: the same loops as
     * the `VectorExpressions` kernels [[scored]] plans (`L2SquaredDistance`,
     * `DotProduct`, `CosineSimilarity`, `VectorNorm`) — double accumulation
     * in index order over the first `min(len)` lanes (all lanes for the
@@ -640,7 +553,7 @@ object Search {
 
   private def emptyResults(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    Seq.empty[(Long, Int, Long, Double, Double, Array[Byte])]
-      .toDF("queryId", "segId", "gid", "score", "distance", "payload")
+    Seq.empty[(Long, Long, Double, Double, Array[Byte], Int)]
+      .toDF("queryId", "gid", "score", "distance", "payload", "rank")
   }
 }

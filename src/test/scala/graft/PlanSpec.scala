@@ -62,21 +62,32 @@ class PlanSpec extends AnyFunSuite {
       s"semantic dedup grew a cross join:\n$p")
   }
 
-  test("distributed-queries KNN never materializes a cross product or broadcast of queries") {
-    // the queries side is contractually unbounded (a multi-million-row
-    // table) — the sealed path must be segment tasks + EQUI-joins: no
-    // CartesianProduct on the sealed path, and the rerank un-hinted (AQE
-    // picks build side / sort-merge from runtime stats, because with
-    // unbounded queries the candidates table can dwarf the vectors side).
-    // (The trailing empty ACTIVE segment still takes the brute path; its
-    // un-hinted cross join may plan as a BroadcastNestedLoopJoin building
-    // the near-empty VECTORS side — the planner's size-based choice,
-    // which flips away as that side grows.)
-    val p = plan("vec_knn_distributed_queries")
-    assert(!p.contains("CartesianProduct"),
-      s"distributed KNN grew a cartesian product:\n$p")
-    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
-      p.contains("BroadcastHashJoin"), s"rerank lost its equi-join:\n$p")
+  test("KNN plans: no cartesian, join, window or broadcast; the merge is the only shuffle") {
+    // both entries fan out as segment tasks over one RDD leaf, sealed and
+    // brute segments alike: no query side is joined, crossed or broadcast
+    // into the plan (the distributed entry's queries side is contractually
+    // unbounded), and below the gate's presentation sort the one exchange
+    // is the top-k merge's hash shuffle under its aggregate
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    for (q <- Seq("vec_knn_sealed", "vec_knn_distributed_queries")) {
+      val plan = SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      plan.collect { case n => n.nodeName }
+        .filter(n => Seq("Cartesian", "Join", "Window", "BroadcastExchange").exists(n.contains))
+        .foreach(op => fail(s"$q plan grew a $op:\n$plan"))
+      val presentation = plan.collectFirst { case s: SortExec => s.child }
+      val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
+        .filterNot(e => presentation.exists(_ eq e))
+      assert(shuffles.size == 1 && shuffles.head.outputPartitioning.isInstanceOf[HashPartitioning],
+        s"$q plan has ${shuffles.size} exchanges besides the presentation sort's:\n$plan")
+      val above = plan.collect { case p if p.children.exists(_ eq shuffles.head) => p.nodeName }
+      assert(above.forall(_.contains("Aggregate")), s"$q: the exchange is not the top-k merge's:\n$plan")
+    }
   }
 
   test("sealed KNN reranks in the segment task: no candidate join or window, pruned scan") {
@@ -129,7 +140,7 @@ class PlanSpec extends AnyFunSuite {
     graft.index.Search.invalidate(tmp) // the next query reloads the state
     val garbage = "not a parquet file".getBytes("UTF-8")
     for (table <- Seq(store.codesDir, store.graphDir, store.codebooksDir, store.vectorsDir)) {
-      // the ACTIVE segment's vectors are the brute path's to read
+      // the ACTIVE segment's vectors are its own segment task's to read
       val others = (if (table == store.vectorsDir) Nil else Seq(m.active.get.segId)) :+ 999
       val files = others.map(id => s"segId=$id/part-x.parquet") ++
         Seq("_x", ".x").map(n => s"segId=${sealedIds.head}/$n")

@@ -12,10 +12,12 @@ import graft.core._
 
 /**
  * Search.queryDistributed must be result-identical to Search.query on
- * the same index and batch — the distributed-queries path changes the
- * DATA LAYOUT (bucketed cogroup instead of driver-collected broadcast
- * chunks), never the semantics. Exercised across: multi-bucket layouts,
- * tombstones, mixed brute+sealed manifests, and an empty batch.
+ * the same index and batch — the distributed-queries path changes only
+ * how query buckets reach the segment tasks (hash-partitioned query
+ * buckets paired with the segments by an RDD cartesian, instead of
+ * driver-collected broadcast chunks), never the semantics. Exercised
+ * across: multi-bucket layouts, tombstones, mixed brute+sealed manifests,
+ * and an empty batch.
  *
  * GRAFT_HEAVY=1 adds a 1M-query wall-clock bound: the contract that a
  * query TABLE is a legal input, with nothing query-sized on the driver.

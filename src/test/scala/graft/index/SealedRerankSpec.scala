@@ -12,12 +12,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.core._
 
-/** The bounded-batch sealed path reranks inside each segment task. Its
-  * answer must be the one the join formulation gives — approximate
-  * candidates joined back to the vectors table, exact scores from the
-  * codegen'd expressions, a per-(query, segment) cap window and a global
-  * rank window — written once below as the oracle, bit for bit, on every
-  * metric and both merges. */
+/** Both query entries search and score inside each segment task, sealed
+  * and brute segments alike. Their answer must be the one the join
+  * formulation gives — approximate candidates joined back to the vectors
+  * table, a brute cross join, exact scores from the codegen'd
+  * expressions, a per-(query, segment) cap window and a global rank
+  * window — written once below as the oracle, bit for bit, on every metric
+  * and both entries. */
 class SealedRerankSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -124,19 +125,19 @@ class SealedRerankSpec extends AnyFunSuite {
       assert(expected.length == queries.length * K)
       // the fixture exercises the gid tie-break inside the top-k
       assert(expected.groupBy(t => (t._1, t._3)).exists(_._2.size > 1))
-      for (agg <- Seq(true, false)) {
-        val got = bits(Search.query(spark, store, queriesDf, K, Some(params), useAggregatorMerge = agg))
-        assert(got == expected, s"useAggregatorMerge=$agg")
-      }
+      assert(bits(Search.query(spark, store, queriesDf, K, Some(params))) == expected, "query")
+      // 10 queries in 4 buckets
+      assert(bits(Search.queryDistributed(spark, store, queriesDf, K, Some(params),
+        queriesPerTask = 3)) == expected, "queryDistributed")
       Search.invalidate(store.path)
     }
   }
 
-  test("one bounded-batch sealed query runs at most 3 Spark jobs") {
-    // 3 on this fixture: the brute path's query broadcast and the top-k
-    // merge's map and result stages. Segment tasks read their own files,
-    // so no exchange and no job of its own feeds them. Measured with the
-    // state already cached.
+  test("one bounded-batch query runs at most 2 Spark jobs") {
+    // 2 on this fixture: the top-k merge's map and result stages. Sealed
+    // and brute segment tasks read their own files, so no exchange,
+    // broadcast join or job of its own feeds them. Measured with the state
+    // already cached.
     val (store, queries) = fixture("L2")
     val queriesDf = queries.toSeq.toDF("queryId", "qv")
     Search.query(spark, store, queriesDf, K).collect() // fills the state cache
@@ -163,6 +164,6 @@ class SealedRerankSpec extends AnyFunSuite {
     }
     val ran = jobs.values.toArray.count(_ == "rerank-query")
     println(s"[rerank jobs] query=$ran")
-    assert(ran <= 3, s"a sealed query ran $ran Spark jobs")
+    assert(ran <= 2, s"a query ran $ran Spark jobs")
   }
 }

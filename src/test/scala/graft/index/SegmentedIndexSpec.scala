@@ -238,22 +238,6 @@ class SegmentedIndexSpec extends AnyFunSuite {
     }
   }
 
-  test("aggregator merge and window merge return identical top-k") {
-    val dim = 8
-    val idx = tempIndex(IndexMeta("tm", dimension = dim, maxSegmentSize = 60,
-      pqM = 4, pqK = 16, graphDegree = 8, graphBuildBreadth = 32))
-    val data = gaussianDf(150, dim, 21).cache()
-    idx.addAll(data, "embedding", "id")
-    idx.sealPending()
-    val queries = data.filter(col("id") < 8)
-      .select(col("id").as("queryId"), col("embedding").as("qv"))
-    def rows(agg: Boolean) =
-      Search.query(spark, idx.store, queries, 10, useAggregatorMerge = agg)
-        .select("queryId", "gid", "rank").as[(Long, Long, Int)]
-        .collect().sortBy(r => (r._1, r._3)).toSeq
-    assert(rows(agg = true) == rows(agg = false))
-  }
-
   test("score conventions and WRITING invisibility") {
     val dim = 4
     val idx = tempIndex(IndexMeta("t7", dimension = dim, maxSegmentSize = 100,

@@ -60,12 +60,13 @@ class MetricsSpec extends AnyFunSuite {
     assert(em.rerankNanos.value > rerank0)
     assert(em.rerankScored.value - scored0 == em.sealedCandidates.value - cand0)
 
-    // observable plan metrics: rows the sealed segment tasks emit and the
-    // final top-k count (names carry a per-invocation suffix so query
-    // plans stay composable). Each (query, segment) emits at most
-    // k·oversample rows and at least the k it contributes to.
+    // observable plan metrics: rows the segment tasks emit and the final
+    // top-k count (names carry a per-invocation suffix so query plans stay
+    // composable). Each (query, sealed segment) emits at most k·oversample
+    // rows and at least the k it contributes to; the empty ACTIVE segment
+    // emits none.
     val om = res.queryExecution.observedMetrics
-    val rerank = om.collectFirst { case (k, v) if k.startsWith("graft_sealed_rerank") => v }
+    val rerank = om.collectFirst { case (k, v) if k.startsWith("graft_segment_rows") => v }
     val merge = om.collectFirst { case (k, v) if k.startsWith("graft_topk_merge") => v }
     val perSegLimit = 5L * math.max(1, store.readManifest().meta.oversample)
     assert(rerank.exists(r => r.getLong(0) >= 12L * 5 && r.getLong(0) <= 12L * perSegLimit),
@@ -110,6 +111,46 @@ class MetricsSpec extends AnyFunSuite {
     assert(row.getLong(5) == em.rerankNanos.value)
     assert(row.getLong(6) == em.rerankScored.value)
     assert(lines.get(1).startsWith("""{"ts_ms":5678,"""))
+  }
+
+  test("an ACTIVE segment caps its rows per query and feeds no rerank counter") {
+    val dim = 8
+    val dir = Files.createTempDirectory("graft-metrics-active").toString
+    val store = new IndexStore(dir)
+    store.createOrOpen(IndexMeta("metrics-active", dimension = dim, maxSegmentSize = 40,
+      pqM = 4, pqK = 16, graphDegree = 8, graphBuildBreadth = 32, oversample = 2), 0L)
+    val idx = new SegmentedIndex(spark, store)
+
+    import spark.implicits._
+    val r = new Random(5)
+    val df = (0 until 155).map(i => (i.toLong, Array.fill(dim)(r.nextGaussian().toFloat)))
+      .toDF("id", "embedding")
+    idx.addAll(df.filter(col("id") < 120), "embedding", "id")
+    idx.sealPending() // 3 sealed segments
+    idx.addAll(df.filter(col("id") >= 120), "embedding", "id") // 35 ACTIVE rows
+    val m = store.readManifest()
+    assert(m.segments.count(_.state == SegmentState.Sealed) == 3)
+    assert(m.segments.filter(_.state == SegmentState.Active).map(_.count).sum == 35L)
+
+    val em = EngineMetrics.forSession(spark)
+    val cand0 = em.sealedCandidates.value
+    val scored0 = em.rerankScored.value
+    val queries = df.filter(col("id") < 4)
+      .select(col("id").as("queryId"), col("embedding").as("qv"))
+    val res = Search.query(spark, store, queries, 5)
+    assert(res.collect().length == 20)
+
+    // the brute segment's 4 × 35 scored pairs are not rerank work: the
+    // counter still equals the sealed candidates
+    assert(em.rerankScored.value - scored0 == em.sealedCandidates.value - cand0)
+    // every (query, segment), the brute one included, emits between k and
+    // k·oversample rows: 4 queries × 4 segments. An uncapped brute segment
+    // would emit its 35 rows per query, 140 with the sealed ones' 60 or
+    // more, over the bound of 160.
+    val perSegLimit = 5L * 2
+    val rows = res.queryExecution.observedMetrics
+      .collectFirst { case (k, v) if k.startsWith("graft_segment_rows") => v.getLong(0) }
+    assert(rows.exists(n => n >= 16L * 5 && n <= 16L * perSegLimit), s"segment rows $rows")
   }
 
   test("histogram percentile extraction: known distribution, bounded state") {

@@ -32,6 +32,15 @@ every lifecycle round):
 
     python3 tools/joblog.py /tmp/ev/eventlog_v2_local-* \\
         --trace perfbench/.traces/lifecycle-seed611.jsonl --stages search
+
+A stage is named by the RDDs it ran, not by Spark's stage name (under AQE
+every SQL stage is named after the thread-pool frame that submitted it,
+`$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java:1768`): the
+SQL operator scopes of its RDDs in lineage order (`Scan`,
+`WholeStageCodegen (1)`, `ObjectHashAggregate`, `Exchange`, ...), then,
+after `@`, the call site of its last RDD made by engine code
+(`flatMap at Search.scala:358`). Spark's stage name stands when neither
+exists.
 """
 import argparse
 import collections
@@ -41,6 +50,9 @@ import re
 
 SQL_START = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart"
 FRAME = re.compile(r"^graft\.(?:[\w$]+\.)*?([A-Z][\w$]*\.[\w$]+)\([\w$]+\.\w+:(\d+)\)$")
+# an RDD call site in engine code: Spark skips its own and Scala's frames,
+# so a Scala file here is the engine's (JDK frames are Java files)
+RDD_SITE = re.compile(r"^\S+ at [\w$]+\.scala:\d+$")
 
 
 def events(path):
@@ -109,6 +121,26 @@ def summarise(path):
     return rows
 
 
+def stage_name(info):
+    """A stage's operator scopes and innermost engine RDD call site (see
+    the module docstring); Spark's stage name if it has neither."""
+    rdds = sorted(info.get("RDD Info") or [], key=lambda r: r["RDD ID"])
+    ops, seen = [], set()
+    for r in rdds:
+        scope = json.loads(r["Scope"]) if r.get("Scope") else {}
+        name = scope.get("name", "").strip()
+        # operator scopes are capitalised; RDD-API scopes are the method
+        # names (`map`, `union`, `mapPartitionsInternal`)
+        if name[:1].isupper() and scope["id"] not in seen:
+            seen.add(scope["id"])
+            ops.append(name)
+    sites = [r["Callsite"] for r in rdds if RDD_SITE.match(r.get("Callsite") or "")]
+    parts = [" > ".join(ops)] if ops else []
+    if sites:
+        parts.append(f"@ {sites[-1]}")
+    return " ".join(parts) or info.get("Stage Name", "?")
+
+
 def stage_table(path, groups):
     """The jobs of the groups, in start order: (job id, group, stage ids),
     and per stage id [name, tasks, stage ms, run ms, cpu ms, shuffle read
@@ -136,7 +168,7 @@ def stage_table(path, groups):
         elif kind == "SparkListenerStageCompleted":
             info = e["Stage Info"]
             s = stage(info["Stage ID"])
-            s[0] = info.get("Stage Name", "?")
+            s[0] = stage_name(info)
             s[2] = info.get("Completion Time", 0) - info.get("Submission Time", 0)
     return jobs, stages
 
