@@ -47,18 +47,25 @@ object RelationalQueries {
   private def events(s: SparkSession, dir: String): DataFrame =
     normalizeTs(t(s, dir, "events"))
 
-  /** Co-purchase pair generation (all ordered part pairs a < b sharing an
-    * order): ONE grouped aggregation + codegen'd nested-transform pairing
-    * instead of the former lineitem sort-merge SELF-JOIN (two exchanges +
-    * two sorts of the scan). Per-order pair SET is identical — collect_set
-    * drops within-order duplicate partkeys exactly as the strict `<` join
-    * condition did, and every consumer deduplicates across orders
-    * (explicit `.distinct()` or GraphAlgos.degreeCappedCanonical), so gate
-    * results are unchanged (StageProbe `cop_pairs` pins exceptAll parity;
-    * measured 2.4 s → 1.6 s warm for the pair+distinct stage). Per-group
-    * buffers are bounded by order size — the same C(n,2) volume class as
-    * the self-join it replaces. */
-  private def copurchasePairs(li: DataFrame, aName: String, bName: String): DataFrame =
+  /** Co-purchase pair generation: the ordered part pairs (a, b), a < b,
+    * that share an order — ONE grouped aggregation + codegen'd
+    * nested-transform pairing instead of the former lineitem sort-merge
+    * SELF-JOIN (two exchanges + two sorts of the scan).
+    *
+    * Pair-set contract: only the DISTINCT rows are specified — they are
+    * the pair set of the self-join `x.l_partkey < y.l_partkey` within an
+    * order. Multiplicities are not: each order emits each of its pairs
+    * once (collect_set drops a partkey repeated within the order, which
+    * the self-join paired once per copy), and a pair shared by k orders
+    * comes k times. Every consumer therefore deduplicates (explicit
+    * `.distinct()`, GraphAlgos.symmetrize or
+    * GraphAlgos.degreeCappedCanonical); a caller that counts pairs must
+    * not use it. StageProbe `cop_pairs` checks the set against the
+    * self-join's by exceptAll both ways; measured
+    * 2.4 s → 1.6 s warm for the pair+distinct stage. Per-group buffers
+    * are bounded by order size — the same C(n,2) volume class as the
+    * self-join it replaces. */
+  private[graft] def copurchasePairSet(li: DataFrame, aName: String, bName: String): DataFrame =
     li.groupBy(col("l_orderkey"))
       .agg(sort_array(collect_set(col("l_partkey"))).as("parts"))
       .select(explode(flatten(transform(col("parts"), (x, i) =>
@@ -1505,7 +1512,7 @@ object RelationalQueries {
     "graph_kcore" -> ((s, dir) => {
       val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
       // no pre-distinct: symmetrize ends in the one distinct that matters
-      val e0 = copurchasePairs(li, "src", "dst")
+      val e0 = copurchasePairSet(li, "src", "dst")
       graft.pipeline.GraphAlgos.kCorePeelAtPercentile(
           graft.pipeline.GraphAlgos.symmetrize(e0), pct = 0.05, rounds = 4)
         .select(col("node").cast("long").as("part_key"), col("core_deg"))
@@ -1542,7 +1549,7 @@ object RelationalQueries {
       val li = t(s, dir, "lineitem")
         .filter(col("l_partkey") % 10 === 0)
         .select(col("l_orderkey"), col("l_partkey"))
-      val edges = copurchasePairs(li, "a", "b")
+      val edges = copurchasePairSet(li, "a", "b")
         .distinct()
       graft.pipeline.GraphAlgos.connectedComponentsStar(edges)
         .select(col("node").cast("long").as("part_key"),
@@ -1711,7 +1718,7 @@ object RelationalQueries {
     // worst case for join salting).
     "graph_rich_club" -> ((s, dir) => {
       val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-      val edges = copurchasePairs(li, "a", "b")
+      val edges = copurchasePairSet(li, "a", "b")
         .distinct()
       edges.persist()
       val deg = edges.select(explode(array(col("a"), col("b"))).as("n"))
@@ -1744,7 +1751,7 @@ object RelationalQueries {
     // diagnostic read before choosing skew strategies; exact integers.
     "graph_degree_histogram" -> ((s, dir) => {
       val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-      val edges = copurchasePairs(li, "a", "b")
+      val edges = copurchasePairSet(li, "a", "b")
         .distinct()
       val deg = edges.select(explode(array(col("a"), col("b"))).as("n"))
         .groupBy(col("n")).agg(count(lit(1)).cast("long").as("d"))
@@ -1842,7 +1849,7 @@ object RelationalQueries {
     // survives hub skew an id-only orientation cannot.
     "graph_triangles" -> ((s, dir) => {
       val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-      val edges = copurchasePairs(li, "a", "b")
+      val edges = copurchasePairSet(li, "a", "b")
         .distinct()
       graft.pipeline.GraphAlgos.triangleCounts(edges)
         .orderBy(col("n_triangles").desc, col("node"))
@@ -1860,7 +1867,7 @@ object RelationalQueries {
       val li = t(s, dir, "lineitem")
         .filter(col("l_partkey") % 10 === 0)
         .select(col("l_orderkey"), col("l_partkey"))
-      val edges = copurchasePairs(li, "a", "b")
+      val edges = copurchasePairSet(li, "a", "b")
         .distinct()
       graft.pipeline.GraphAlgos.jaccardLinkPredictions(edges,
           maxCenterDegree = 500, minShared = 2, topK = 100)
@@ -1876,7 +1883,7 @@ object RelationalQueries {
       val li = t(s, dir, "lineitem")
         .filter(col("l_partkey") % 10 === 0)
         .select(col("l_orderkey"), col("l_partkey"))
-      val edges = copurchasePairs(li, "a", "b")
+      val edges = copurchasePairSet(li, "a", "b")
         .distinct()
       graft.pipeline.GraphAlgos.resourceAllocationLinkPredictions(edges,
           maxCenterDegree = 500, minShared = 2, topK = 100)
@@ -3408,7 +3415,7 @@ object RelationalQueries {
     // contract, wins/comparisons exact integers.
     "pipeline_bradley_terry" -> ((s, dir) => {
       // grouped nested-transform pairing instead of the (o,sk)-keyed
-      // SELF-JOIN (the copurchasePairs discipline, guide §2.4): ONE
+      // SELF-JOIN (the copurchasePairSet discipline, guide §2.4): ONE
       // lineitem scan + per-(o,sk) agg instead of two, and the join's
       // two exchanges collapse into one cheap (o)-keyed re-agg. Pair
       // multiplicity is identical — (o, sk) is unique after the first
@@ -3647,7 +3654,7 @@ object RelationalQueries {
       val li = t(s, dir, "lineitem")
         .filter(col("l_partkey") % 10 === 0)
         .select(col("l_orderkey"), col("l_partkey"))
-      val edges = copurchasePairs(li, "a", "b")
+      val edges = copurchasePairSet(li, "a", "b")
         .distinct()
       edges.persist()
       val deg = edges.select(explode(array(col("a"), col("b"))).as("node"))
@@ -3916,7 +3923,7 @@ object RelationalQueries {
       val li = t(s, dir, "lineitem")
         .filter(col("l_partkey") % 10 === 0)
         .select(col("l_orderkey"), col("l_partkey"))
-      val edges = copurchasePairs(li, "src", "dst")
+      val edges = copurchasePairSet(li, "src", "dst")
       graft.pipeline.GraphAlgos.cappedWedgePairs(edges, minCommon = 2L)
         .select(col("u").cast("long").as("u"), col("w").cast("long").as("w"),
           col("c"), (col("c") * (col("c") - 1) / 2).cast("long").as("squares"))
@@ -3936,7 +3943,7 @@ object RelationalQueries {
       val li = t(s, dir, "lineitem")
         .filter(col("l_partkey") % 10 === 0)
         .select(col("l_orderkey"), col("l_partkey"))
-      val edges = copurchasePairs(li, "src", "dst")
+      val edges = copurchasePairSet(li, "src", "dst")
       graft.pipeline.GraphAlgos.cappedSupport(edges)
         .groupBy(least(col("support"), lit(10L)).as("support_bucket"))
         .agg(count(lit(1)).cast("long").as("n_edges"))
@@ -3959,7 +3966,7 @@ object RelationalQueries {
       val li = t(s, dir, "lineitem")
         .filter(col("l_partkey") % 10 === 0)
         .select(col("l_orderkey"), col("l_partkey"))
-      val edges = copurchasePairs(li, "src", "dst")
+      val edges = copurchasePairSet(li, "src", "dst")
       graft.pipeline.GraphAlgos.kTrussPeel(edges, k = 4, rounds = 2)
         .groupBy()
         .agg(count(lit(1)).cast("long").as("n_truss_edges"),
@@ -4229,7 +4236,7 @@ object RelationalQueries {
       val li = t(s, dir, "lineitem")
         .filter(col("l_partkey") % 10 === 0)
         .select(col("l_orderkey"), col("l_partkey"))
-      val edges = copurchasePairs(li, "a", "b")
+      val edges = copurchasePairSet(li, "a", "b")
         .distinct()
       graft.pipeline.GraphAlgos.connectedComponentsStar(edges)
         .groupBy(col("component"))

@@ -778,43 +778,64 @@ object Dedup {
     // BigInteger stats math by round ~20 (measured on a 1M-node
     // component; see SparkShims)
     GraphAlgos.inScope(mirrored, freshStats = true) { g =>
-      // size the label layouts by data volume, not core count (the
-      // sizedParts discipline shared with connectedComponentsStar): the
-      // count also materializes the edge cache once, up front — the
-      // JobProbe'd shape ran 64-task stages over ~0.1 MB of labels, all
-      // scheduling overhead
-      g.rows = g.m
-      val init = g.checkpoint(g.e.select(col("src").as("id")).distinct()
-        .withColumn("label", col("id")))
-      // converged when no label moved: a cheap in-memory scan over the
-      // checkpointed rows, no join action. A loop that never converges
-      // throws: silently returning partial labels would split one true
-      // component into several "clusters" (deeper graphs need a larger
-      // maxRounds; rounds scale with cluster diameter)
-      g.iterate(init, maxRounds, until = _.filter(col("label") =!= col("prev")).isEmpty,
-          fixpoint = "duplicateClusters") { (labels, _) =>
-        // (a) edge propagation: pull the neighbor's label. Materialized
-        // eagerly — the |E|-sized aggregation feeds BOTH sides of the
-        // pointer-jump self-join and must not run twice. The previous
-        // label rides along as `prev` (labels holds exactly one row per
-        // id, so min(prev) over the union recovers it) — the convergence
-        // check then needs no join back to the old labels.
-        val prop = g.e.join(labels.withColumnRenamed("id", "src"), Seq("src"))
-          .select(col("dst").as("id"), col("label"), lit(null).cast("long").as("prev"))
-        val stepped = g.checkpoint(labels.withColumn("prev", col("label"))
-          .unionByName(prop)
-          .groupBy("id").agg(min("label").as("label"), min("prev").as("prev")))
-        // (b) pointer jumping: label := label(label) — a label always
-        // names a node of the same component (and labels only decrease),
-        // so the lookup table is `stepped` itself and each id joins
-        // exactly one lookup row
-        val next = g.checkpoint(stepped
-          .join(stepped.select(col("id").as("label"), col("label").as("ll")), Seq("label"))
-          .select(col("id"), least(col("label"), col("ll")).as("label"), col("prev")))
-        g.release(stepped)
-        next
-      }.last
+      if (g.local) localClusters(g, maxRounds) else roundClusters(g, maxRounds)
     }.select(col("id").as("doc_id"), col("label").as("cluster_id"))
+  }
+
+  /** The broadcast and partitioned regimes of [[duplicateClusters]]' label
+    * loop: one [[GraphAlgos.GraphScope.iterate]] round per propagation and
+    * pointer jump. */
+  private def roundClusters(g: GraphAlgos.GraphScope, maxRounds: Int): DataFrame = {
+    // size the label layouts by data volume, not core count (the
+    // sizedParts discipline shared with connectedComponentsStar) — the
+    // JobProbe'd shape ran 64-task stages over ~0.1 MB of labels, all
+    // scheduling overhead
+    g.rows = g.m
+    val init = g.checkpoint(g.e.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")))
+    // converged when no label moved: a cheap in-memory scan over the
+    // checkpointed rows, no join action. A loop that never converges
+    // throws: silently returning partial labels would split one true
+    // component into several "clusters" (deeper graphs need a larger
+    // maxRounds; rounds scale with cluster diameter)
+    g.iterate(init, maxRounds, until = _.filter(col("label") =!= col("prev")).isEmpty,
+        fixpoint = "duplicateClusters") { (labels, _) =>
+      // (a) edge propagation: pull the neighbor's label. Materialized
+      // eagerly — the |E|-sized aggregation feeds BOTH sides of the
+      // pointer-jump self-join and must not run twice. The previous
+      // label rides along as `prev` (labels holds exactly one row per
+      // id, so min(prev) over the union recovers it) — the convergence
+      // check then needs no join back to the old labels.
+      val prop = g.e.join(labels.withColumnRenamed("id", "src"), Seq("src"))
+        .select(col("dst").as("id"), col("label"), lit(null).cast("long").as("prev"))
+      val stepped = g.checkpoint(labels.withColumn("prev", col("label"))
+        .unionByName(prop)
+        .groupBy("id").agg(min("label").as("label"), min("prev").as("prev")))
+      // (b) pointer jumping: label := label(label) — a label always
+      // names a node of the same component (and labels only decrease),
+      // so the lookup table is `stepped` itself and each id joins
+      // exactly one lookup row
+      val next = g.checkpoint(stepped
+        .join(stepped.select(col("id").as("label"), col("label").as("ll")), Seq("label"))
+        .select(col("id"), least(col("label"), col("ll")).as("label"), col("prev")))
+      g.release(stepped)
+      next
+    }.last
+  }
+
+  /** The local regime of [[duplicateClusters]]' label loop: every round
+    * in the scope's one task ([[LocalGraph.clusterLabels]]), which reports
+    * convergence through an accumulator; a loop that did not converge
+    * throws as the distributed one does. */
+  private def localClusters(g: GraphAlgos.GraphScope, maxRounds: Int): DataFrame = {
+    val converged = g.e.sparkSession.sparkContext.longAccumulator("duplicateClusters converged")
+    val labels = g.runLocal(LocalGraph.LabelSchema) { rows =>
+      val (out, ok) = LocalGraph.clusterLabels(LocalGraph.csr(rows), maxRounds)
+      if (ok) converged.add(1L)
+      out
+    }
+    if (converged.sum == 0L) throw g.notConverged("duplicateClusters", maxRounds)
+    labels
   }
 
   // --- embedding cosine near-dup -------------------------------------------

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.graft.SparkShims
 
 /**
@@ -46,6 +47,17 @@ import org.apache.spark.sql.graft.SparkShims
  *    [[BroadcastRankMaxNodes]] (the planner cannot size a checkpoint
  *    leaf, so it never converts on its own) and keeps every join
  *    partitioned past it.
+ *  - a third regime, local, runs a small loop in ONE task: at most
+ *    [[LocalMaxRows]] edge rows x seeds, the scope coalesces its
+ *    persisted edges into one partition (never collected to the driver)
+ *    and the kernel's local arm ([[LocalGraph]]) runs every round there
+ *    on CSR arrays, with the distributed arms' exact semantics. The rows
+ *    it emits come back as a checkpoint the scope owns, so the release
+ *    rules are unchanged, and the final aggregations stay the shared
+ *    Spark expressions. A round costs several Spark jobs (~0.3 s/job of
+ *    scheduler floor at pipeline scale); the local arm costs one job in
+ *    all. Armed for the shortest-path forward pass, the betweenness and
+ *    stress backward pass and [[Dedup.duplicateClusters]].
  */
 object GraphAlgos {
 
@@ -190,6 +202,14 @@ object GraphAlgos {
   private def maybeBcast(df: DataFrame, on: Boolean): DataFrame =
     if (on) broadcast(df) else df
 
+  /** Bound of the local regime ([[GraphScope.local]]) on edge rows x
+    * seeds: the one task holds the edges as CSR (12 bytes an edge, about
+    * 40 while it builds) and one seed's per-node arrays and rows at a
+    * time, so the bound keeps the task to about 100 MB at most. Tests set
+    * it to 0 to drive the broadcast and partitioned regimes on small
+    * fixtures. */
+  private[pipeline] var LocalMaxRows: Long = 1000000L
+
   /** The state a kernel holds for its lifetime (see the scale notes):
     * every frame it persists or checkpoints, and — when it has an edge
     * set — the persisted long-cast edges `e` (with `w` when `weighted`),
@@ -198,7 +218,14 @@ object GraphAlgos {
     * holds come in through [[know]]. Under `freshStats` every checkpoint
     * carries its measured size ([[SparkShims.freshCheckpointStats]]): a
     * fixpoint round that self-joins its state would otherwise square the
-    * inherited estimate each round. */
+    * inherited estimate each round.
+    *
+    * It picks one of three regimes. [[local]]: at most [[LocalMaxRows]]
+    * edge rows x seeds; a kernel that has a local arm runs its whole loop
+    * in one task ([[runLocal]]) and gets back a checkpoint the scope owns.
+    * Otherwise [[bcast]] chooses: node-sized per-round tables broadcast
+    * under [[BroadcastRankMaxNodes]] state rows, every join stays
+    * partitioned past it. */
   private[pipeline] final class GraphScope(
       edges: DataFrame, weighted: Boolean, seeds: Int, persistNodes: Boolean,
       freshStats: Boolean) {
@@ -228,6 +255,15 @@ object GraphAlgos {
     def rows_=(r: Long): Unit = stateRows = r
     def bcast: Boolean = rows <= BroadcastRankMaxNodes
     def maybeBcast(df: DataFrame): DataFrame = GraphAlgos.maybeBcast(df, bcast)
+    /** The local regime: `m` x `seeds` within [[LocalMaxRows]]. */
+    def local: Boolean = m <= LocalMaxRows / seeds.max(1)
+
+    /** The local regime's one task: `kernel` reads the persisted edges,
+      * coalesced into one partition (never collected to the driver), and
+      * emits the rows the kernel's round loop would have produced, as
+      * `schema`. Returns them as a checkpoint the scope owns. */
+    def runLocal(schema: StructType)(kernel: Iterator[Row] => Iterator[Row]): DataFrame =
+      materialize(e.sparkSession.createDataFrame(e.coalesce(1).rdd.mapPartitions(kernel), schema))
 
     def persist(df: DataFrame): DataFrame = { df.persist(); cached ::= df; df }
     def own(checkpointed: DataFrame): DataFrame = {
@@ -272,10 +308,13 @@ object GraphAlgos {
         states = if (keepAll) states :+ next else Vector(next)
         done = (fixpoint.nonEmpty || r < rounds) && until(next)
       }
-      if (fixpoint.nonEmpty && !done)
-        throw new IllegalStateException(s"$fixpoint did not converge within $rounds rounds")
+      if (fixpoint.nonEmpty && !done) throw notConverged(fixpoint, rounds)
       states
     }
+
+    /** What a `fixpoint` loop throws when it did not converge. */
+    def notConverged(fixpoint: String, rounds: Int): IllegalStateException =
+      new IllegalStateException(s"$fixpoint did not converge within $rounds rounds")
 
     def close(keep: DataFrame): Unit = {
       checkpoints.filterNot(_ eq keep).foreach(SparkShims.unpersistCheckpoint)
@@ -1195,13 +1234,31 @@ object GraphAlgos {
     * [[stressCentrality]], whose backward passes reuse the SAME scope and
     * so the same cached edges (a private copy per pass would re-derive
     * the full edge set — typically a fact-table join + symmetrize
-    * distinct — a second time). Returns the settled set, owned by `g`. */
+    * distinct — a second time). Returns the settled set, owned by `g`.
+    * In the local regime one task runs every round — and, given a
+    * `fold`, the backward pass too, whose value then rides each settled
+    * row ([[LocalGraph.pathRows]]). */
   private def shortestPathCountsOn(
       g: GraphScope,
       sources: Seq[Long],
-      rounds: Int): DataFrame = {
+      rounds: Int,
+      fold: Option[LocalGraph.Fold] = None): DataFrame = {
     require(rounds >= 1, "at least one BFS round")
     require(sources.nonEmpty, "shortestPathCounts needs a non-empty seed set")
+    if (g.local) {
+      require(g.m > 0, "shortestPathCounts on an empty edge set")
+      val seeds = sources.toArray
+      g.runLocal(LocalGraph.pathSchema(fold))(
+        rows => LocalGraph.pathRows(LocalGraph.csr(rows), seeds, rounds, fold))
+    } else shortestPathCountsRounds(g, sources, rounds)
+  }
+
+  /** The broadcast and partitioned regimes' forward pass: one
+    * [[GraphScope.iterate]] round per BFS layer. */
+  private def shortestPathCountsRounds(
+      g: GraphScope,
+      sources: Seq[Long],
+      rounds: Int): DataFrame = {
     require(g.n > 0, "shortestPathCounts on an empty edge set")
     // settled state = the LIST of per-round frontier checkpoints, united
     // lazily where needed — re-checkpointing the whole accumulated set
@@ -1348,10 +1405,10 @@ object GraphAlgos {
     require(rounds >= 2, "betweenness needs at least an interior layer")
     inScope(edges, seeds = sources.size) { g =>
       val (_, layers) = backwardPass(g, sources, rounds, Seq("seed", "node", "sigma"),
-          "delta", lit(0.0))(
+          LocalGraph.Delta, lit(0.0))(
         push = (lit(1.0) + col("delta")) / col("sigma"),
         pull = s => col("sigma") * coalesce(s, lit(0.0)))
-      g.materialize(layers.reduce(_ unionByName _)
+      g.materialize(layers
         .groupBy(col("node"))
         .agg(round(sum(col("delta")), 6).as("betweenness")))
     }
@@ -1359,35 +1416,43 @@ object GraphAlgos {
 
   /** The Brandes backward pass [[betweennessCentrality]] and
     * [[stressCentrality]] share: the forward pass ([[shortestPathCountsOn]]
-    * over `g`, persisted), then one `value` per settled (seed, node) layer
-    * by layer from the horizon inward. The horizon layer holds `horizon`;
-    * layer r sums `push` of layer r+1 over each node's shortest-path-DAG
-    * successors (one edges⋈layer equi-join + keyed sum) and `pull`s its
-    * value from that sum (NULL without successors), beside the forward
-    * `layerCols`. Layers are (seed × layer)-sized, so they broadcast under
-    * the node bound by the forward result's size — without the hint each
-    * layer's join shuffles the static edge set. Returns the forward result
-    * and the layers, newest (layer 1) first, all owned by `g`. */
+    * over `g`, persisted), then one `fold` value per settled (seed, node)
+    * layer by layer from the horizon inward. The horizon layer holds
+    * `horizon`; layer r sums `push` of layer r+1 over each node's
+    * shortest-path-DAG successors (one edges⋈layer equi-join + keyed sum)
+    * and `pull`s its value from that sum (NULL without successors), beside
+    * the forward `layerCols`. Layers are (seed × layer)-sized, so they
+    * broadcast under the node bound by the forward result's size — without
+    * the hint each layer's join shuffles the static edge set. In the local
+    * regime the forward pass' task computes the same values
+    * ([[LocalGraph.pathRows]]). Returns the forward result and the union of
+    * the layers, newest (layer 1) first, all owned by `g`. */
   private def backwardPass(
       g: GraphScope, sources: Seq[Long], rounds: Int,
-      layerCols: Seq[String], value: String, horizon: Column)(
-      push: Column, pull: Column => Column): (DataFrame, Seq[DataFrame]) = {
-    val fwd = g.persist(shortestPathCountsOn(g, sources, rounds))
-    g.rows = fwd.count()
-    def atDist(r: Int): DataFrame =
-      fwd.where(col("dist") === r).select(layerCols.map(col): _*)
-    val layers = g.iterate(g.checkpoint(atDist(rounds).withColumn(value, horizon)),
-        rounds - 1, keepAll = true) { (next, i) =>
-      val succ = g.eR.join(
-          g.maybeBcast(next.select(col("seed"), col("node").as("dst"), push.as("x"))),
-          Seq("dst"))
-        .groupBy(col("seed"), col("src"))
-        .agg(sum(col("x")).as("s"))
-        .select(col("seed"), col("src").as("node"), col("s"))
-      atDist(rounds - i).join(g.maybeBcast(succ), Seq("seed", "node"), "left")
-        .select(layerCols.map(col) :+ pull(col("s")).as(value): _*)
+      layerCols: Seq[String], fold: LocalGraph.Fold, horizon: Column)(
+      push: Column, pull: Column => Column): (DataFrame, DataFrame) = {
+    val value = fold.column
+    if (g.local) {
+      val fwd = shortestPathCountsOn(g, sources, rounds, Some(fold))
+      (fwd, fwd.where(col("dist") >= 1).select((layerCols :+ value).map(col): _*))
+    } else {
+      val fwd = g.persist(shortestPathCountsOn(g, sources, rounds))
+      g.rows = fwd.count()
+      def atDist(r: Int): DataFrame =
+        fwd.where(col("dist") === r).select(layerCols.map(col): _*)
+      val layers = g.iterate(g.checkpoint(atDist(rounds).withColumn(value, horizon)),
+          rounds - 1, keepAll = true) { (next, i) =>
+        val succ = g.eR.join(
+            g.maybeBcast(next.select(col("seed"), col("node").as("dst"), push.as("x"))),
+            Seq("dst"))
+          .groupBy(col("seed"), col("src"))
+          .agg(sum(col("x")).as("s"))
+          .select(col("seed"), col("src").as("node"), col("s"))
+        atDist(rounds - i).join(g.maybeBcast(succ), Seq("seed", "node"), "left")
+          .select(layerCols.map(col) :+ pull(col("s")).as(value): _*)
+      }
+      (fwd, layers.reverse.reduce(_ unionByName _))
     }
-    (fwd, layers.reverse)
   }
 
   /**
@@ -1415,10 +1480,10 @@ object GraphAlgos {
     require(rounds >= 2, "stress needs at least an interior layer")
     inScope(edges, seeds = sources.size) { g =>
       val (fwd, layers) = backwardPass(g, sources, rounds, Seq("seed", "node"),
-          "g", lit(1L))(
+          LocalGraph.Suffix, lit(1L))(
         push = col("g"),
         pull = s => lit(1L) + coalesce(s, lit(0L)))
-      g.materialize(layers.reduce(_ unionByName _)
+      g.materialize(layers
         .join(fwd.where(col("dist") >= 1)
           .select(col("seed"), col("node"), col("sigma")), Seq("seed", "node"))
         .groupBy(col("node"))

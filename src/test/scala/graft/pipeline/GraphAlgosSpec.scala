@@ -565,11 +565,16 @@ class GraphAlgosSpec extends AnyFunSuite {
   test("benched graph kernels run no more Spark jobs than their recorded bounds") {
     // the pipeline gates pay a per-job floor (about half of each gate's
     // time is driver gap), so a loop refactor that adds a job per round
-    // shows up here first. Bounds: the counts the kernels ran on this
-    // fixture before they moved onto GraphScope.
+    // shows up here first. Bounds of the round-by-round regimes (local
+    // bound 0): the counts the kernels ran on this fixture before they
+    // moved onto GraphScope. Bounds of the local regime: the counts the
+    // piloted kernels run with their whole loop in one task.
     val sym = GraphAlgos.symmetrize(GraphRegimeParitySpec.edges(spark))
     val seeds = Seq(0L, 5L, 30L)
-    val kernels = Seq[(String, Int, () => Any)](
+    def chainClusters(): Long = Dedup.duplicateClusters(
+      Seq.tabulate(199)(i => (i.toLong, i.toLong + 1)).toDF("doc_a", "doc_b"),
+      maxRounds = 30).count()
+    val rounds = Seq[(String, Int, () => Any)](
       ("pageRankFixedPoint", 18, () => GraphAlgos.pageRankFixedPoint(sym, iterations = 3)),
       ("labelPropagation", 16, () => GraphAlgos.labelPropagation(sym, rounds = 3)),
       ("kCorePeelAtPercentile", 17,
@@ -581,14 +586,32 @@ class GraphAlgosSpec extends AnyFunSuite {
       // the fixpoint and peel loops, each read to the end: the 200-node
       // chain of PipelineSpec, the 200-link descending chain, and K4 +
       // pendant + hanging triangle
-      ("duplicateClusters", 55, () => Dedup.duplicateClusters(
-        Seq.tabulate(199)(i => (i.toLong, i.toLong + 1)).toDF("doc_a", "doc_b"),
-        maxRounds = 30).count()),
+      ("duplicateClusters", 55, () => chainClusters()),
       ("connectedComponentsStar", 70, () => GraphAlgos.connectedComponentsStar(
         (0L until 200L).map(i => (200L - i, 199L - i)).toDF("src", "dst")).count()),
       ("kTrussPeel", 26, () => GraphAlgos.kTrussPeel(
         (k4PlusPendant ++ Seq((5L, 6L), (5L, 7L), (6L, 7L))).toDF("src", "dst"),
         k = 4, rounds = 2).count()))
+    val local = Seq[(String, Int, () => Any)](
+      ("local shortestPathCounts", 5,
+        () => GraphAlgos.shortestPathCounts(sym, seeds, rounds = 6)),
+      ("local betweennessCentrality", 7,
+        () => GraphAlgos.betweennessCentrality(sym, seeds, rounds = 3)),
+      ("local stressCentrality", 10,
+        () => GraphAlgos.stressCentrality(sym, seeds, rounds = 3)),
+      ("local duplicateClusters", 6, () => chainClusters()))
+    val localMax = GraphAlgos.LocalMaxRows
+    val counts = try {
+      GraphAlgos.LocalMaxRows = 0L
+      jobCounts(rounds)
+    } finally GraphAlgos.LocalMaxRows = localMax
+    (counts ++ jobCounts(local)).foreach { case (name, ran, bound) =>
+      assert(ran <= bound, s"$name ran $ran Spark jobs (bound $bound)")
+    }
+  }
+
+  /** The Spark jobs each kernel runs, beside its bound. */
+  private def jobCounts(kernels: Seq[(String, Int, () => Any)]): Seq[(String, Int, Int)] = {
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -615,8 +638,6 @@ class GraphAlgosSpec extends AnyFunSuite {
       (name, jobs.values.toArray.count(_ == s"kernel-$name"), bound)
     }
     println(counts.map { case (n, c, _) => s"$n=$c" }.mkString("[kernel jobs] ", " ", ""))
-    counts.foreach { case (name, ran, bound) =>
-      assert(ran <= bound, s"$name ran $ran Spark jobs (bound $bound)")
-    }
+    counts
   }
 }

@@ -7,17 +7,22 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /**
- * Broadcast-vs-partitioned regime EQUIVALENCE for every iterative graph
- * kernel: each algorithm sizes its per-round join strategy off the node
- * count (`GraphAlgos.BroadcastRankMaxNodes` — rank tables broadcast
- * under the bound, hash-partitioned + shaped edges past it, the
- * billion-node path). The two regimes are independent physical plans of
- * the same integer fixed-point, so exact result equality is a real
- * invariant — and the partitioned arm otherwise never executes on test
- * fixtures (the r15 coverage gap analysis named these arms explicitly).
+ * Regime EQUIVALENCE for every iterative graph kernel: each algorithm
+ * sizes its per-round join strategy off the node count
+ * (`GraphAlgos.BroadcastRankMaxNodes` — rank tables broadcast under the
+ * bound, hash-partitioned + shaped edges past it, the billion-node path),
+ * and the kernels with a local arm run their whole loop in one task under
+ * `GraphAlgos.LocalMaxRows` edge rows x seeds. The regimes are
+ * independent implementations of the same integer fixed-point, so exact
+ * result equality is a real invariant — and the partitioned arm otherwise
+ * never executes on test fixtures (the r15 coverage gap analysis named
+ * these arms explicitly).
  *
- * The bound is forced to 0 via -Dgraft.graph.broadcastRankMaxNodes for
- * the partitioned run, then restored.
+ * The broadcast and partitioned runs set the local bound to 0, so they
+ * run the round-by-round plans; the partitioned run also forces the node
+ * bound to 0 via -Dgraft.graph.broadcastRankMaxNodes. Both are restored.
+ * The path-count, betweenness and stress tests keep their names from
+ * before the local regime and compare all three regimes.
  */
 class GraphRegimeParitySpec extends AnyFunSuite {
 
@@ -25,13 +30,22 @@ class GraphRegimeParitySpec extends AnyFunSuite {
 
   private lazy val edges: DataFrame = GraphRegimeParitySpec.edges(spark)
 
-  private def inRegime[T](partitioned: Boolean)(body: => T): T = {
+  private val Local = "local"
+  private val Broadcast = "broadcast"
+  private val Partitioned = "partitioned"
+  /** The regimes of a kernel with a local arm. */
+  private val All = Seq(Local, Broadcast, Partitioned)
+
+  private def inRegime[T](regime: String)(body: => T): T = {
     val key = "graft.graph.broadcastRankMaxNodes"
     val prev = sys.props.get(key)
+    val localMax = GraphAlgos.LocalMaxRows
     try {
-      if (partitioned) sys.props(key) = "0" else sys.props -= key
+      if (regime == Partitioned) sys.props(key) = "0" else sys.props -= key
+      if (regime != Local) GraphAlgos.LocalMaxRows = 0L
       body
     } finally {
+      GraphAlgos.LocalMaxRows = localMax
       prev match {
         case Some(v) => sys.props(key) = v
         case None => sys.props -= key
@@ -41,25 +55,28 @@ class GraphRegimeParitySpec extends AnyFunSuite {
 
   /** Rows of one run, after checking that the run released everything it
     * persisted or checkpointed except the frame it returns. */
-  private def rowsOf(name: String, partitioned: Boolean)(run: => DataFrame): Seq[Seq[Any]] =
-    inRegime(partitioned) {
+  private def rowsOf(name: String, regime: String)(run: => DataFrame): Seq[Seq[Any]] =
+    inRegime(regime) {
       // new ids only: a GC may clean older RDDs mid-run
       val before = spark.sparkContext.getPersistentRDDs.keySet
       val rows = run.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
       val left = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
-      assert(left <= 1, s"$name (partitioned = $partitioned) left $left persisted RDDs")
+      assert(left <= 1, s"$name ($regime) left $left persisted RDDs")
       rows
     }
 
-  private def assertSameResult(name: String)(run: => DataFrame): Unit = {
-    val broadcastRows = rowsOf(name, partitioned = false)(run)
-    val partitionedRows = rowsOf(name, partitioned = true)(run)
-    assert(broadcastRows.length == partitionedRows.length,
-      s"$name: row count differs between regimes")
-    broadcastRows.zip(partitionedRows).foreach { case (a, b) =>
-      assert(a == b, s"$name: regimes disagree: $a vs $b")
+  private def assertSameResult(name: String, regimes: Seq[String] = Seq(Broadcast, Partitioned))(
+      run: => DataFrame): Unit = {
+    val results = regimes.map(r => r -> rowsOf(name, r)(run))
+    val (first, firstRows) = results.head
+    results.tail.foreach { case (regime, rows) =>
+      assert(firstRows.length == rows.length,
+        s"$name: row count differs between $first and $regime")
+      firstRows.zip(rows).foreach { case (a, b) =>
+        assert(a == b, s"$name: $first and $regime disagree: $a vs $b")
+      }
     }
-    assert(broadcastRows.nonEmpty, s"$name: empty result")
+    assert(firstRows.nonEmpty, s"$name: empty result")
   }
 
   test("PageRank: partitioned regime matches broadcast exactly") {
@@ -105,8 +122,32 @@ class GraphRegimeParitySpec extends AnyFunSuite {
   }
 
   test("path counts: partitioned regime matches broadcast exactly") {
-    assertSameResult("shortestPathCounts") {
+    assertSameResult("shortestPathCounts", All) {
       GraphAlgos.shortestPathCounts(edges, sources = Seq(0L), rounds = 4)
+    }
+  }
+
+  /** The fixtures on which a careless local arm would diverge: an edge
+    * list with one duplicated edge (each copy joins, so σ doubles along
+    * it), a seed that is not a node and one listed twice (two dist-0
+    * rows, σ = 2 pushed), and an edge with a null end. */
+  private def dupEdge(e: DataFrame): DataFrame = {
+    import spark.implicits._
+    e.select(col("src"), col("dst")).unionByName(Seq((0L, 1L)).toDF("src", "dst"))
+  }
+  private def nullEnd(e: DataFrame): DataFrame = {
+    import spark.implicits._
+    e.select(col("src"), col("dst"))
+      .unionByName(Seq[(Long, Option[Long])]((3L, None), (4L, None)).toDF("src", "dst"))
+  }
+  private val oddSeeds = Seq(0L, 999L, 30L, 30L)
+
+  test("path counts: the regimes agree on a duplicated edge, odd seeds and a null end") {
+    assertSameResult("shortestPathCounts dupEdge", All) {
+      GraphAlgos.shortestPathCounts(dupEdge(edges), oddSeeds, rounds = 4)
+    }
+    assertSameResult("shortestPathCounts nullEnd", All) {
+      GraphAlgos.shortestPathCounts(nullEnd(edges), oddSeeds, rounds = 4)
     }
   }
 
@@ -135,16 +176,44 @@ class GraphRegimeParitySpec extends AnyFunSuite {
   }
 
   test("betweenness: partitioned regime matches broadcast exactly") {
-    assertSameResult("betweennessCentrality") {
+    assertSameResult("betweennessCentrality", All) {
       GraphAlgos.betweennessCentrality(GraphAlgos.symmetrize(edges),
         sources = Seq(0L, 30L), rounds = 4)
+    }
+    assertSameResult("betweennessCentrality dupEdge", All) {
+      GraphAlgos.betweennessCentrality(dupEdge(GraphAlgos.symmetrize(edges)), oddSeeds, rounds = 4)
+    }
+    assertSameResult("betweennessCentrality nullEnd", All) {
+      GraphAlgos.betweennessCentrality(nullEnd(GraphAlgos.symmetrize(edges)), oddSeeds, rounds = 4)
     }
   }
 
   test("stress: partitioned regime matches broadcast exactly") {
-    assertSameResult("stressCentrality") {
+    assertSameResult("stressCentrality", All) {
       GraphAlgos.stressCentrality(GraphAlgos.symmetrize(edges),
         sources = Seq(0L, 30L), rounds = 4)
+    }
+    assertSameResult("stressCentrality dupEdge", All) {
+      GraphAlgos.stressCentrality(dupEdge(GraphAlgos.symmetrize(edges)), oddSeeds, rounds = 4)
+    }
+    assertSameResult("stressCentrality nullEnd", All) {
+      GraphAlgos.stressCentrality(nullEnd(GraphAlgos.symmetrize(edges)), oddSeeds, rounds = 4)
+    }
+  }
+
+  test("duplicate clusters: local, broadcast and partitioned regimes agree exactly") {
+    import spark.implicits._
+    // the fixture's one big component plus two chains and a pair apart
+    // from it, a duplicated pair and a pair with a null end
+    val pairs = edges.select(col("src").as("doc_a"), col("dst").as("doc_b"))
+      .unionByName(((100L until 120L).map(i => (i, i + 1)) ++ (200L until 205L).map(i => (i + 1, i)) ++
+        Seq((300L, 301L), (300L, 301L))).toDF("doc_a", "doc_b"))
+    assertSameResult("duplicateClusters", All) {
+      Dedup.duplicateClusters(pairs)
+    }
+    assertSameResult("duplicateClusters nullEnd", All) {
+      Dedup.duplicateClusters(pairs.unionByName(
+        Seq[(Option[Long], Option[Long])]((Some(7L), None), (None, Some(120L))).toDF("doc_a", "doc_b")))
     }
   }
 

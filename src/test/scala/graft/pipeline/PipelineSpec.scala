@@ -60,6 +60,27 @@ class PipelineSpec extends AnyFunSuite {
     assert(got.length == 201 && got.forall(_._2 == 0L))
   }
 
+  test("duplicateClusters keeps its fixpoint contract in the local regime") {
+    // the 200-node drift chain needs several pointer-jump rounds: 2 are
+    // too few, the default 20 enough. The distributed run sets the local
+    // bound to 0.
+    val chain = (0L until 200L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    def inRegime[T](local: Boolean)(body: => T): T = {
+      val prev = GraphAlgos.LocalMaxRows
+      try { if (!local) GraphAlgos.LocalMaxRows = 0L; body }
+      finally GraphAlgos.LocalMaxRows = prev
+    }
+    val errors = Seq(true, false).map(local => inRegime(local) {
+      intercept[IllegalStateException](Dedup.duplicateClusters(chain, maxRounds = 2)).getMessage
+    })
+    assert(errors.distinct.size == 1, errors)
+    assert(errors.head.contains("duplicateClusters"), errors.head)
+    val labels = Seq(true, false).map(local => inRegime(local) {
+      Dedup.duplicateClusters(chain).as[(Long, Long)].collect().sorted.toSeq
+    })
+    assert(labels.head.length == 201 && labels.head == labels(1))
+  }
+
   test("duplicateClusters releases superseded per-round checkpoint storage") {
     val pairs = Seq.tabulate(199)(i => (i.toLong, i.toLong + 1))
       .toDF("doc_a", "doc_b") // one 200-node chain → several pointer-jump rounds

@@ -177,18 +177,13 @@ object StageProbe {
           }
         }
       case "cop_pairs" =>
-        // co-purchase pair generation: SMJ self-join (current) vs ONE
-        // grouped aggregation + nested-transform pairing (substring-dedup
-        // pattern); both ending in the same distinct
+        // co-purchase pair generation: SMJ self-join vs the production
+        // pairing (RelationalQueries.copurchasePairSet, ONE grouped
+        // aggregation + nested-transform pairing); both ending in the
+        // same distinct
         def li = spark.read.parquet(s"$dir/lineitem.parquet")
           .select(col("l_orderkey"), col("l_partkey"))
-        def grouped = li.groupBy(col("l_orderkey"))
-          .agg(sort_array(collect_set(col("l_partkey"))).as("parts"))
-          .select(explode(flatten(transform(col("parts"), (x, i) =>
-            transform(slice(col("parts"), i + lit(2), size(col("parts"))),
-              y => struct(x.as("a"), y.as("b"))))))
-            .as("p"))
-          .select(col("p.a").as("a"), col("p.b").as("b"))
+        def grouped = graft.operators.RelationalQueries.copurchasePairSet(li, "a", "b")
         time("cop_selfjoin_distinct", copurchaseParts)
         time("cop_grouped_distinct", grouped.distinct())
         val a = copurchaseParts.count(); val b = grouped.distinct().count()
