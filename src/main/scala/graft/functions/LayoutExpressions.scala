@@ -17,6 +17,44 @@ import org.apache.spark.sql.types._
  * this expression supplies the key.
  */
 
+/** The layout kernels, written once: each expression's `nullSafeEval`
+  * calls its method and its generated code calls the same method. */
+object LayoutKernels {
+  /** Java name of this object's static methods, for generated code. */
+  private[functions] val Name: String = getClass.getName.stripSuffix("$")
+
+  /** Morton interleave: bit 2i = x bit i, bit 2i+1 = y bit i, i < 16. */
+  def zorder2(x: Int, y: Int): Long = {
+    var z = 0L
+    var i = 0
+    while (i < 16) {
+      z |= ((x >> i) & 1).toLong << (2 * i)
+      z |= ((y >> i) & 1).toLong << (2 * i + 1)
+      i += 1
+    }
+    z
+  }
+
+  /** Position of (x, y) mod 2^16 on the order-16 Hilbert curve. */
+  def hilbert2(px: Int, py: Int): Long = {
+    var x = px & 0xffff
+    var y = py & 0xffff
+    var d = 0L
+    var s = 1 << 15
+    while (s > 0) {
+      val rx = if ((x & s) > 0) 1 else 0
+      val ry = if ((y & s) > 0) 1 else 0
+      d += s.toLong * s * ((3 * rx) ^ ry)
+      if (ry == 0) {
+        if (rx == 1) { x = s - 1 - x; y = s - 1 - y }
+        val t = x; x = y; y = t
+      }
+      s >>= 1
+    }
+    d
+  }
+}
+
 /** Morton interleave of the low 16 bits of two non-negative ints:
   * result bit 2i = x bit i, bit 2i+1 = y bit i — a 32-bit z-value as
   * LONG. Callers reduce dimensions mod 2^16 (or bucket them) first;
@@ -28,33 +66,10 @@ case class ZOrder2(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "zorder2"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[Int]
-    val y = b.asInstanceOf[Int]
-    var z = 0L
-    var i = 0
-    while (i < 16) {
-      z |= ((x >> i) & 1).toLong << (2 * i)
-      z |= ((y >> i) & 1).toLong << (2 * i + 1)
-      i += 1
-    }
-    z
-  }
-
+  override def nullSafeEval(a: Any, b: Any): Any =
+    LayoutKernels.zorder2(a.asInstanceOf[Int], b.asInstanceOf[Int])
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val z = ctx.freshName("z")
-      val i = ctx.freshName("i")
-      s"""
-         |long $z = 0L;
-         |for (int $i = 0; $i < 16; $i++) {
-         |  $z |= (long) (($a >> $i) & 1) << (2 * $i);
-         |  $z |= (long) (($b >> $i) & 1) << (2 * $i + 1);
-         |}
-         |${ev.value} = $z;
-       """.stripMargin
-    })
-
+    defineCodeGen(ctx, ev, (a, b) => s"${LayoutKernels.Name}.zorder2($a, $b)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(l, r)
 }
@@ -74,49 +89,10 @@ case class Hilbert2(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "hilbert2"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    var x = a.asInstanceOf[Int] & 0xffff
-    var y = b.asInstanceOf[Int] & 0xffff
-    var d = 0L
-    var s = 1 << 15
-    while (s > 0) {
-      val rx = if ((x & s) > 0) 1 else 0
-      val ry = if ((y & s) > 0) 1 else 0
-      d += s.toLong * s * ((3 * rx) ^ ry)
-      if (ry == 0) {
-        if (rx == 1) { x = s - 1 - x; y = s - 1 - y }
-        val t = x; x = y; y = t
-      }
-      s >>= 1
-    }
-    d
-  }
-
+  override def nullSafeEval(a: Any, b: Any): Any =
+    LayoutKernels.hilbert2(a.asInstanceOf[Int], b.asInstanceOf[Int])
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      val d = ctx.freshName("d")
-      val s = ctx.freshName("s")
-      val rx = ctx.freshName("rx")
-      val ry = ctx.freshName("ry")
-      val t = ctx.freshName("t")
-      s"""
-         |int $x = $a & 0xffff; int $y = $b & 0xffff;
-         |long $d = 0L;
-         |for (int $s = 1 << 15; $s > 0; $s >>= 1) {
-         |  int $rx = (($x & $s) > 0) ? 1 : 0;
-         |  int $ry = (($y & $s) > 0) ? 1 : 0;
-         |  $d += (long) $s * $s * ((3 * $rx) ^ $ry);
-         |  if ($ry == 0) {
-         |    if ($rx == 1) { $x = $s - 1 - $x; $y = $s - 1 - $y; }
-         |    int $t = $x; $x = $y; $y = $t;
-         |  }
-         |}
-         |${ev.value} = $d;
-       """.stripMargin
-    })
-
+    defineCodeGen(ctx, ev, (a, b) => s"${LayoutKernels.Name}.hilbert2($a, $b)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(l, r)
 }

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.SparkShims
 import org.apache.spark.sql.types._
 
@@ -12,108 +12,74 @@ import org.apache.spark.sql.types._
  * reference: Distances.java:31-153) and PQ ADC lookup
  * (reference: FdbVectorIndex.java:1057-1079).
  *
- * These participate in whole-stage codegen (`doGenCode`), so distance
- * computations stay inside the generated loop with no boxing or UDF
- * serialization — the main perf lever for brute-force / rerank scans at
- * 100 TB scale (SURVEY.md §4 "SIMD vectorized kernels" row).
+ * Each kernel is written once, as a static method of [[VectorKernels]].
+ * `nullSafeEval` calls it, and `doGenCode` emits a call to the same method
+ * (Spark's `DateTimeUtils` idiom), so whole-stage codegen keeps the
+ * computation inside the generated loop with no UDF serialization. The
+ * segment task of `graft.index.Search` scores with the same methods.
+ *
+ * The kernels read primitive arrays: each array argument is copied out of
+ * its `ArrayData` once per row (`toFloatArray()`, a bulk copy for unsafe
+ * and columnar arrays), or once per plan when it is foldable ([[Folded]]).
+ * A per-element `UnsafeArrayData.getFloat` loop measured slower than
+ * that copy plus a `float[]` loop: 2.3x at dim 768 and 2.7x at dim 64
+ * (cosine, one warm JVM on a 4-vCPU host).
  *
  * Accumulation: double, sequential in index order — bit-deterministic and
  * identical to graft.core.Distances and to a double-lambda DuckDB oracle.
  */
-trait VectorBinaryExpression extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[SparkShims.AbstractType] =
-    SparkShims.abstractTypes(ArrayType(FloatType), ArrayType(FloatType))
-  override def dataType: DataType = DoubleType
-}
+object VectorKernels {
+  /** Java name of this object's static methods, for generated code. */
+  private[functions] val Name: String = getClass.getName.stripSuffix("$")
 
-/** Squared L2 distance between two float arrays (reference: Distances.java:48-64). */
-case class L2SquaredDistance(left: Expression, right: Expression) extends VectorBinaryExpression {
-  override def prettyName: String = "l2_squared"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+  /** Squared L2 distance over the first min(len) lanes (reference: Distances.java:48-64). */
+  def l2Squared(x: Array[Float], y: Array[Float]): Double = {
+    val n = math.min(x.length, y.length)
     var acc = 0.0
     var i = 0
     while (i < n) {
-      val d = x.getFloat(i).toDouble - y.getFloat(i).toDouble
+      val d = x(i).toDouble - y(i).toDouble
       acc += d * d
       i += 1
     }
     acc
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = (double) $a.getFloat($i) - (double) $b.getFloat($i);
-         |  $acc += $d * $d;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-/** Dot product (reference: Distances.java:103-118). */
-case class DotProduct(left: Expression, right: Expression) extends VectorBinaryExpression {
-  override def prettyName: String = "vec_dot"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+  /** Dot product over the first min(len) lanes (reference: Distances.java:103-118). */
+  def dot(x: Array[Float], y: Array[Float]): Double = {
+    val n = math.min(x.length, y.length)
     var acc = 0.0
     var i = 0
     while (i < n) {
-      acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble
+      acc += x(i).toDouble * y(i).toDouble
       i += 1
     }
     acc
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+  /** L2 norm of all lanes (reference: Distances.java:126-140). */
+  def norm(x: Array[Float]): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < x.length) {
+      val v = x(i).toDouble
+      acc += v * v
+      i += 1
+    }
+    math.sqrt(acc)
+  }
 
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-/** Cosine similarity; 0.0 if either norm is 0 (reference: Distances.java:149-153). */
-case class CosineSimilarity(left: Expression, right: Expression) extends VectorBinaryExpression {
-  override def prettyName: String = "cosine_sim"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+  /** Cosine similarity over the first min(len) lanes; 0.0 if either norm
+    * is 0 (reference: Distances.java:149-153). */
+  def cosine(x: Array[Float], y: Array[Float]): Double = {
+    val n = math.min(x.length, y.length)
     var dot = 0.0
     var na = 0.0
     var nb = 0.0
     var i = 0
     while (i < n) {
-      val xv = x.getFloat(i).toDouble
-      val yv = y.getFloat(i).toDouble
+      val xv = x(i).toDouble
+      val yv = y(i).toDouble
       dot += xv * yv
       na += xv * xv
       nb += yv * yv
@@ -123,28 +89,216 @@ case class CosineSimilarity(left: Expression, right: Expression) extends VectorB
     else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xv = (double) $a.getFloat($i);
-         |  double $yv = (double) $b.getFloat($i);
-         |  $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
-         |}
-         |${ev.value} = ($na == 0.0 || $nb == 0.0)
-         |  ? 0.0 : $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-       """.stripMargin
-    })
+  /** [[cosine]] of int8 codes `x` against float lanes `y`. */
+  def cosineI8(x: Array[Byte], y: Array[Float]): Double = {
+    val n = math.min(x.length, y.length)
+    var dot = 0.0
+    var na = 0.0
+    var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val xv = x(i).toDouble
+      val yv = y(i).toDouble
+      dot += xv * yv
+      na += xv * xv
+      nb += yv * yv
+      i += 1
+    }
+    if (na == 0.0 || nb == 0.0) 0.0
+    else dot / (math.sqrt(na) * math.sqrt(nb))
+  }
 
+  /** Σ_m lut[m*K + (code[m] & 0xFF)], K = len(lut) / len(code); 0.0 for an
+    * empty code. The LUT stays `ArrayData`: only M of its M*K entries are read. */
+  def pqAdc(lut: ArrayData, code: Array[Byte]): Double = {
+    val m = code.length
+    if (m == 0) return 0.0
+    val k = lut.numElements() / m
+    var acc = 0.0
+    var i = 0
+    while (i < m) {
+      acc += lut.getDouble(i * k + (code(i) & 0xff))
+      i += 1
+    }
+    acc
+  }
+
+  /** Index in [0, k) of the row of the flat `cents` (k = len(cents) / len(vec))
+    * nearest `vec` by squared L2; ties go to the lower index. */
+  def argminL2(vec: Array[Float], cents: Array[Float]): Int =
+    nearest(vec, 0, vec.length, cents, 0, if (vec.length == 0) 0 else cents.length / vec.length)
+
+  /** PQ code of `emb` over `m` subspaces: code[s] is [[nearest]] over the
+    * k centroids of subspace s, which start at (s*k + c)*subDim in `cents`. */
+  def pqEncode(emb: Array[Float], cents: Array[Float], m: Int): Array[Byte] = {
+    require(m > 0, s"pq_encode: m must be positive, got $m")
+    val subDim = emb.length / m
+    val k = if (subDim == 0) 0 else cents.length / (m * subDim)
+    val out = new Array[Byte](m)
+    var s = 0
+    while (s < m) {
+      out(s) = nearest(emb, s * subDim, subDim, cents, s * k * subDim, k).toByte
+      s += 1
+    }
+    out
+  }
+
+  /** argmin over c ∈ [0, k) of ||x[off, off+len) - cents[base + c*len, +len)||²,
+    * strict `<` so ties go to the lower c (Pq.encode's rule); 0 when k = 0. */
+  private def nearest(
+      x: Array[Float], off: Int, len: Int, cents: Array[Float], base: Int, k: Int): Int = {
+    var best = 0
+    var bestD = Double.PositiveInfinity
+    var c = 0
+    while (c < k) {
+      val cOff = base + c * len
+      var acc = 0.0
+      var i = 0
+      while (i < len) {
+        val d = x(off + i).toDouble - cents(cOff + i).toDouble
+        acc += d * d
+        i += 1
+      }
+      if (acc < bestD) { bestD = acc; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** `vec` (dIn lanes) times the row-major dOut×dIn `signs`, each
+    * component snapped to 6 decimals HALF_UP. */
+  def signProject(vec: Array[Float], signs: Array[Double]): ArrayData = {
+    val dIn = vec.length
+    val dOut = if (dIn == 0) 0 else signs.length / dIn
+    val out = new Array[Double](dOut)
+    var i = 0
+    while (i < dOut) {
+      val off = i * dIn
+      var acc = 0.0
+      var j = 0
+      while (j < dIn) {
+        acc += signs(off + j) * vec(j).toDouble
+        j += 1
+      }
+      out(i) = java.math.BigDecimal.valueOf(acc)
+        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** Sign bits (> 0) packed MSB-first, 32 per non-negative LONG word. */
+  def binarizeSign(x: Array[Float]): ArrayData = {
+    val n = x.length
+    val words = (n + 31) / 32
+    val out = new Array[Long](words)
+    var w = 0
+    while (w < words) {
+      var acc = 0L
+      var j = w * 32
+      val end = math.min(j + 32, n)
+      while (j < end) {
+        acc = acc * 2 + (if (x(j) > 0f) 1L else 0L)
+        j += 1
+      }
+      out(w) = acc
+      w += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** Σ popcount(x_i XOR y_i) over the first min(len) words. */
+  def hamming(x: Array[Long], y: Array[Long]): Long = {
+    val n = math.min(x.length, y.length)
+    var acc = 0L
+    var i = 0
+    while (i < n) {
+      acc += java.lang.Long.bitCount(x(i) ^ y(i))
+      i += 1
+    }
+    acc
+  }
+}
+
+/**
+ * A foldable array argument — trained centroids, a codebook, a sign
+ * matrix, a query literal — flattened to a primitive array ONCE:
+ * ArrayData.getFloat on a 200k-element GenericArrayData literal boxes per
+ * access, which at dim 768 / m 16 / k 256 is 2e5 boxed reads PER ROW in a
+ * build scan's hot loop. Generated code shares the flat array through a
+ * codegen reference; a non-foldable argument is copied once per row.
+ */
+private[functions] object Folded {
+  def floats(e: Expression): Array[Float] =
+    if (!e.foldable) null
+    else e.eval(null) match { case ad: ArrayData => ad.toFloatArray(); case _ => null }
+
+  def doubles(e: Expression): Array[Double] =
+    if (!e.foldable) null
+    else e.eval(null) match { case ad: ArrayData => ad.toDoubleArray(); case _ => null }
+
+  /** The kernel argument: the `folded` array, else the row's `value` copied. */
+  def arg(folded: Array[Float], value: Any): Array[Float] =
+    if (folded != null) folded else value.asInstanceOf[ArrayData].toFloatArray()
+
+  def arg(folded: Array[Double], value: Any): Array[Double] =
+    if (folded != null) folded else value.asInstanceOf[ArrayData].toDoubleArray()
+
+  /** The same argument in generated code; `value` is the row's Java term. */
+  def argCode(ctx: CodegenContext, folded: Array[Float], value: String): String =
+    if (folded != null) ctx.addReferenceObj("folded", folded, "float[]")
+    else s"$value.toFloatArray()"
+
+  def argCode(ctx: CodegenContext, folded: Array[Double], value: String): String =
+    if (folded != null) ctx.addReferenceObj("folded", folded, "double[]")
+    else s"$value.toDoubleArray()"
+}
+
+/** A kernel of two ARRAY<FLOAT> vectors with a DOUBLE result: `nullSafeEval`
+  * calls [[kernel]] and the generated code calls the [[VectorKernels]]
+  * method named [[method]], both on the [[Folded]] arguments. */
+trait VectorBinaryExpression extends BinaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[SparkShims.AbstractType] =
+    SparkShims.abstractTypes(ArrayType(FloatType), ArrayType(FloatType))
+  override def dataType: DataType = DoubleType
+
+  protected def method: String
+  protected def kernel(x: Array[Float], y: Array[Float]): Double
+
+  @transient private lazy val foldedLeft: Array[Float] = Folded.floats(left)
+  @transient private lazy val foldedRight: Array[Float] = Folded.floats(right)
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    kernel(Folded.arg(foldedLeft, a), Folded.arg(foldedRight, b))
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"${VectorKernels.Name}.$method(" +
+      s"${Folded.argCode(ctx, foldedLeft, a)}, ${Folded.argCode(ctx, foldedRight, b)})")
+}
+
+/** Squared L2 distance between two float arrays (reference: Distances.java:48-64). */
+case class L2SquaredDistance(left: Expression, right: Expression) extends VectorBinaryExpression {
+  override def prettyName: String = "l2_squared"
+  override protected def method: String = "l2Squared"
+  override protected def kernel(x: Array[Float], y: Array[Float]): Double =
+    VectorKernels.l2Squared(x, y)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
+}
+
+/** Dot product (reference: Distances.java:103-118). */
+case class DotProduct(left: Expression, right: Expression) extends VectorBinaryExpression {
+  override def prettyName: String = "vec_dot"
+  override protected def method: String = "dot"
+  override protected def kernel(x: Array[Float], y: Array[Float]): Double =
+    VectorKernels.dot(x, y)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
+}
+
+/** Cosine similarity; 0.0 if either norm is 0 (reference: Distances.java:149-153). */
+case class CosineSimilarity(left: Expression, right: Expression) extends VectorBinaryExpression {
+  override def prettyName: String = "cosine_sim"
+  override protected def method: String = "cosine"
+  override protected def kernel(x: Array[Float], y: Array[Float]): Double =
+    VectorKernels.cosine(x, y)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
@@ -154,37 +308,10 @@ case class VectorNorm(child: Expression) extends UnaryExpression with ExpectsInp
     SparkShims.abstractTypes(ArrayType(FloatType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vec_norm"
-
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    var acc = 0.0
-    var i = 0
-    val n = x.numElements()
-    while (i < n) {
-      val v = x.getFloat(i).toDouble
-      acc += v * v
-      i += 1
-    }
-    math.sqrt(acc)
-  }
-
+  override def nullSafeEval(a: Any): Any =
+    VectorKernels.norm(a.asInstanceOf[ArrayData].toFloatArray())
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val v = ctx.freshName("v")
-      s"""
-         |int $n = $a.numElements();
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $v = (double) $a.getFloat($i);
-         |  $acc += $v * $v;
-         |}
-         |${ev.value} = java.lang.Math.sqrt($acc);
-       """.stripMargin
-    })
-
+    defineCodeGen(ctx, ev, a => s"${VectorKernels.Name}.norm($a.toFloatArray())")
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
@@ -203,42 +330,12 @@ case class PqAdcDistance(left: Expression, right: Expression)
     SparkShims.abstractTypes(ArrayType(DoubleType), BinaryType)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "pq_adc_distance"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val lut = a.asInstanceOf[ArrayData]
-    val code = b.asInstanceOf[Array[Byte]]
-    val m = code.length
-    if (m == 0) return 0.0
-    val k = lut.numElements() / m
-    var acc = 0.0
-    var i = 0
-    while (i < m) {
-      acc += lut.getDouble(i * k + (code(i) & 0xff))
-      i += 1
-    }
-    acc
-  }
-
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.pqAdc(a.asInstanceOf[ArrayData], b.asInstanceOf[Array[Byte]])
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val m = ctx.freshName("m")
-      val k = ctx.freshName("k")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $m = $b.length;
-         |double $acc = 0.0;
-         |if ($m > 0) {
-         |  int $k = $a.numElements() / $m;
-         |  for (int $i = 0; $i < $m; $i++) {
-         |    $acc += $a.getDouble($i * $k + ($b[$i] & 0xff));
-         |  }
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
+    defineCodeGen(ctx, ev, (a, b) => s"${VectorKernels.Name}.pqAdc($a, $b)")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(l, r)
 }
 
 /**
@@ -250,8 +347,8 @@ case class PqAdcDistance(left: Expression, right: Expression)
  * first:  embedding ARRAY<FLOAT> of length m*subDim.
  * second: flat codebook ARRAY<FLOAT> of length m*k*subDim (centroid (s,c)
  *         starts at (s*k + c)*subDim — graft.index.Pq.Codebook layout),
- *         a broadcast-sized literal.
- * third:  m (number of subspaces; foldable INT).
+ *         a broadcast-sized literal ([[Folded]]).
+ * third:  m (number of subspaces; INT, must be positive).
  * result: BINARY code of length m, code[s] = argmin_c ||sub_s - cent||².
  * Ties break toward the lower centroid id (strict `<`), matching
  * Pq.encode; k must be ≤ 256 so a centroid id fits one byte.
@@ -263,98 +360,14 @@ case class PqEncode(first: Expression, second: Expression, third: Expression)
   override def dataType: DataType = BinaryType
   override def prettyName: String = "pq_encode"
 
-  /** The codebook is almost always a literal (typedlit of the trained
-    * centroids). Flatten it to a primitive float[] ONCE: ArrayData
-    * .getFloat on a 200k-element GenericArrayData literal boxes per
-    * access — at dim 768 / m 16 / k 256 that is 2e5 boxed reads PER ROW
-    * in the build scan's hot loop. */
-  @transient private lazy val foldedCents: Array[Float] =
-    if (second.foldable) {
-      val ad = second.eval(null)
-      if (ad == null) null else ad.asInstanceOf[ArrayData].toFloatArray()
-    } else null
+  @transient private lazy val foldedCents: Array[Float] = Folded.floats(second)
 
-  override def nullSafeEval(a: Any, b: Any, c: Any): Any = {
-    val emb = a.asInstanceOf[ArrayData]
-    val cents =
-      if (foldedCents != null) foldedCents
-      else b.asInstanceOf[ArrayData].toFloatArray()
-    val m = c.asInstanceOf[Int]
-    val dim = emb.numElements()
-    val subDim = dim / m
-    val k = if (m * subDim == 0) 0 else cents.length / (m * subDim)
-    val out = new Array[Byte](m)
-    var s = 0
-    while (s < m) {
-      val off = s * subDim
-      var best = 0
-      var bestD = Double.PositiveInfinity
-      var cc = 0
-      while (cc < k) {
-        val cOff = (s * k + cc) * subDim
-        var acc = 0.0
-        var i = 0
-        while (i < subDim) {
-          val d = emb.getFloat(off + i).toDouble - cents(cOff + i).toDouble
-          acc += d * d
-          i += 1
-        }
-        if (acc < bestD) { bestD = acc; best = cc }
-        cc += 1
-      }
-      out(s) = best.toByte
-      s += 1
-    }
-    out
-  }
-
+  override def nullSafeEval(a: Any, b: Any, c: Any): Any =
+    VectorKernels.pqEncode(a.asInstanceOf[ArrayData].toFloatArray(),
+      Folded.arg(foldedCents, b), c.asInstanceOf[Int])
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c) => {
-      val subDim = ctx.freshName("subDim")
-      val k = ctx.freshName("k")
-      val cents = ctx.freshName("cents")
-      val out = ctx.freshName("out")
-      val s = ctx.freshName("s")
-      val cc = ctx.freshName("cc")
-      val i = ctx.freshName("i")
-      val off = ctx.freshName("off")
-      val cOff = ctx.freshName("cOff")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      // foldable codebook → one shared primitive array; otherwise one
-      // unboxing copy per row (still beats per-access boxing in the
-      // O(m*k*subDim) loop)
-      val centsInit =
-        if (second.foldable && foldedCents != null)
-          s"float[] $cents = ${ctx.addReferenceObj("pqCents", foldedCents, "float[]")};"
-        else
-          s"float[] $cents = $b.toFloatArray();"
-      s"""
-         |$centsInit
-         |int $subDim = $c == 0 ? 0 : $a.numElements() / $c;
-         |int $k = ($c * $subDim) == 0 ? 0 : $cents.length / ($c * $subDim);
-         |byte[] $out = new byte[$c];
-         |for (int $s = 0; $s < $c; $s++) {
-         |  int $off = $s * $subDim;
-         |  int $best = 0;
-         |  double $bestD = Double.POSITIVE_INFINITY;
-         |  for (int $cc = 0; $cc < $k; $cc++) {
-         |    int $cOff = ($s * $k + $cc) * $subDim;
-         |    double $acc = 0.0;
-         |    for (int $i = 0; $i < $subDim; $i++) {
-         |      double $d = (double) $a.getFloat($off + $i) - (double) $cents[$cOff + $i];
-         |      $acc += $d * $d;
-         |    }
-         |    if ($acc < $bestD) { $bestD = $acc; $best = $cc; }
-         |  }
-         |  $out[$s] = (byte) $best;
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-
+    defineCodeGen(ctx, ev, (a, b, c) => s"${VectorKernels.Name}.pqEncode(" +
+      s"$a.toFloatArray(), ${Folded.argCode(ctx, foldedCents, b)}, $c)")
   override protected def withNewChildrenInternal(
       f: Expression, sE: Expression, t: Expression): Expression = copy(f, sE, t)
 }
@@ -372,8 +385,7 @@ case class PqEncode(first: Expression, second: Expression, third: Expression)
  * past HotSpot's JIT size limits and runs interpreted (~100× slower;
  * observed 29 min for a 50k-row build). One compact loop stays
  * JIT-friendly at any (nlist, dim). A foldable centroid argument is
- * flattened to a primitive float[] once and shared via a codegen
- * reference — no per-row boxing on the literal.
+ * flattened once ([[Folded]]).
  */
 case class ArgminL2(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
@@ -382,73 +394,13 @@ case class ArgminL2(left: Expression, right: Expression)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "argmin_l2"
 
-  @transient private lazy val foldedCents: Array[Float] =
-    if (right.foldable) {
-      val ad = right.eval(null)
-      if (ad == null) null else ad.asInstanceOf[ArrayData].toFloatArray()
-    } else null
+  @transient private lazy val foldedCents: Array[Float] = Folded.floats(right)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val vec = a.asInstanceOf[ArrayData]
-    val cents =
-      if (foldedCents != null) foldedCents
-      else b.asInstanceOf[ArrayData].toFloatArray()
-    val dim = vec.numElements()
-    val k = if (dim == 0) 0 else cents.length / dim
-    var best = 0
-    var bestD = Double.PositiveInfinity
-    var c = 0
-    while (c < k) {
-      val off = c * dim
-      var acc = 0.0
-      var i = 0
-      while (i < dim) {
-        val d = vec.getFloat(i).toDouble - cents(off + i).toDouble
-        acc += d * d
-        i += 1
-      }
-      if (acc < bestD) { bestD = acc; best = c }
-      c += 1
-    }
-    best
-  }
-
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.argminL2(a.asInstanceOf[ArrayData].toFloatArray(), Folded.arg(foldedCents, b))
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val cents = ctx.freshName("cents")
-      val dim = ctx.freshName("dim")
-      val k = ctx.freshName("k")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val off = ctx.freshName("off")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      val centsInit =
-        if (right.foldable && foldedCents != null)
-          s"float[] $cents = ${ctx.addReferenceObj("ivfCents", foldedCents, "float[]")};"
-        else
-          s"float[] $cents = $b.toFloatArray();"
-      s"""
-         |$centsInit
-         |int $dim = $a.numElements();
-         |int $k = $dim == 0 ? 0 : $cents.length / $dim;
-         |int $best = 0;
-         |double $bestD = Double.POSITIVE_INFINITY;
-         |for (int $c = 0; $c < $k; $c++) {
-         |  int $off = $c * $dim;
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $dim; $i++) {
-         |    double $d = (double) $a.getFloat($i) - (double) $cents[$off + $i];
-         |    $acc += $d * $d;
-         |  }
-         |  if ($acc < $bestD) { $bestD = $acc; $best = $c; }
-         |}
-         |${ev.value} = $best;
-       """.stripMargin
-    })
-
+    defineCodeGen(ctx, ev, (a, b) => s"${VectorKernels.Name}.argminL2(" +
+      s"$a.toFloatArray(), ${Folded.argCode(ctx, foldedCents, b)})")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(l, r)
 }
@@ -468,49 +420,12 @@ case class CosineSimilarityI8(left: Expression, right: Expression)
     SparkShims.abstractTypes(ArrayType(ByteType), ArrayType(FloatType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine_sim_i8"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xv = x.getByte(i).toDouble
-      val yv = y.getFloat(i).toDouble
-      dot += xv * yv
-      na += xv * xv
-      nb += yv * yv
-      i += 1
-    }
-    if (na == 0.0 || nb == 0.0) 0.0
-    else dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.cosineI8(a.asInstanceOf[ArrayData].toByteArray(),
+      b.asInstanceOf[ArrayData].toFloatArray())
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xv = (double) $a.getByte($i);
-         |  double $yv = (double) $b.getFloat($i);
-         |  $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
-         |}
-         |${ev.value} = ($na == 0.0 || $nb == 0.0)
-         |  ? 0.0 : $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-       """.stripMargin
-    })
-
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"${VectorKernels.Name}.cosineI8($a.toByteArray(), $b.toFloatArray())")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(l, r)
 }
@@ -532,72 +447,14 @@ case class SignProject(left: Expression, right: Expression)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "sign_project"
 
-  @transient private lazy val foldedSigns: Array[Double] =
-    if (right.foldable) {
-      val ad = right.eval(null)
-      if (ad == null) null else ad.asInstanceOf[ArrayData].toDoubleArray()
-    } else null
+  @transient private lazy val foldedSigns: Array[Double] = Folded.doubles(right)
 
-  private def project(vec: ArrayData, signs: Array[Double]): Any = {
-    val dIn = vec.numElements()
-    val dOut = if (dIn == 0) 0 else signs.length / dIn
-    val out = new Array[Double](dOut)
-    var i = 0
-    while (i < dOut) {
-      val off = i * dIn
-      var acc = 0.0
-      var j = 0
-      while (j < dIn) {
-        acc += signs(off + j) * vec.getFloat(j).toDouble
-        j += 1
-      }
-      out(i) = java.math.BigDecimal.valueOf(acc)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val signs =
-      if (foldedSigns != null) foldedSigns
-      else b.asInstanceOf[ArrayData].toDoubleArray()
-    project(a.asInstanceOf[ArrayData], signs)
-  }
-
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.signProject(a.asInstanceOf[ArrayData].toFloatArray(),
+      Folded.arg(foldedSigns, b))
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val signs = ctx.freshName("signs")
-      val dIn = ctx.freshName("dIn")
-      val dOut = ctx.freshName("dOut")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val off = ctx.freshName("off")
-      val acc = ctx.freshName("acc")
-      val signsInit =
-        if (right.foldable && foldedSigns != null)
-          s"double[] $signs = ${ctx.addReferenceObj("projSigns", foldedSigns, "double[]")};"
-        else
-          s"double[] $signs = $b.toDoubleArray();"
-      s"""
-         |$signsInit
-         |int $dIn = $a.numElements();
-         |int $dOut = $dIn == 0 ? 0 : $signs.length / $dIn;
-         |double[] $out = new double[$dOut];
-         |for (int $i = 0; $i < $dOut; $i++) {
-         |  int $off = $i * $dIn;
-         |  double $acc = 0.0;
-         |  for (int $j = 0; $j < $dIn; $j++) {
-         |    $acc += $signs[$off + $j] * (double) $a.getFloat($j);
-         |  }
-         |  $out[$i] = java.math.BigDecimal.valueOf($acc)
-         |    .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue();
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
+    defineCodeGen(ctx, ev, (a, b) => s"${VectorKernels.Name}.signProject(" +
+      s"$a.toFloatArray(), ${Folded.argCode(ctx, foldedSigns, b)})")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(l, r)
 }
@@ -684,51 +541,10 @@ case class BinarizeSign(child: Expression)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "binarize_sign"
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    val words = (n + 31) / 32
-    val out = new Array[Long](words)
-    var w = 0
-    while (w < words) {
-      var acc = 0L
-      var j = w * 32
-      val end = math.min(j + 32, n)
-      while (j < end) {
-        acc = acc * 2 + (if (x.getFloat(j) > 0f) 1L else 0L)
-        j += 1
-      }
-      out(w) = acc
-      w += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
+  override def nullSafeEval(a: Any): Any =
+    VectorKernels.binarizeSign(a.asInstanceOf[ArrayData].toFloatArray())
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val words = ctx.freshName("words")
-      val out = ctx.freshName("out")
-      val w = ctx.freshName("w")
-      val j = ctx.freshName("j")
-      val end = ctx.freshName("end")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = $a.numElements();
-         |int $words = ($n + 31) / 32;
-         |long[] $out = new long[$words];
-         |for (int $w = 0; $w < $words; $w++) {
-         |  long $acc = 0L;
-         |  int $end = java.lang.Math.min($w * 32 + 32, $n);
-         |  for (int $j = $w * 32; $j < $end; $j++) {
-         |    $acc = $acc * 2L + ($a.getFloat($j) > 0f ? 1L : 0L);
-         |  }
-         |  $out[$w] = $acc;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
+    defineCodeGen(ctx, ev, a => s"${VectorKernels.Name}.binarizeSign($a.toFloatArray())")
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
@@ -755,34 +571,12 @@ case class HammingDistance(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "hamming_dist"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      acc += java.lang.Long.bitCount(x.getLong(i) ^ y.getLong(i))
-      i += 1
-    }
-    acc
-  }
-
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.hamming(a.asInstanceOf[ArrayData].toLongArray(),
+      b.asInstanceOf[ArrayData].toLongArray())
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += java.lang.Long.bitCount($a.getLong($i) ^ $b.getLong($i));
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"${VectorKernels.Name}.hamming($a.toLongArray(), $b.toLongArray())")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(l, r)
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import graft.core._
-import graft.functions.{TopKAggregator, vector}
+import graft.functions.{TopKAggregator, VectorKernels, vector}
 
 /**
  * Distributed KNN query (SURVEY.md §3.1): the Spark re-expression of the
@@ -46,7 +46,7 @@ import graft.functions.{TopKAggregator, vector}
  * WRITING segments are invisible (F2); deleted rows never reach the rerank
  * (F1); scores follow the reference conventions exactly (L2: -distance;
  * COSINE: similarity, distance = 1 - similarity), bit-identical to the
- * codegen'd expressions of [[scored]].
+ * codegen'd expressions of [[scored]]: both call the same kernels.
  */
 object Search {
 
@@ -390,8 +390,10 @@ object Search {
     * (J8) in a heap ordered exactly as [[TopKAggregator]] (score desc, gid
     * asc). The raw vectors are never held: memory is the state, the
     * candidate lists and the heaps. A candidate listed twice for one query
-    * (repeated random pivots) is scored twice, as a join would. Only a
-    * sealed segment feeds the rerank counters.
+    * (repeated random pivots) is scored twice, as a join would. Scores
+    * come from the [[VectorKernels]] methods that the codegen'd
+    * expressions of [[scored]] call. Only a sealed segment feeds the
+    * rerank counters.
     * Emits (queryId, gid, score, payload). */
   private def searchSegment(
       seg: LoadedSegment,
@@ -422,7 +424,7 @@ object Search {
 
     val l2 = metric eq Metric.L2
     val qNorms =
-      if (!l2 && params.normalizeOnRead) queries.map(t => ExactScore.norm(t._2)) else null
+      if (!l2 && params.normalizeOnRead) queries.map(t => VectorKernels.norm(t._2)) else null
     val heaps = Array.fill(queries.length)(TopKAggregator.emptyHeap)
     val t0 = System.nanoTime()
     var scoredN = 0
@@ -437,17 +439,17 @@ object Search {
         val gid = r.getLong(1)
         val emb = r.getArray(2).toFloatArray()
         val payload = if (r.isNullAt(4)) null else r.getBinary(4)
-        val eNorm = if (qNorms != null) ExactScore.norm(emb) else 0.0
+        val eNorm = if (qNorms != null) VectorKernels.norm(emb) else 0.0
         var j = 0
         while (j < qs.length) {
           val q = qs(j)
           val qv = queries(q)._2
           val score =
-            if (l2) -math.sqrt(ExactScore.l2Squared(emb, qv))
+            if (l2) -math.sqrt(VectorKernels.l2Squared(emb, qv))
             else if (qNorms != null) {
               val denom = eNorm * qNorms(q)
-              if (denom == 0.0) 0.0 else ExactScore.dot(emb, qv) / denom
-            } else ExactScore.cosine(emb, qv)
+              if (denom == 0.0) 0.0 else VectorKernels.dot(emb, qv) / denom
+            } else VectorKernels.cosine(emb, qv)
           TopKAggregator.offer(heaps(q), (gid, score, payload), perSegLimit)
           scoredN += 1
           j += 1
@@ -463,8 +465,8 @@ object Search {
   /** Attach score/distance columns per the reference's conventions
     * (FdbVectorIndex.java:686-693) via codegen'd expressions: the join
     * formulation's scoring. No query path plans it; it is the reference
-    * the segment task's [[ExactScore]] kernels are held to, bit for bit
-    * (SealedRerankSpec).
+    * the segment task is checked against (SealedRerankSpec), and both
+    * score with the same [[VectorKernels]] methods.
     *
     * `normalizeOnRead` (COSINE only, reference FdbVectorIndex.java:823-828,
     * 1006-1015): similarity is computed as dot(q,emb)/(‖q‖·‖emb‖) with the
@@ -489,67 +491,6 @@ object Search {
         } else vector.cosine_sim(col("embedding"), col("qv"))
       df.withColumn("score", sim).withColumn("distance", lit(1.0) - col("score"))
     }
-
-  /** Scalar exact-score kernels of the segment task: the same loops as
-    * the `VectorExpressions` kernels [[scored]] plans (`L2SquaredDistance`,
-    * `DotProduct`, `CosineSimilarity`, `VectorNorm`) — double accumulation
-    * in index order over the first `min(len)` lanes (all lanes for the
-    * norm), `x` the row's embedding and `y` the query — so both paths score
-    * bit-identically. Deliberately not `Distances`, whose opt-in SIMD
-    * dispatch accumulates differently. */
-  private object ExactScore {
-    def l2Squared(x: Array[Float], y: Array[Float]): Double = {
-      val n = math.min(x.length, y.length)
-      var acc = 0.0
-      var i = 0
-      while (i < n) {
-        val d = x(i).toDouble - y(i).toDouble
-        acc += d * d
-        i += 1
-      }
-      acc
-    }
-
-    def dot(x: Array[Float], y: Array[Float]): Double = {
-      val n = math.min(x.length, y.length)
-      var acc = 0.0
-      var i = 0
-      while (i < n) {
-        acc += x(i).toDouble * y(i).toDouble
-        i += 1
-      }
-      acc
-    }
-
-    def norm(x: Array[Float]): Double = {
-      var acc = 0.0
-      var i = 0
-      while (i < x.length) {
-        val v = x(i).toDouble
-        acc += v * v
-        i += 1
-      }
-      math.sqrt(acc)
-    }
-
-    def cosine(x: Array[Float], y: Array[Float]): Double = {
-      val n = math.min(x.length, y.length)
-      var dot = 0.0
-      var na = 0.0
-      var nb = 0.0
-      var i = 0
-      while (i < n) {
-        val xv = x(i).toDouble
-        val yv = y(i).toDouble
-        dot += xv * yv
-        na += xv * xv
-        nb += yv * yv
-        i += 1
-      }
-      if (na == 0.0 || nb == 0.0) 0.0
-      else dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-  }
 
   private def emptyResults(spark: SparkSession): DataFrame = {
     import spark.implicits._
